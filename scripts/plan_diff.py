@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
-"""Diff two PLAN_FINGERPRINTS.json files (see graft.PlanFingerprint).
+"""Diff two PLAN_FINGERPRINTS.json files (written by `graft.Dev fingerprint`).
 
 Usage:
+  sbt "runMain graft.Dev fingerprint <sf0.001 dir>"   # rewrites PLAN_FINGERPRINTS.json
   python3 scripts/plan_diff.py OLD.json NEW.json
   git show HEAD~1:PLAN_FINGERPRINTS.json > /tmp/old.json && \
       python3 scripts/plan_diff.py /tmp/old.json PLAN_FINGERPRINTS.json

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark: one JSON line with per-query and total seconds
   * over SPARK_GRAFT_SF_DIR (default sf0.1).
@@ -14,34 +14,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same join-size posture as Verify: dim tables broadcast up to 64 MB
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-    queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-    }
-
-    // Two timed passes, min per query: single-pass numbers showed ±45%
-    // run-to-run swings from transient host stalls (one 0.4s query
-    // spiking to 11s); min-of-2 after warm-up measures steady-state
-    // throughput, which is what the baseline comparison is about.
-    def timedPass(): Seq[(String, Double)] = queries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val (p1, p2) = (timedPass(), timedPass())
-    val results = p1.zip(p2).map { case ((name, a), (_, b)) => name -> math.min(a, b) }
+    val results = timeQueries(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1))
     // Host-speed calibration: the same jar + protocol measured 57.4 s
     // and 86.8 s TOTAL on two boots of the same box (median per-query
     // ratio 1.51, uniform — zero plan changes between the runs), so a
@@ -117,5 +93,32 @@ object Bench {
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] self-artifact write failed: $e") }
     spark.stop()
+  }
+
+  /** The bench protocol over `queries`, in order: one untimed warm-up
+    * pass, then two timed passes, per-query minimum. A query that throws
+    * is reported on stderr and keeps its elapsed time.
+    */
+  def timeQueries(
+      spark: SparkSession,
+      sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[(String, Double)] = {
+    def run(name: String, fn: (SparkSession, String) => DataFrame): Unit =
+      try fn(spark, sfDir).count()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${Verify.rootCause(e)}") }
+    queries.foreach { case (name, fn) => run(name, fn) }
+
+    // Two timed passes, min per query: single-pass numbers showed ±45%
+    // run-to-run swings from transient host stalls (one 0.4s query
+    // spiking to 11s); min-of-2 after warm-up measures steady-state
+    // throughput, which is what the baseline comparison is about.
+    def timedPass(): Seq[(String, Double)] = queries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      run(name, fn)
+      name -> (System.nanoTime() - t0) / 1e9
+    }
+    val (p1, p2) = (timedPass(), timedPass())
+    p1.zip(p2).map { case ((name, a), (_, b)) => name -> math.min(a, b) }
   }
 }

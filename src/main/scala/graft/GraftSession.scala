@@ -19,20 +19,27 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   */
 object GraftSession {
 
-  /** Builder with the engine's extensions (native expressions + the as-of
-    * join strategy) and the scale defaults every engine main uses: UTC,
-    * shuffle parallelism = cores, 64 MB broadcast ceiling (testdata dims
-    * at sf0.1 ≈ 15 MB must broadcast; a 64 MB dim broadcast is still the
-    * right plan on a cluster).
+  /** Local core count: `SPARK_GRAFT_CPUS` when set, else every processor. */
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Builder with the engine's extensions (native expressions, the as-of
+    * join strategy, the approx-distinct rewrite) and the session posture
+    * every engine main runs under: UTC, AQE on, shuffle parallelism =
+    * cores, 64 MB broadcast ceiling (testdata dims at sf0.1 ≈ 15 MB must
+    * broadcast; a 64 MB dim broadcast is still the right plan on a
+    * cluster), UI off. This is the only place a session is built.
     */
   def builder(
-      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
+      master: String = s"local[$cpus]",
+      shufflePartitions: Int = cpus): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
+      .config("spark.ui.enabled", "false")
       .withExtensions(new graft.plans.GraftExtensions)
 
   /** Install the engine on a LIVE session (the builder path can't change

@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
-
-import org.apache.spark.sql.SparkSession
 
 /** Per-query physical-plan fingerprints: a stable hash + a compact
   * operator skeleton for every `SparkEntry.queries` entry, written to
@@ -20,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * ids, plan ids, file paths, statistics — are normalized out so the
   * fingerprint is stable across JVMs and checkouts.
   *
-  * Run: sbt "runMain graft.PlanFingerprint"   (same session shape as
-  * Verify: local[4], shuffle=4, UTC, 64 MB broadcast threshold).
+  * Run: sbt "runMain graft.Dev fingerprint <sfDir>" (the shared session
+  * posture pinned to local[4], so the hashes do not depend on the host).
   */
 object PlanFingerprint {
 
@@ -60,37 +57,4 @@ object PlanFingerprint {
   def md5(s: String): String =
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-
-  def main(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLAN_FINGERPRINTS.json")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val entries = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val planStr =
-        try fn(spark, sf).queryExecution.executedPlan.toString
-        catch { case e: Exception => s"PLAN_ERROR ${e.getClass.getName}" }
-      val norm = normalize(planStr)
-      (name, md5(norm), skeleton(norm))
-    }
-
-    val json = new StringBuilder("{\n")
-    entries.zipWithIndex.foreach { case ((name, hash, skel), i) =>
-      json.append(s"""  "$name": {\n    "hash": "$hash",\n    "skeleton": [\n""")
-      json.append(skel.map(l => s"""      "${l.replace("\\", "\\\\")}"""").mkString(",\n"))
-      json.append("\n    ]\n  }")
-      json.append(if (i < entries.length - 1) ",\n" else "\n")
-    }
-    json.append("}\n")
-    Files.write(Paths.get(out), json.toString.getBytes("UTF-8"))
-    println(s"[planfp] wrote $out (${entries.length} queries)")
-    spark.stop()
-  }
 }

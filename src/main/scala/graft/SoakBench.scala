@@ -101,12 +101,7 @@ object SoakBench {
     // 4g driver OOMs in the write, which is not the claim under test),
     // then run the soak itself with the constrained heap.
     val prepOnly = args.lift(3).contains("prep")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder()
       // the memory-constrained profile scales its BROADCAST budget with
       // the heap, as a real cluster config must: the round-16 ×256 soak
       // under the bench default (64 MiB) failed LOUDLY when AQE's
@@ -132,7 +127,6 @@ object SoakBench {
       // budget above. SOAK_READAHEAD=true restores the default.
       .config("spark.unsafe.sorter.spill.read.ahead.enabled",
         sys.env.getOrElse("SOAK_READAHEAD", "false"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SOAK_LOG", "WARN"))
     val listener = new SpillListener

@@ -1,23 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** The innermost cause of `e` — the Spark failure a query wrapper hides. */
+  def rootCause(e: Throwable): Throwable =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).reduceLeft((_, c) => c)
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names to run (debug aid)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata dims (orders/customer at sf0.1 ≈ 15 MB) should broadcast;
-      // at cluster scale a 64 MB dim broadcast is still the right plan
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -26,8 +21,7 @@ object Verify {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
-          val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-            .reduceLeft((_, c) => c)
+          val root = rootCause(e)
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           System.err.println(s"[verify] $name root cause: $root")
           root.getStackTrace.take(8).foreach(f => System.err.println(s"[verify]    at $f"))

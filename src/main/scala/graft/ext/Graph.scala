@@ -407,12 +407,6 @@ object Graph {
   def triangleStats(edges: DataFrame): DataFrame =
     triangleStatsFrom(orient(edges), degrees(edges))
 
-  /** Degree histogram `(deg, n_nodes)` — two narrow aggregates, both
-    * map-side combinable; the standard first look at any new graph.
-    */
-  def degreeDistribution(edges: DataFrame): DataFrame =
-    degrees(edges).groupBy("deg").agg(count(lit(1)).as("n_nodes"))
-
   /** Common-neighbor pair counts `(x, y, cn)` over an undirected
     * adjacency `und` (center `n`, neighbor `v`) with HUB CAPPING — the
     * link-prediction wedge enumeration made power-law-safe. Unlike the

@@ -158,38 +158,6 @@ object VersionedTable {
     catch { case e: Throwable => f.delete(tmp, false); throw e }
   }
 
-  /** APPEND commit under optimistic concurrency: the data dir is written
-    * ONCE, then the manifest publish retries through the CAS in
-    * [[publish]] — on losing a race, re-resolve the (new) latest
-    * version, splice this commit's dir onto ITS live set, and try the
-    * next version number. Concurrent appenders all land, each exactly
-    * once, with no coordination service — the only serialization point
-    * is the no-overwrite manifest rename. Overwrite commits don't
-    * compose with blind retry (last-writer-wins needs an intent check),
-    * so this surface is append-only by design.
-    */
-  def commitConcurrent(spark: SparkSession, tableDir: String, df: DataFrame,
-      maxAttempts: Int = 20): Int = {
-    val f = fs(spark, tableDir)
-    val dataDir =
-      s"$tableDir/data/cc-${java.util.UUID.randomUUID()}"
-    df.write.mode("error").parquet(dataDir)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val prev = latestVersion(spark, tableDir)
-      val next = prev + 1
-      val live =
-        if (prev == 0) Seq(dataDir) else liveDirs(spark, tableDir, prev) :+ dataDir
-      try { publish(f, tableDir, next, live); return next }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException
-          if attempt < maxAttempts => // lost the CAS; re-resolve and retry
-      }
-    }
-    -1 // unreachable
-  }
-
   /** Minor compaction as a COMMIT: merge the `maxDirs` smallest live
     * data dirs (the fragments a per-batch streaming ingest accumulates)
     * into one range-sorted dir and publish the swap as the next version.

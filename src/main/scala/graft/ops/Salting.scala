@@ -32,13 +32,9 @@ object Salting {
       .agg(sum(col("_psum")).as("sum_value"), sum(col("_pcnt")).as("n_rows"))
   }
 
-  /** Salted key column for skewed JOINS: replicate the small side per
-    * salt, salt the big side, join on (key, salt). Exposed as the column
-    * pieces so callers keep their own join shape.
+  /** Salt replication for skewed JOINS: explode the small side into one
+    * row per salt `0 until salts`, then join on (key, salt).
     */
-  def saltColumn(salts: Int): Column =
-    pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts))
-
   def explodeSalts(salts: Int): Column =
     explode(sequence(lit(0), lit(salts - 1)))
 }

@@ -9,11 +9,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * them (`graft_dot(a, b)`), alongside the Column API in
   * [[VectorExpressions]].
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. Extensions are
-  * limited to what Spark genuinely lacks (SURVEY.md §4.2): one native
-  * expression and one whole-operator strategy (broadcast as-of join,
-  * [[AsOfJoinStrategy]]); the built-in planner covers everything else.
+  * Usage: `graft.GraftSession.builder()` installs it; a session built
+  * elsewhere sets `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Extensions are limited to what Spark genuinely lacks (SURVEY.md §4.2):
+  * one native expression and one whole-operator strategy (broadcast as-of
+  * join, [[AsOfJoinStrategy]]); the built-in planner covers everything else.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

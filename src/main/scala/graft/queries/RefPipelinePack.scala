@@ -92,9 +92,6 @@ object RefPipelinePack extends QueryPack {
       }, Duration.Inf)
   }
 
-  /** Dev-tool accessor (OptLab stage timing); not part of the catalog. */
-  private[graft] def idaFixtureDirForLab: String = idaFixtureDir
-
   private lazy val idaFixtureDir: String = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-ida-e2e").toString
     graft.io.OdsWriter.write(idaFileSmp, s"$tmp/smp_2015.ods")
