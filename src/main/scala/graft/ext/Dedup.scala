@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.StandingIndex
+
 /** Deduplication operators for a training-data pipeline: exact
   * (fingerprint group-by), MinHash+LSH banded near-dup, SimHash, and
   * n-gram Jaccard. Embedding-cosine near-dup lives in [[Similarity]].
@@ -155,12 +157,10 @@ object Dedup {
     */
   private[graft] def liveFingerprints(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val admitted = spark.read.parquet(s"$dir/fp")
       .groupBy("fp").agg(sum("n").as("n"))
     val net =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/retract"))) {
+      if (StandingIndex.exists(spark, s"$dir/retract")) {
         val retracted = spark.read.parquet(s"$dir/retract")
           .select("fp", "doc_id").distinct()
           .groupBy("fp").agg(count(lit(1)).as("r"))
@@ -173,11 +173,9 @@ object Dedup {
   /** Squash the delta log to one (fp, n) gross-count row per LIVE
     * fingerprint, CARRYING the retraction ledger (restricted to kept
     * fps, squashed to one distinct file set) so post-compaction replays
-    * of old retraction batches stay absorbed. Runs under a listing-
-    * guarded root swap over BOTH subdirs (a batch landing mid-compaction
-    * aborts loudly — the [[graft.streaming.SpanMaskIngest]] compactor
-    * contract); serving before and after is identical. The residual
-    * hazard is replay past the fold: a pre-compaction REFRESH batchId
+    * of old retraction batches stay absorbed ([[StandingIndex.compact]]);
+    * serving before and after is identical. The residual hazard is
+    * replay past the fold: a pre-compaction REFRESH batchId
     * replayed after compaction double-counts its +n partials (the
     * original files were folded) — admissions carry no per-doc ledger —
     * and a pre-compaction RETRACTION batchId replayed after compaction
@@ -188,32 +186,19 @@ object Dedup {
     * batch-file index here; see [[retractFromFingerprintIndex]].
     */
   def compactFingerprintIndex(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val tmp = dir.stripSuffix("/") + ".compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val hasLedger = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/retract"))
-    val snap = graft.io.IndexCatalog.contentVersion(spark, s"$dir/fp") +
-      graft.io.IndexCatalog.contentVersion(spark, s"$dir/retract")
-    val live = liveFingerprints(spark, dir).localCheckpoint()
-    spark.read.parquet(s"$dir/fp")
-      .groupBy("fp").agg(sum("n").as("n"))
-      .join(live, Seq("fp"), "left_semi")
-      .write.parquet(s"$tmp/fp")
-    if (hasLedger)
-      spark.read.parquet(s"$dir/retract")
-        .select("fp", "doc_id").distinct()
+      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    StandingIndex.compact(spark, dir) { tmp =>
+      val live = liveFingerprints(spark, dir).localCheckpoint()
+      spark.read.parquet(s"$dir/fp")
+        .groupBy("fp").agg(sum("n").as("n"))
         .join(live, Seq("fp"), "left_semi")
-        .write.parquet(s"$tmp/retract")
-    require(graft.io.IndexCatalog.contentVersion(spark, s"$dir/fp") +
-        graft.io.IndexCatalog.contentVersion(spark, s"$dir/retract") == snap,
-      s"compaction aborted: batch files under $dir/{fp,retract} changed during " +
-        "the compaction (concurrent ingest/retraction) — re-run the compaction")
-    graft.io.DirSwap.swapInto(fs,
-      new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(dir))
-  }
+        .write.parquet(s"$tmp/fp")
+      if (StandingIndex.exists(spark, s"$dir/retract"))
+        spark.read.parquet(s"$dir/retract")
+          .select("fp", "doc_id").distinct()
+          .join(live, Seq("fp"), "left_semi")
+          .write.parquet(s"$tmp/retract")
+    }
 
   /** [[incrementalDedup]] served from the MATERIALIZED signed-log index:
     * identical verdicts to the inline form over the corpus the live set
@@ -855,47 +840,8 @@ object Dedup {
     * IDENTICAL to [[containmentPairs]] over the same hashed sets
     * (DuckDB replays the md5-derived hash, so parity is bit-exact).
     */
-  def containmentPrefixPairs(
-      docs: DataFrame, n: Int, threshold: Double,
-      // materialize=false skips the cache + eager localCheckpoint so
-      // PlanSpec can assert the join pins (a checkpointed result's plan
-      // is just the checkpoint scan); production callers always
-      // materialize
-      materialize: Boolean = true): DataFrame = {
-    // ONE tokenize+shingle+md5 pass, checkpointed: the df table, the
-    // perDoc build, AND the candidate join's outer side all read it back
-    // (un-checkpointed, each consumer re-ran the whole text pass — the
-    // measured dominant cost of this family). The per-(doc, hash)
-    // distinct the old form paid a dedicated shuffle for is folded into
-    // the perDoc collect_set below (equal (df, sh) structs collapse
-    // there for free); df counts may shift only under a 60-bit hash
-    // collision, and df only feeds the PREFIX ORDERING — the filter is
-    // lossless under ANY consistent global order, and verification is
-    // exact, so the output is unchanged.
-    val rowsBase = shingleRows(docs, n)
-      .select(col("doc_id"), Hashing.portableTokenHash60(col("sh")).as("sh"))
-    val rows = if (materialize) rowsBase.localCheckpoint() else rowsBase
-    // df via a full-partition count WINDOW over the sh-keyed stream — the
-    // exactSubstringSpans shape, already the family's measured-optimal
-    // form at ×32: ONE exchange of the hashed rows replaces the r17
-    // agg+join (which exchanged the stream for the df aggregate AND
-    // again for the join-back). The window sorts 8-byte keys within
-    // partitions; identical df values by construction (rows are distinct
-    // per (doc, sh), so the partition count IS the document frequency).
-    val wDf = org.apache.spark.sql.expressions.Window.partitionBy("sh")
-    // one doc-keyed shuffle builds the rarity-sorted hashed set and its
-    // directed prefix slice (|A| − ⌈τ·|A|⌉ + 1 rarest shingles) — the
-    // jaccardPrefixPairs per-doc frame with the asymmetric prefix length;
-    // array_sort runs ONCE per doc (the slice reuses the sorted hs, where
-    // the old form sorted the struct array a second time for the prefix)
-    val perDoc = rows.withColumn("df", count(lit(1)).over(wDf))
-      .groupBy("doc_id")
-      .agg(collect_set(struct(col("df"), col("sh"))).as("a"))
-      .select(col("doc_id"), expr("transform(array_sort(a), x -> x.sh)").as("hs"))
-      .select(col("doc_id"), col("hs"),
-        expr(s"slice(hs, 1, size(hs) - ceil($threshold * size(hs)) + 1)").as("pre"))
-      .cache()
-    try {
+  def containmentPrefixPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame =
+    prefixPairs(docs, n, threshold) { (rows, perDoc) =>
       val prefix = perDoc.select(col("doc_id"), explode(col("pre")).as("sh"))
       // shuffle_hash, build side = the PREFIX stream (the rarest-shingle
       // slices — strictly smaller than the full hashed stream it joins):
@@ -909,16 +855,7 @@ object Dedup {
         .join(rows.select(col("doc_id").as("doc_outer"), col("sh")), Seq("sh"))
         .filter(col("doc_inner") =!= col("doc_outer"))
         .select("doc_inner", "doc_outer").distinct()
-      // the eager localCheckpoint consumes the cache HERE (the output is
-      // pair-set-sized — dup-density-bounded, tiny beside the per-doc
-      // arrays), so perDoc can unpersist before returning instead of
-      // lingering token-scale in the executor store
-      // merge on the perDoc sides: corpus-scaled ARRAY payloads must
-      // never broadcast — the ×64/4 GiB soak caught the static planner
-      // admitting perDoc for broadcast under the default threshold
-      // ("Not enough memory to build and broadcast"); sort-merge keys on
-      // the already-hash-partitioned doc_id, so the arrays stay in place
-      val out = cand
+      cand
         .join(perDoc.select(col("doc_id").as("doc_inner"), col("hs").as("hs_a"))
           .hint("merge"), Seq("doc_inner"))
         .join(perDoc.select(col("doc_id").as("doc_outer"), col("hs").as("hs_b"))
@@ -928,9 +865,7 @@ object Dedup {
         .filter(col("containment") >= threshold)
         .select(col("doc_inner"), col("doc_outer"),
           round(col("containment"), 4).as("containment"))
-      if (materialize) out.localCheckpoint() else out
-    } finally perDoc.unpersist()
-  }
+    }
 
   /** Prefix-filtered n-gram Jaccard ≥ threshold — the SSJoin/PPJoin
     * family's candidate generator (Chaudhuri et al., ICDE'06), LOSSLESS
@@ -952,40 +887,9 @@ object Dedup {
     * length, never corpus size); the verify join touches only
     * candidate pairs.
     */
-  def jaccardPrefixPairs(
-      docs: DataFrame, n: Int, threshold: Double,
-      // materialize=false: plan-visible variant for PlanSpec (see
-      // containmentPrefixPairs)
-      materialize: Boolean = true): DataFrame = {
-    // Shingles collapse to the portable 60-bit hash FIRST (8-byte keys
-    // through every shuffle instead of ~30-byte strings — the
-    // dedup_source_overlap economy; the oracle replays the identical
-    // md5-derived hash, so parity stays bit-exact). ONE checkpointed
-    // text pass serves the df table and the perDoc build; the per-hash
-    // distinct is folded into the perDoc collect_set (see
-    // containmentPrefixPairs — df feeds only the lossless prefix
-    // ordering, so collision-order drift cannot change the output).
-    val rowsBase = shingleRows(docs, n)
-      .select(col("doc_id"), Hashing.portableTokenHash60(col("sh")).as("sh"))
-    val rows = if (materialize) rowsBase.localCheckpoint() else rowsBase
-    // df via the full-partition count window — see containmentPrefixPairs
-    // (one sh-keyed exchange instead of the agg + join-back pair)
-    val wDf = org.apache.spark.sql.expressions.Window.partitionBy("sh")
-    // ONE doc-keyed shuffle builds everything per-doc: the full hashed
-    // set (bounded by document length) rarity-SORTED (df asc, sh asc —
-    // ties broken by the hash so the candidate set is deterministic
-    // under any parallelism; a doc-bounded array sort — run ONCE, the
-    // prefix slices the sorted hs), plus its prefix slice. The tiny
-    // per-doc frame — not the shingle stream — is what gets
-    // materialized for reuse.
-    val perDoc = rows.withColumn("df", count(lit(1)).over(wDf))
-      .groupBy("doc_id")
-      .agg(collect_set(struct(col("df"), col("sh"))).as("a"))
-      .select(col("doc_id"), expr("transform(array_sort(a), x -> x.sh)").as("hs"))
-      .select(col("doc_id"), col("hs"),
-        expr(s"slice(hs, 1, size(hs) - ceil($threshold * size(hs)) + 1)").as("pre"))
-      .cache()
-    try {
+
+  def jaccardPrefixPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame =
+    prefixPairs(docs, n, threshold) { (_, perDoc) =>
       val prefix = perDoc.select(col("doc_id"), explode(col("pre")).as("sh"))
       // shuffle_hash: the prefix self-join moves (long, long) rows —
       // 16 bytes, compact per the house criterion (the r17 merge
@@ -995,16 +899,7 @@ object Dedup {
         .join(prefix.select(col("doc_id").as("doc_b"), col("sh")).hint("shuffle_hash"), Seq("sh"))
         .filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b").distinct()
-      // exact verify: the pair set joins the two per-doc hashed-set
-      // arrays and intersects in place — no shuffle touches the shingle
-      // stream again. The eager localCheckpoint consumes the cache HERE
-      // (the output is pair-set-sized — dup-density-bounded), so perDoc
-      // unpersists before returning instead of lingering token-scale in
-      // the executor store.
-      // merge on the perDoc sides: corpus-scaled ARRAY payloads must
-      // never broadcast (see containmentPrefixPairs — the ×64/4 GiB
-      // soak caught the static-estimate broadcast of perDoc)
-      val out = cand
+      cand
         .join(perDoc.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
           .hint("merge"), Seq("doc_a"))
         .join(perDoc.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"))
@@ -1014,8 +909,65 @@ object Dedup {
           size(col("hs_a")), size(col("hs_b"))))
         .filter(col("jac") >= threshold)
         .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("jaccard"))
-      if (materialize) out.localCheckpoint() else out
-    } finally perDoc.unpersist()
+    }
+
+  /** The frames both prefix filters share, handed to `pairs` as
+    * (rows, perDoc): `rows` are the distinct (doc_id, sh) hashed shingle
+    * rows; `perDoc` holds each doc's rarity-sorted hashed set `hs` and
+    * its prefix slice `pre`, the |x| − ⌈τ·|x|⌉ + 1 rarest shingles that
+    * both the symmetric and the directed bound need.
+    *
+    * Shingles collapse to the portable 60-bit hash FIRST (8-byte keys
+    * through every shuffle instead of ~30-byte strings; the oracle
+    * replays the identical md5-derived hash, so parity stays
+    * bit-exact). ONE tokenize+shingle+md5 pass is checkpointed: the df
+    * window, the perDoc build AND containment's outer side all read it
+    * back (un-checkpointed, each consumer re-ran the whole text pass —
+    * the measured dominant cost of this family). The per-(doc, hash)
+    * distinct is folded into the perDoc collect_set (equal (df, sh)
+    * structs collapse there for free); df counts may shift only under a
+    * 60-bit hash collision, and df only feeds the PREFIX ORDERING — the
+    * filter is lossless under ANY consistent global order, and
+    * verification is exact, so the output is unchanged.
+    *
+    * The pairs `pairs` returns are checkpointed eagerly, which consumes
+    * the perDoc cache HERE (the output is pair-set-sized —
+    * dup-density-bounded, tiny beside the per-doc arrays), so perDoc
+    * unpersists before returning instead of lingering token-scale in
+    * the executor store. Its verify joins hint merge on the perDoc
+    * sides: corpus-scaled ARRAY payloads must never broadcast — the
+    * ×64/4 GiB soak caught the static planner admitting perDoc for
+    * broadcast under the default threshold ("Not enough memory to build
+    * and broadcast"); sort-merge keys on the already-hash-partitioned
+    * doc_id, so the arrays stay in place.
+    */
+  private def prefixPairs(docs: DataFrame, n: Int, threshold: Double)(
+      pairs: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val rows = shingleRows(docs, n)
+      .select(col("doc_id"), Hashing.portableTokenHash60(col("sh")).as("sh"))
+      .localCheckpoint()
+    // df via a full-partition count WINDOW over the sh-keyed stream — the
+    // exactSubstringSpans shape, already the family's measured-optimal
+    // form at ×32: ONE exchange of the hashed rows replaces the r17
+    // agg+join (which exchanged the stream for the df aggregate AND
+    // again for the join-back). The window sorts 8-byte keys within
+    // partitions; identical df values by construction (rows are distinct
+    // per (doc, sh), so the partition count IS the document frequency).
+    val wDf = org.apache.spark.sql.expressions.Window.partitionBy("sh")
+    // ONE doc-keyed shuffle builds everything per-doc: the full hashed
+    // set (bounded by document length) rarity-SORTED (df asc, sh asc —
+    // ties broken by the hash so the candidate set is deterministic
+    // under any parallelism; a doc-bounded array sort run ONCE, the
+    // prefix slicing the sorted hs)
+    val perDoc = rows.withColumn("df", count(lit(1)).over(wDf))
+      .groupBy("doc_id")
+      .agg(collect_set(struct(col("df"), col("sh"))).as("a"))
+      .select(col("doc_id"), expr("transform(array_sort(a), x -> x.sh)").as("hs"))
+      .select(col("doc_id"), col("hs"),
+        expr(s"slice(hs, 1, size(hs) - ceil($threshold * size(hs)) + 1)").as("pre"))
+      .cache()
+    try pairs(rows, perDoc).localCheckpoint()
+    finally perDoc.unpersist()
   }
 
   /** Banded MinHash signatures from shingle ROWS: (doc_id, band, key) —
@@ -1224,8 +1176,8 @@ object Dedup {
       rowsPerBand: Int = 4,
       shingleN: Int = 3): DataFrame = {
     val bands = spark.read.parquet(s"$indexDir/bands")
-    val liveBands = nearDupTombstonesOpt(spark, indexDir)
-      .fold(bands)(t => bands.join(broadcast(t), Seq("corpus_id"), "left_anti"))
+    val liveBands = StandingIndex.dropRetracted(bands,
+      StandingIndex.tombstones(spark, indexDir, "corpus_id"), "corpus_id")
     classifyAgainstIndex(
       spark.read.parquet(s"$indexDir/shingles"),
       liveBands,
@@ -1262,71 +1214,33 @@ object Dedup {
       s"$dir/bands", batchId)
   }
 
-  /** RETRACT corpus documents from the near-dup LSH index — the
-    * right-to-be-forgotten path for the dedup serving artifacts: the
-    * retracted ids land as a TOMBSTONE table (`deleted/`, |batch| rows,
-    * nothing rescanned, duplicate retracts absorbed by the distinct
-    * view), and [[incrementalNearDupIndexed]] applies them
-    * merge-on-read at the CANDIDATE filter — a deleted doc stops being
-    * reported as anyone's near-dup match the moment the tombstone
-    * lands. [[compactNearDupIndex]] later applies them physically.
+  /** RETRACT corpus documents from the near-dup LSH index as
+    * [[StandingIndex]] tombstones: [[incrementalNearDupIndexed]] applies
+    * them at the CANDIDATE filter — a deleted doc stops being reported
+    * as anyone's near-dup match the moment the tombstone lands.
+    * [[compactNearDupIndex]] later applies them physically.
     */
   def retractFromNearDupIndex(docIds: DataFrame, dir: String): Unit =
-    docIds.select(col("doc_id").cast("long").as("corpus_id")).distinct()
-      .write.mode("append").parquet(s"$dir/deleted")
+    StandingIndex.retract(docIds.select(col("doc_id").cast("long").as("corpus_id")), dir)
 
-  /** The distinct near-dup tombstone set, if any retraction happened. */
-  private[graft] def nearDupTombstonesOpt(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deleted")))
-      Some(spark.read.parquet(s"$dir/deleted").select("corpus_id").distinct())
-    else None
-  }
-
-  /** Squash the near-dup index back to the canonical compacted layout:
-    * `bands/` and `shingles/` drop tombstoned rows (also collapsing any
-    * [[refreshNearDupIndex]] batch files into one file set each), and
-    * the new layout replaces the old through ONE root-dir swap with the
-    * racing-retraction guard ([[Retrieval.guardedSwapInto]] — a
-    * retraction landing during the compaction rolls the swap back
-    * loudly). The CONTENT listing over `bands/` and `shingles/` is
-    * snapshotted too: a [[refreshNearDupIndex]] batch landing between
-    * the compactor's read and the swap would otherwise be silently
-    * destroyed by the swap, so the swap aborts loudly if the listing
-    * moved — the [[compactFingerprintIndex]] guard applied to both race
-    * directions. Same writer/compactor exclusion contract as every
-    * other index compactor.
+  /** Squash the near-dup index ([[StandingIndex.compact]]): `bands/` and
+    * `shingles/` drop tombstoned rows, also collapsing any
+    * [[refreshNearDupIndex]] batch files into one file set each.
     */
   def compactNearDupIndex(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val tmp = dir.stripSuffix("/") + ".compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val tombSnap = Retrieval.tombstoneVersion(spark, dir)
-    val contentSnap = graft.io.IndexCatalog.contentVersion(spark, s"$dir/bands") +
-      graft.io.IndexCatalog.contentVersion(spark, s"$dir/shingles")
-    val tombs = nearDupTombstonesOpt(spark, dir)
-    // explicit selects: the USING join moves corpus_id first, and a
-    // compacted file set must keep the canonical writeNearDupIndex
-    // column order (readers match by name, but one layout is one schema)
-    val bands = spark.read.parquet(s"$dir/bands")
-    tombs.fold(bands)(t => bands.join(broadcast(t), Seq("corpus_id"), "left_anti"))
-      .select("band", "key", "corpus_id")
-      .write.parquet(s"$tmp/bands")
-    val sh = spark.read.parquet(s"$dir/shingles")
-    tombs.fold(sh)(t => sh.join(broadcast(t), Seq("corpus_id"), "left_anti"))
-      .select("corpus_id", "h")
-      .write.parquet(s"$tmp/shingles")
-    Retrieval.guardTombstonesUnchanged(spark, dir, tombSnap)
-    require(graft.io.IndexCatalog.contentVersion(spark, s"$dir/bands") +
-        graft.io.IndexCatalog.contentVersion(spark, s"$dir/shingles") == contentSnap,
-      s"compaction aborted: batch files under $dir/{bands,shingles} changed " +
-        "during the compaction (concurrent refresh) — re-run the compaction")
-    Retrieval.guardedSwapInto(spark, tmp, dir, tombSnap)
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    StandingIndex.compact(spark, dir) { tmp =>
+      val tombs = StandingIndex.tombstones(spark, dir, "corpus_id")
+      // explicit selects: the USING join moves corpus_id first, and a
+      // compacted file set must keep the canonical writeNearDupIndex
+      // column order (readers match by name, but one layout is one schema)
+      Seq("bands" -> Seq("band", "key", "corpus_id"), "shingles" -> Seq("corpus_id", "h"))
+        .foreach { case (t, cols) =>
+          StandingIndex.dropRetracted(spark.read.parquet(s"$dir/$t"), tombs, "corpus_id")
+            .select(cols.map(col): _*)
+            .write.parquet(s"$tmp/$t")
+        }
+    }
 
   private def classifyAgainstIndex(
       corpusSh: DataFrame,

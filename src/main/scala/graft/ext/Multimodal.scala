@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.io.StandingIndex
+
 /** Multimodal column handling: image/audio/video as opaque `binary`
   * columns plus a typed metadata struct, with decode/feature-extraction
   * as partition-batched functions.
@@ -205,24 +207,13 @@ object Multimodal {
     graft.io.BatchFiles.land(contentHashes(assets), s"$dir/chash", batchId)
   }
 
-  /** Retract assets: ids land as a TOMBSTONE table (`deleted/`, |batch|
-    * rows, duplicate retracts absorbed by the distinct view); serving
-    * applies them merge-on-read and [[compactMmIndex]] applies them
-    * physically. Right-to-be-forgotten for media: the index never held
-    * payload bytes, so dropping the signature rows IS the erasure.
+  /** Retract assets as [[StandingIndex]] tombstones; serving applies
+    * them merge-on-read and [[compactMmIndex]] applies them physically.
+    * Right-to-be-forgotten for media: the index never held payload
+    * bytes, so dropping the signature rows IS the erasure.
     */
   def retractFromMmIndex(assetIds: DataFrame, dir: String): Unit =
-    assetIds.select(col("asset_id").cast("long").as("asset_id")).distinct()
-      .write.mode("append").parquet(s"$dir/deleted")
-
-  private def mmTombstonesOpt(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deleted")))
-      Some(spark.read.parquet(s"$dir/deleted").select("asset_id").distinct())
-    else None
-  }
+    StandingIndex.retract(assetIds.select(col("asset_id").cast("long").as("asset_id")), dir)
 
   /** Perceptual near-dup pairs served from the STANDING index —
     * identical pairs to the inline mm_phash_neardup computation over
@@ -238,8 +229,8 @@ object Multimodal {
       dir: String,
       maxHamming: Int = 10): DataFrame = {
     val sigs = spark.read.parquet(s"$dir/sigs")
-    val live = mmTombstonesOpt(spark, dir)
-      .fold(sigs)(t => sigs.join(broadcast(t), Seq("asset_id"), "left_anti"))
+    val live = StandingIndex.dropRetracted(sigs,
+      StandingIndex.tombstones(spark, dir, "asset_id"), "asset_id")
     val a = live.select(col("band"), col("key"),
       col("asset_id").as("asset_a"), col("phash").as("ph_a"))
     val b = live.select(col("band"), col("key"),
@@ -265,8 +256,8 @@ object Multimodal {
   def contentDedupIndexed(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val ch = spark.read.parquet(s"$dir/chash")
-    val live = mmTombstonesOpt(spark, dir)
-      .fold(ch)(t => ch.join(broadcast(t), Seq("asset_id"), "left_anti"))
+    val live = StandingIndex.dropRetracted(ch,
+      StandingIndex.tombstones(spark, dir, "asset_id"), "asset_id")
     live.groupBy("h")
       .agg(count(lit(1)).as("n_refs"),
         min("asset_id").as("canonical_doc"),
@@ -274,40 +265,21 @@ object Multimodal {
       .filter(col("n_refs") >= 2)
   }
 
-  /** Squash the index to the canonical compacted layout: `sigs/` and
-    * `chash/` drop tombstoned rows and collapse their batch files; ONE
-    * root-dir swap guarded against BOTH race directions — a retraction
-    * landing during the compaction rolls the swap back
-    * ([[graft.ext.Retrieval.guardedSwapInto]]) and an admission landing
-    * during it aborts via the content-listing snapshot (the
-    * [[graft.ext.Dedup.compactFingerprintIndex]] guard). Single-writer
-    * contract as every index compactor.
+  /** Squash the index ([[StandingIndex.compact]]): `sigs/` and
+    * `chash/` drop tombstoned rows and collapse their batch files.
     */
   def compactMmIndex(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val tmp = dir.stripSuffix("/") + ".compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val tombSnap = Retrieval.tombstoneVersion(spark, dir)
-    val contentSnap = graft.io.IndexCatalog.contentVersion(spark, s"$dir/sigs") +
-      graft.io.IndexCatalog.contentVersion(spark, s"$dir/chash")
-    val tombs = mmTombstonesOpt(spark, dir)
-    val sigs = spark.read.parquet(s"$dir/sigs")
-    tombs.fold(sigs)(t => sigs.join(broadcast(t), Seq("asset_id"), "left_anti"))
-      .select("asset_id", "phash", "band", "key")
-      .write.parquet(s"$tmp/sigs")
-    val ch = spark.read.parquet(s"$dir/chash")
-    tombs.fold(ch)(t => ch.join(broadcast(t), Seq("asset_id"), "left_anti"))
-      .select("asset_id", "kind", "h")
-      .write.parquet(s"$tmp/chash")
-    Retrieval.guardTombstonesUnchanged(spark, dir, tombSnap)
-    require(graft.io.IndexCatalog.contentVersion(spark, s"$dir/sigs") +
-        graft.io.IndexCatalog.contentVersion(spark, s"$dir/chash") == contentSnap,
-      s"compaction aborted: batch files under $dir/{sigs,chash} changed " +
-        "during the compaction (concurrent refresh) — re-run the compaction")
-    Retrieval.guardedSwapInto(spark, tmp, dir, tombSnap)
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    StandingIndex.compact(spark, dir) { tmp =>
+      val tombs = StandingIndex.tombstones(spark, dir, "asset_id")
+      Seq("sigs" -> Seq("asset_id", "phash", "band", "key"),
+          "chash" -> Seq("asset_id", "kind", "h"))
+        .foreach { case (t, cols) =>
+          StandingIndex.dropRetracted(spark.read.parquet(s"$dir/$t"), tombs, "asset_id")
+            .select(cols.map(col): _*)
+            .write.parquet(s"$tmp/$t")
+        }
+    }
 }
 
 /** The codec boundary. Images and audio are REAL containers parsed for

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.StandingIndex
+
 /** The persisted INVERTED INDEX behind the engine's lexical retrieval —
   * what a search stack actually serves from: per-(doc, token) term
   * frequencies, per-token document frequencies, per-doc lengths, and the
@@ -59,162 +61,32 @@ object Retrieval {
   }
 
   /** RETRACT documents from the index — deletion propagated to retrieval
-    * (the right-to-be-forgotten path): the retracted ids land as a
-    * TOMBSTONE table (`deleted/`), and serving applies them
-    * merge-on-read ([[bm25From]] filters the query-token tf slice and
-    * decrements df for exactly that slice — the deletion-vector
-    * contract of the lake formats, at index granularity). The retract
-    * itself writes |batch| rows and rescans NOTHING, duplicate retracts
-    * are absorbed by the distinct tombstone view, and
-    * [[compactIndex]] later applies tombstones physically. Scores
-    * served under tombstones are EXACTLY a rebuild over the surviving
-    * documents (oracle-gated).
+    * (the right-to-be-forgotten path) as [[StandingIndex]] tombstones:
+    * [[bm25From]] filters the query-token tf slice and decrements df for
+    * exactly that slice, and [[compactIndex]] later applies tombstones
+    * physically. Scores served under tombstones are EXACTLY a rebuild
+    * over the surviving documents (oracle-gated).
     */
   def retractFromIndex(docIds: DataFrame, dir: String): Unit =
-    docIds.select("doc_id").distinct()
-      .write.mode("append").parquet(s"$dir/deleted")
+    StandingIndex.retract(docIds.select("doc_id"), dir)
 
-  /** Squash the index back to the canonical compacted layout: tf drops
-    * tombstoned docs, df/dlen/stats re-derive from the surviving tf
-    * (also collapsing a streaming df DELTA LOG —
-    * [[graft.streaming.RetrievalIngest]] — back to one row per token),
-    * and the whole new layout replaces the old through ONE root-dir
-    * swap ([[graft.io.DirSwap.swapInto]]). The root swap is the single
-    * commit point: a reader racing the compaction sees the old layout
-    * (tombstones + log, merge-on-read) or the new one (clean), never a
-    * half-compacted mix — the same role a table format's metadata
-    * pointer plays.
-    *
-    * Coordination contract: run compaction only while no
-    * [[graft.streaming.RetrievalIngest]] writer is active (or after its
-    * checkpoint is retired) — a REPLAY of a pre-compaction batch would
-    * re-add rows that the compacted files already contain. This is the
-    * same writer/compactor exclusion every log-structured store
-    * requires.
+  /** Squash the index back to the canonical compacted layout
+    * ([[StandingIndex.compact]]): tf drops tombstoned docs, df/dlen/stats
+    * re-derive from the surviving tf (also collapsing a streaming df
+    * DELTA LOG — [[graft.streaming.RetrievalIngest]] — back to one row
+    * per token), and a positional table sharing the root compacts under
+    * the same tombstones, so the whole index moves in one swap.
     */
-  def compactIndex(spark: SparkSession, dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val tmp = dir.stripSuffix("/") + ".compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val tombSnap = tombstoneVersion(spark, dir)
-    val tfAll = spark.read.parquet(s"$dir/tf")
-    val tombs = tombstonesOpt(spark, dir)
-    tombs
-      .fold(tfAll)(t => tfAll.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      .write.parquet(s"$tmp/tf")
-    deriveFromTf(spark, tmp)
-    // the positional table, when present, compacts under the same
-    // tombstones — the whole index moves to the new layout in one swap
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/pos"))) {
-      val pos = spark.read.parquet(s"$dir/pos")
-      tombs.fold(pos)(t => pos.join(broadcast(t), Seq("doc_id"), "left_anti"))
-        .write.parquet(s"$tmp/pos")
+  def compactIndex(spark: SparkSession, dir: String): Unit =
+    StandingIndex.compact(spark, dir) { tmp =>
+      val tombs = StandingIndex.tombstones(spark, dir, "doc_id")
+      StandingIndex.dropRetracted(spark.read.parquet(s"$dir/tf"), tombs, "doc_id")
+        .write.parquet(s"$tmp/tf")
+      deriveFromTf(spark, tmp)
+      if (StandingIndex.exists(spark, s"$dir/pos"))
+        StandingIndex.dropRetracted(spark.read.parquet(s"$dir/pos"), tombs, "doc_id")
+          .write.parquet(s"$tmp/pos")
     }
-    guardTombstonesUnchanged(spark, dir, tombSnap)
-    guardedSwapInto(spark, tmp, dir, tombSnap)
-  }
-
-  /** PATH-INDEPENDENT listing fingerprint of the tombstone table — the
-    * token the compactors use to detect a retraction racing the
-    * compaction. Fingerprints (file name, length, mtime) of the files
-    * directly under `deleted/`, NOT their absolute paths: the post-swap
-    * re-check ([[guardedSwapInto]]) compares the RETIRED layout's
-    * tombstones (renamed to `.swap-old/deleted`) against a snapshot
-    * taken at `dir/deleted`, and an absolute-path fingerprint would
-    * never match across the rename.
-    */
-  private[graft] def tombstoneVersion(spark: SparkSession, dir: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    tombstoneFingerprint(fs, new org.apache.hadoop.fs.Path(s"$dir/deleted"))
-  }
-
-  private def tombstoneFingerprint(
-      fs: org.apache.hadoop.fs.FileSystem,
-      deleted: org.apache.hadoop.fs.Path): String = {
-    if (!fs.exists(deleted)) return "absent"
-    val lines = fs.listStatus(deleted)
-      .filterNot(st => st.getPath.getName.startsWith("_") ||
-        st.getPath.getName.startsWith("."))
-      .map(st => s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
-      .sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    lines.foreach(l => md.update(l.getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Fail LOUDLY if a retraction landed between a compaction's snapshot
-    * read and this check: the swap drops `deleted/`, so an unseen
-    * tombstone would be silently un-deleted. Best-effort EARLY
-    * detection only — the authoritative check is [[guardedSwapInto]]'s
-    * post-rename re-check on the retired layout; a retraction can still
-    * land in the instants around the renames themselves, so the
-    * writer/compactor exclusion contract remains required.
-    */
-  private[graft] def guardTombstonesUnchanged(
-      spark: SparkSession, dir: String, snapshot: String): Unit =
-    if (tombstoneVersion(spark, dir) != snapshot)
-      throw new java.io.IOException(
-        s"compaction aborted: tombstones under $dir/deleted changed since the " +
-          "snapshot read (concurrent retraction) — re-run the compaction")
-
-  /** [[graft.io.DirSwap.swapInto]] with the tombstone race narrowed to
-    * the rename instants: the old layout's deletion is DEFERRED until
-    * its `deleted/` table is re-fingerprinted against the compaction's
-    * snapshot. A retraction that landed any time between the snapshot
-    * read and the swap (the window spanning the whole compaction
-    * compute — previously undetectable, because [[guardTombstonesUnchanged]]
-    * ran before the swap and the files were destroyed with the old
-    * root) is now found sitting in the retired `.swap-old/deleted`,
-    * the swap ROLLS BACK (new layout returns to tmp, old layout
-    * returns to serve), and the caller re-runs the compaction. What
-    * remains uncovered is a retraction interleaving with the renames
-    * themselves — the documented writer/compactor exclusion.
-    */
-  private[graft] def guardedSwapInto(
-      spark: SparkSession, tmp: String, dir: String, snapshot: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val dest = new Path(dir)
-    val tmpP = new Path(tmp)
-    val old = new Path(dir.stripSuffix("/") + ".swap-old")
-    // stale .old from a crashed prior run (same recovery as DirSwap)
-    if (fs.exists(old)) {
-      if (!fs.exists(dest)) graft.io.DirSwap.renameOrFail(fs, old, dest)
-      else fs.delete(old, true)
-    }
-    val hadDest = fs.exists(dest)
-    if (hadDest) graft.io.DirSwap.renameOrFail(fs, dest, old)
-    try graft.io.DirSwap.renameOrFail(fs, tmpP, dest)
-    catch {
-      case e: java.io.IOException =>
-        if (fs.exists(old) && !fs.exists(dest)) graft.io.DirSwap.renameOrFail(fs, old, dest)
-        throw e
-    }
-    // authoritative re-check on the RETIRED layout before destroying it
-    val retired =
-      if (hadDest) tombstoneFingerprint(fs, new Path(old, "deleted")) else "absent"
-    if (retired != snapshot) {
-      graft.io.DirSwap.renameOrFail(fs, dest, tmpP)
-      if (hadDest) graft.io.DirSwap.renameOrFail(fs, old, dest)
-      throw new java.io.IOException(
-        s"compaction aborted: a retraction landed under $dir/deleted during the " +
-          "compaction (detected in the retired layout); the swap was rolled " +
-          "back — re-run the compaction")
-    }
-    if (hadDest) fs.delete(old, true)
-  }
-
-  /** The distinct tombstone set, if any retraction has happened. */
-  private[graft] def tombstonesOpt(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deleted")))
-      Some(spark.read.parquet(s"$dir/deleted").select("doc_id").distinct())
-    else None
-  }
 
   /** Incremental index admission — the delta-refresh posture of the
     * LSH near-dup index ([[Dedup.incrementalNearDupIndexed]]) and the
@@ -299,24 +171,18 @@ object Retrieval {
   def refreshPositionalIndex(newDocs: DataFrame, dir: String, batchId: Long): Unit =
     graft.io.BatchFiles.land(positionRows(newDocs), s"$dir/pos", batchId)
 
-  /** RETRACT documents from the positional index — closing the
-    * lifecycle asymmetry the inverted index (tombstones at
-    * [[retractFromIndex]]) and the IVF index already resolved: the
-    * retracted ids land as the same |batch|-row TOMBSTONE table
-    * (`deleted/`), phrase/proximity serving applies them merge-on-read
-    * (dead docs drop from each term's index-pruned posting slice), and
-    * [[compactPositionalIndex]] later applies them physically. Without
-    * this, a deleted document kept serving phrase hits — the
-    * right-to-be-forgotten gap the round-12 verdict flagged.
+  /** RETRACT documents from the positional index as [[StandingIndex]]
+    * tombstones: phrase/proximity serving drops dead docs from each
+    * term's index-pruned posting slice, and [[compactPositionalIndex]]
+    * later applies them physically. Without this, a deleted document
+    * kept serving phrase hits.
     */
   def retractFromPositionalIndex(docIds: DataFrame, dir: String): Unit =
-    docIds.select("doc_id").distinct()
-      .write.mode("append").parquet(s"$dir/deleted")
+    StandingIndex.retract(docIds.select("doc_id"), dir)
 
-  /** Squash the positional index: occurrence rows of tombstoned docs
-    * drop (also collapsing refresh/stream append deltas into one file
-    * set), and the new layout lands through ONE root-dir swap — with
-    * the same racing-retraction guard as [[compactIndex]].
+  /** Squash the positional index ([[StandingIndex.compact]]):
+    * occurrence rows of tombstoned docs drop, also collapsing
+    * refresh/stream append deltas into one file set.
     *
     * A COMBINED layout (pos/ sharing the root with tf/dlen/df —
     * what [[graft.streaming.RetrievalIngest]] lands with
@@ -325,34 +191,22 @@ object Retrieval {
     * swapping the root would delete the sibling tables with it, and
     * BM25 served from the dir afterwards would fail on missing parquet.
     */
-  def compactPositionalIndex(spark: SparkSession, dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/tf"))) {
-      compactIndex(spark, dir)
-      return
+  def compactPositionalIndex(spark: SparkSession, dir: String): Unit =
+    if (StandingIndex.exists(spark, s"$dir/tf")) compactIndex(spark, dir)
+    else StandingIndex.compact(spark, dir) { tmp =>
+      StandingIndex.dropRetracted(spark.read.parquet(s"$dir/pos"),
+          StandingIndex.tombstones(spark, dir, "doc_id"), "doc_id")
+        .write.parquet(s"$tmp/pos")
     }
-    val tmp = dir.stripSuffix("/") + ".compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val tombSnap = tombstoneVersion(spark, dir)
-    val pos = spark.read.parquet(s"$dir/pos")
-    tombstonesOpt(spark, dir)
-      .fold(pos)(t => pos.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      .write.parquet(s"$tmp/pos")
-    guardTombstonesUnchanged(spark, dir, tombSnap)
-    guardedSwapInto(spark, tmp, dir, tombSnap)
-  }
 
   /** The live positional view: the occurrence table with tombstoned
     * docs dropped merge-on-read (the tombstone set broadcasts; the
     * anti join prunes AFTER each term's tok filter, so its cost rides
     * the query-pruned slice, never the full table).
     */
-  private def livePositions(spark: SparkSession, dir: String): DataFrame = {
-    val pos = spark.read.parquet(s"$dir/pos")
-    tombstonesOpt(spark, dir)
-      .fold(pos)(t => pos.join(broadcast(t), Seq("doc_id"), "left_anti"))
-  }
+  private def livePositions(spark: SparkSession, dir: String): DataFrame =
+    StandingIndex.dropRetracted(spark.read.parquet(s"$dir/pos"),
+      StandingIndex.tombstones(spark, dir, "doc_id"), "doc_id")
 
   /** Exact PHRASE match over the positional index: occurrences are
     * positions p where term i of the phrase sits at p + i for every i —
@@ -449,7 +303,7 @@ object Retrieval {
     */
   def bm25Scores(spark: SparkSession, dir: String, qtoks: DataFrame): DataFrame = {
     val dlen = spark.read.parquet(s"$dir/dlen")
-    tombstonesOpt(spark, dir) match {
+    StandingIndex.tombstones(spark, dir, "doc_id") match {
       case None =>
         bm25From(
           spark.read.parquet(s"$dir/tf"),
@@ -462,7 +316,7 @@ object Retrieval {
         // doc lengths (|docs| index rows) so n_docs/avg_len are exactly
         // a rebuild's; tf filtering and df decrements happen inside
         // bm25From on the query-token slice only
-        val dlenLive = dlen.join(broadcast(t), Seq("doc_id"), "left_anti")
+        val dlenLive = StandingIndex.dropRetracted(dlen, Some(t), "doc_id")
         bm25From(
           spark.read.parquet(s"$dir/tf"),
           spark.read.parquet(s"$dir/df"),
@@ -493,13 +347,12 @@ object Retrieval {
     val (tfLive, dfLive) = tombstones match {
       case None => (tfq, dfTab)
       case Some(t) =>
-        val tb = broadcast(t)
         // count DISTINCT docs: tfq carries one row per (doc, tok,
         // QUERY), so a token shared by two query vocabularies would
         // otherwise decrement df twice per dead doc
-        val dec = tfq.join(tb, Seq("doc_id"))
+        val dec = tfq.join(broadcast(t), Seq("doc_id"))
           .groupBy("tok").agg(count_distinct(col("doc_id")).as("__ddf"))
-        (tfq.join(tb, Seq("doc_id"), "left_anti"),
+        (StandingIndex.dropRetracted(tfq, tombstones, "doc_id"),
           dfTab.join(dec, Seq("tok"), "left")
             .select(col("tok"),
               (col("df") - coalesce(col("__ddf"), lit(0L))).as("df"))

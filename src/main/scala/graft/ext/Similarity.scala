@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.StandingIndex
+
 /** Similarity search over an embedding column (`Array[Float]`).
   *
   * Vector math is higher-order expressions (`zip_with` + `aggregate`) over
@@ -587,9 +589,8 @@ object Similarity {
     }
     val cells = spark.read.parquet(s"$indexDir/cells")
       .withColumn("cell", col("cell").cast("long"))
-    val assigned = ivfTombstonesOpt(spark, indexDir)
-      .fold(cells)(t => cells.join(
-        broadcast(t), cells("neighbor_id") === t("vec_id"), "left_anti"))
+    val assigned = StandingIndex.dropRetracted(cells,
+      StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
     ivfCandidates(assigned, centroids, queries, nProbe, idCol, vecCol)
       .filter(col("cos") >= minCosine)
       .select(col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
@@ -760,72 +761,38 @@ object Similarity {
   }
 
   /** RETRACT vectors from a MATERIALIZED IVF index — deletion propagated
-    * to ANN serving (the right-to-be-forgotten path for embeddings, the
-    * [[Retrieval.retractFromIndex]] contract applied to the last
-    * standing index without one): the retracted ids land as a TOMBSTONE
-    * table (`deleted/`), and [[ivfTopKIndexed]] applies them
-    * merge-on-read (an anti join of the probed cell slice against the
-    * broadcast tombstone set — the deletion-vector contract of the lake
-    * formats, at index granularity). The retract writes |batch| rows
-    * and rescans NOTHING — no cell partition is rewritten, the centroid
-    * MODEL is untouched (the production IVF contract: retrain rarely
-    * offline, admit and retract continuously) — and duplicate retracts
-    * are absorbed by the distinct tombstone view. Probes served under
-    * tombstones are EXACTLY the full-build model over the surviving
-    * members (oracle-gated); [[compactIvfIndex]] later applies the
-    * tombstones physically.
+    * to ANN serving as [[StandingIndex]] tombstones: [[ivfTopKIndexed]]
+    * anti-joins the probed cell slice against them. No cell partition is
+    * rewritten and the centroid MODEL is untouched (the production IVF
+    * contract: retrain rarely offline, admit and retract continuously).
+    * Probes served under tombstones are EXACTLY the full-build model
+    * over the surviving members (oracle-gated); [[compactIvfIndex]]
+    * later applies the tombstones physically.
     */
   def retractFromIvfIndex(vecIds: DataFrame, indexDir: String, idCol: String = "vec_id"): Unit =
-    vecIds.select(col(idCol).as("vec_id")).distinct()
-      .write.mode("append").parquet(s"$indexDir/deleted")
+    StandingIndex.retract(vecIds.select(col(idCol).as("vec_id")), indexDir)
 
-  /** The distinct IVF tombstone set, if any retraction has happened. */
-  private[graft] def ivfTombstonesOpt(
-      spark: SparkSession, indexDir: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/deleted")))
-      Some(spark.read.parquet(s"$indexDir/deleted").select("vec_id").distinct())
-    else None
-  }
-
-  /** Squash the IVF index back to the canonical compacted layout: cells
-    * drop tombstoned members (also collapsing any [[refreshIvfIndex]]
-    * append deltas into one file set per cell), centroids carry over
+  /** Squash the IVF index ([[StandingIndex.compact]]): cells drop
+    * tombstoned members (also collapsing any [[refreshIvfIndex]] append
+    * deltas into one file set per cell), and centroids carry over
     * unchanged (compaction is membership-level — the model retrains
-    * only via a full [[writeIvfIndex]] rebuild), and the new layout
-    * replaces the old through ONE root-dir swap
-    * ([[graft.io.DirSwap.swapInto]]) — a reader racing the compaction
-    * sees the old layout (tombstones, merge-on-read) or the new one
-    * (clean), never a half-compacted mix. Same writer/compactor
-    * exclusion contract as [[Retrieval.compactIndex]].
+    * only via a full [[writeIvfIndex]] rebuild).
     */
-  def compactIvfIndex(spark: SparkSession, indexDir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    val tmp = indexDir.stripSuffix("/") + ".compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    // snapshot the tombstone listing BEFORE reading: the swap below
-    // drops deleted/, so a retraction racing the compaction would be
-    // silently un-deleted — the guard turns the documented
-    // writer/compactor exclusion contract into a loud failure instead
-    val tombSnap = Retrieval.tombstoneVersion(spark, indexDir)
-    spark.read.parquet(s"$indexDir/centroids")
-      .coalesce(1).write.parquet(s"$tmp/centroids")
-    // an empty-corpus index has a centroid table but no cells directory
-    // (writeIvfIndex's empty-model degrade) — compaction then only
-    // clears tombstones
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/cells"))) {
-      val cells = spark.read.parquet(s"$indexDir/cells")
-        .withColumn("cell", col("cell").cast("long"))
-      ivfTombstonesOpt(spark, indexDir)
-        .fold(cells)(t => cells.join(
-          broadcast(t), cells("neighbor_id") === t("vec_id"), "left_anti"))
-        .write.partitionBy("cell").parquet(s"$tmp/cells")
+  def compactIvfIndex(spark: SparkSession, indexDir: String): Unit =
+    StandingIndex.compact(spark, indexDir) { tmp =>
+      spark.read.parquet(s"$indexDir/centroids")
+        .coalesce(1).write.parquet(s"$tmp/centroids")
+      // an empty-corpus index has a centroid table but no cells
+      // directory (writeIvfIndex's empty-model degrade) — compaction
+      // then only clears tombstones
+      if (StandingIndex.exists(spark, s"$indexDir/cells")) {
+        val cells = spark.read.parquet(s"$indexDir/cells")
+          .withColumn("cell", col("cell").cast("long"))
+        StandingIndex.dropRetracted(cells,
+            StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
+          .write.partitionBy("cell").parquet(s"$tmp/cells")
+      }
     }
-    Retrieval.guardTombstonesUnchanged(spark, indexDir, tombSnap)
-    Retrieval.guardedSwapInto(spark, tmp, indexDir, tombSnap)
-  }
 
   /** Probe a MATERIALIZED IVF index ([[writeIvfIndex]]) — identical
     * results to [[ivfTopK]] on the same parameters (the centroid model
@@ -860,9 +827,8 @@ object Similarity {
     // merge-on-read tombstones ([[retractFromIvfIndex]]): retracted
     // members drop from the probed slice via a broadcast anti join —
     // the tombstone set is deletion-request-sized, never corpus-sized
-    val assigned = ivfTombstonesOpt(spark, indexDir)
-      .fold(cells)(t => cells.join(
-        broadcast(t), cells("neighbor_id") === t("vec_id"), "left_anti"))
+    val assigned = StandingIndex.dropRetracted(cells,
+      StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
     ivfProbe(assigned, centroids, queries, k, nProbe, idCol, vecCol)
   }
 
@@ -1056,60 +1022,30 @@ object Similarity {
     graft.io.BatchFiles.land(c, s"$indexDir/vecs", batchId)
   }
 
-  /** RETRACT vectors from the binary band index — the
-    * [[retractFromIvfIndex]] contract applied to the 1-bit family: the
-    * retracted ids land as a TOMBSTONE table (`deleted/`, |batch| rows,
-    * nothing rescanned, duplicate retracts absorbed by the distinct
-    * view), and [[binaryTopKIndexed]] applies them merge-on-read — the
-    * broadcast anti join runs on the band-collision candidate slice,
-    * never the full signature table, so serving cost still rides the
-    * collisions. Probes under tombstones are EXACTLY a rebuild over the
-    * survivors (oracle-gated); [[compactBinaryIndex]] applies the
-    * tombstones physically.
+  /** RETRACT vectors from the binary band index as [[StandingIndex]]
+    * tombstones: [[binaryTopKIndexed]] anti-joins the band-collision
+    * candidate slice, never the full signature table, so serving cost
+    * still rides the collisions. Probes under tombstones are EXACTLY a
+    * rebuild over the survivors (oracle-gated); [[compactBinaryIndex]]
+    * applies the tombstones physically.
     */
   def retractFromBinaryIndex(
       vecIds: DataFrame, indexDir: String, idCol: String = "vec_id"): Unit =
-    vecIds.select(col(idCol).as("vec_id")).distinct()
-      .write.mode("append").parquet(s"$indexDir/deleted")
+    StandingIndex.retract(vecIds.select(col(idCol).as("vec_id")), indexDir)
 
-  /** Squash the binary index back to the canonical compacted layout:
-    * `sigs/` and `vecs/` drop tombstoned rows (also collapsing any
-    * [[refreshBinaryIndex]] batch files into one file set), and the new
-    * layout replaces the old through ONE root-dir swap with the
-    * racing-retraction guard ([[Retrieval.guardedSwapInto]] — a
-    * retraction landing during the compaction rolls the swap back
-    * loudly). The CONTENT listing over `sigs/` and `vecs/` is
-    * snapshotted too: an admission batch landing between the
-    * compactor's read and the swap would otherwise be silently
-    * destroyed by the swap, so the swap aborts loudly if the listing
-    * moved — the [[graft.ext.Dedup.compactFingerprintIndex]] guard
-    * applied to both race directions. Same writer/compactor exclusion
-    * contract as [[compactIvfIndex]].
+  /** Squash the binary index ([[StandingIndex.compact]]): `sigs/` and
+    * `vecs/` drop tombstoned rows, also collapsing any
+    * [[refreshBinaryIndex]] batch files into one file set.
     */
-  def compactBinaryIndex(spark: SparkSession, indexDir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    val tmp = indexDir.stripSuffix("/") + ".compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val tombSnap = Retrieval.tombstoneVersion(spark, indexDir)
-    val contentSnap = graft.io.IndexCatalog.contentVersion(spark, s"$indexDir/sigs") +
-      graft.io.IndexCatalog.contentVersion(spark, s"$indexDir/vecs")
-    val tombs = ivfTombstonesOpt(spark, indexDir)
-    val sigs = spark.read.parquet(s"$indexDir/sigs")
-    tombs.fold(sigs)(t => sigs.join(
-        broadcast(t), sigs("neighbor_id") === t("vec_id"), "left_anti"))
-      .write.parquet(s"$tmp/sigs")
-    val vecs = spark.read.parquet(s"$indexDir/vecs")
-    tombs.fold(vecs)(t => vecs.join(
-        broadcast(t), vecs("neighbor_id") === t("vec_id"), "left_anti"))
-      .write.parquet(s"$tmp/vecs")
-    Retrieval.guardTombstonesUnchanged(spark, indexDir, tombSnap)
-    require(graft.io.IndexCatalog.contentVersion(spark, s"$indexDir/sigs") +
-        graft.io.IndexCatalog.contentVersion(spark, s"$indexDir/vecs") == contentSnap,
-      s"compaction aborted: batch files under $indexDir/{sigs,vecs} changed " +
-        "during the compaction (concurrent refresh) — re-run the compaction")
-    Retrieval.guardedSwapInto(spark, tmp, indexDir, tombSnap)
-  }
+  def compactBinaryIndex(spark: SparkSession, indexDir: String): Unit =
+    StandingIndex.compact(spark, indexDir) { tmp =>
+      val tombs = StandingIndex.tombstones(spark, indexDir, "vec_id")
+      Seq("sigs", "vecs").foreach { t =>
+        StandingIndex.dropRetracted(
+            spark.read.parquet(s"$indexDir/$t"), tombs, "neighbor_id", "vec_id")
+          .write.parquet(s"$tmp/$t")
+      }
+    }
 
   /** Radius-bounded binary ANN served from the MATERIALIZED band index
     * — the indexed twin the unpruned [[binaryTopK]] scan lacked:
@@ -1161,9 +1097,8 @@ object Similarity {
     // merge-on-read tombstones ([[retractFromBinaryIndex]]): retracted
     // members drop from the band-collision candidate slice via a
     // broadcast anti join — deletion-request-sized, never corpus-sized
-    val live = ivfTombstonesOpt(spark, indexDir)
-      .fold(cand)(t => cand.join(
-        broadcast(t), cand("neighbor_id") === t("vec_id"), "left_anti"))
+    val live = StandingIndex.dropRetracted(cand,
+      StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
     val wHam = Window.partitionBy("query_id").orderBy(col("ham").asc, col("neighbor_id").asc)
     val slice = live
       .withColumn("rk", row_number().over(wHam))

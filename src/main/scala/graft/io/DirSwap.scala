@@ -3,8 +3,9 @@ package graft.io
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Checked directory-swap primitives shared by the engine's
-  * write-tmp-then-swap sinks ([[Compactor]], [[IndexedIngest]], the
-  * inverted-index refresh in [[graft.ext.Retrieval]]). Hadoop's
+  * write-tmp-then-swap sinks ([[Compactor]], [[StandingIndex]],
+  * [[IndexedIngest]], the inverted-index refresh in
+  * [[graft.ext.Retrieval]]). Hadoop's
   * `FileSystem.rename` reports failure by returning `false` rather than
   * throwing — an unchecked rename is how a swap silently loses the only
   * copy of a table (rename tmp→dir fails, the data sits in `.old`, and an
@@ -31,8 +32,14 @@ object DirSwap {
     * point of failure loses both copies. There remains a brief window
     * between the two renames where `dest` does not exist — readers racing
     * the swap see old, new, or (rarely) not-found, never a mix of files.
+    *
+    * `checkRetired` sees the retired layout's path (which does not exist
+    * if `dest` did not) after the new one is in place; if it throws, the
+    * swap rolls back — the new layout returns to `tmp`, the old one to
+    * `dest` — and the exception propagates.
     */
-  def swapInto(fs: FileSystem, tmp: Path, dest: Path, oldSuffix: String = ".swap-old"): Unit = {
+  def swapInto(fs: FileSystem, tmp: Path, dest: Path, oldSuffix: String = ".swap-old",
+      checkRetired: Path => Unit = _ => ()): Unit = {
     val old = new Path(dest.toString.stripSuffix("/") + oldSuffix)
     // leftover .old from a crashed prior run: dest still exists, so the
     // old copy is superseded garbage — clear it so the rename below has
@@ -53,6 +60,13 @@ object DirSwap {
     }
     if (!fs.exists(dest))
       throw new java.io.IOException(s"swap left no directory at $dest")
+    try checkRetired(old)
+    catch {
+      case e: Exception =>
+        renameOrFail(fs, dest, tmp)
+        if (fs.exists(old)) renameOrFail(fs, old, dest)
+        throw e
+    }
     fs.delete(old, true)
   }
 

@@ -30,7 +30,7 @@ import graft.ext.Similarity
   *
   * Same new-ids-only admission contract as every standing index (dedup
   * upstream decides identity). Writer/compactor exclusion as documented
-  * on the compactors.
+  * on [[graft.io.StandingIndex]].
   */
 object AnnIngest {
 

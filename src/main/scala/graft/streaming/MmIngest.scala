@@ -24,8 +24,8 @@ import graft.ext.Multimodal
   * layout IS the batch layout and every batch verb (retraction
   * tombstones, [[Multimodal.compactMmIndex]]) composes with the stream
   * unchanged. Same new-asset_ids-only admission contract as every
-  * standing index. Writer/compactor exclusion as documented on the
-  * compactors.
+  * standing index. Writer/compactor exclusion as documented on
+  * [[graft.io.StandingIndex]].
   */
 object MmIngest {
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{Retrieval, TextAnalysis}
-import graft.io.BatchFiles
+import graft.io.{BatchFiles, StandingIndex}
 
 /** Streaming maintenance of the INVERTED INDEX — the
   * [[IndexedIngest]] contract applied to retrieval: each micro-batch of
@@ -27,8 +27,8 @@ import graft.io.BatchFiles
   * (one aggregate over |docs| rows). Replaying any batch then converges
   * every table to the same file set — the LSM posture: writers append
   * immutable segments, readers merge, compaction is a separate offline
-  * concern ([[graft.io.Compactor]] can squash the log back to the
-  * batch layout at any time).
+  * concern ([[Retrieval.compactIndex]] squashes the log back to the
+  * batch layout).
   */
 object RetrievalIngest {
 
@@ -94,9 +94,8 @@ object RetrievalIngest {
     val dlen = spark.read.parquet(s"$indexDir/dlen")
     // retraction composes with the log layout: stats derive from the
     // LIVE doc lengths and bm25From applies the tombstones merge-on-read
-    val tombs = Retrieval.tombstonesOpt(spark, indexDir)
-    val dlenLive = tombs.fold(dlen)(t =>
-      dlen.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    val tombs = StandingIndex.tombstones(spark, indexDir, "doc_id")
+    val dlenLive = StandingIndex.dropRetracted(dlen, tombs, "doc_id")
     Retrieval.bm25From(
       spark.read.parquet(s"$indexDir/tf"),
       spark.read.parquet(s"$indexDir/df").groupBy("tok").agg(sum("df").as("df")),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{Dedup, Hashing}
-import graft.io.BatchFiles
+import graft.io.{BatchFiles, StandingIndex}
 
 /** Streaming maintenance of the SPAN-MASK index — the
   * [[RetrievalIngest]] contract applied to sub-document dedup: each
@@ -104,46 +104,25 @@ object SpanMaskIngest {
     * gram (summing per-batch partials is EXACT because batches are
     * disjoint doc sets — the new-doc_ids-only admission contract); and
     * `spans/`, a serve-time VIEW in the streaming layout, MATERIALIZES
-    * from the compacted tables. The whole new layout replaces the old
-    * through ONE root-dir swap ([[graft.io.DirSwap.swapInto]]), guarded
-    * like the positional compactor: the index listing is fingerprinted
-    * before the read and re-checked before the swap, so a batch landing
-    * during the compaction aborts it loudly instead of being silently
-    * dropped with the old root. After compaction the index serves
+    * from the compacted tables. The new layout replaces the old through
+    * [[StandingIndex.compact]]. After compaction the index serves
     * through the batch-layout paths — [[Dedup.incrementalSpans]],
     * [[Dedup.retractSpans]], the standing `spans/` table — and
     * [[servedSpans]] keeps working (one-partial df), so the stream can
     * resume into it.
-    *
-    * Writer/compactor exclusion still applies across a REPLAY boundary:
-    * a pre-compaction batch replayed AFTER compaction would find none
-    * of its original `batch<id>_*` files (they were squashed) and land
-    * its rows a second time — run compaction only when no ingest
-    * checkpoint can replay pre-compaction batch ids, the same contract
-    * [[graft.ext.Retrieval.compactIndex]] documents.
     */
   def compactToBatchLayout(spark: SparkSession, indexDir: String, n: Int,
-      minDf: Long = 2L): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    val tmp = indexDir.stripSuffix("/") + ".compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val snap = graft.io.IndexCatalog.contentVersion(spark, indexDir)
-    spark.read.parquet(s"$indexDir/postings").write.parquet(s"$tmp/postings")
-    spark.read.parquet(s"$indexDir/df")
-      .groupBy("g").agg(sum("df").as("df"))
-      .write.parquet(s"$tmp/df")
-    val postings = spark.read.parquet(s"$tmp/postings")
-    val dup = spark.read.parquet(s"$tmp/df")
-      .filter(col("df") >= minDf).select("g")
-    Dedup.spansFromCovered(
-      postings.join(dup, Seq("g")).select("doc_id", "pos"), n)
-      .write.parquet(s"$tmp/spans")
-    if (graft.io.IndexCatalog.contentVersion(spark, indexDir) != snap)
-      throw new java.io.IOException(
-        s"span-mask compaction aborted: a batch landed under $indexDir during " +
-          "the compaction — re-run after the writer quiesces")
-    graft.io.DirSwap.swapInto(fs,
-      new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(indexDir))
-  }
+      minDf: Long = 2L): Unit =
+    StandingIndex.compact(spark, indexDir) { tmp =>
+      spark.read.parquet(s"$indexDir/postings").write.parquet(s"$tmp/postings")
+      spark.read.parquet(s"$indexDir/df")
+        .groupBy("g").agg(sum("df").as("df"))
+        .write.parquet(s"$tmp/df")
+      val postings = spark.read.parquet(s"$tmp/postings")
+      val dup = spark.read.parquet(s"$tmp/df")
+        .filter(col("df") >= minDf).select("g")
+      Dedup.spansFromCovered(
+        postings.join(dup, Seq("g")).select("doc_id", "pos"), n)
+        .write.parquet(s"$tmp/spans")
+    }
 }

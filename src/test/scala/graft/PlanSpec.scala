@@ -14,6 +14,25 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.sparkPlan.toString
 
+  /** The physical plan of the last `localCheckpoint` action `body` runs. */
+  private def lastCheckpointPlan(body: => Unit): String = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.sparkPlan.toString)
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftShims.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!plans.isEmpty, "no localCheckpoint action ran")
+    plans.toArray(Array.empty[String]).last
+  }
+
   test("q_filter_project pushes predicates into the parquet scan") {
     val p = plan("q_filter_project")
     assert(p.contains("PushedFilters:"))
@@ -137,15 +156,13 @@ class PlanSpec extends AnyFunSuite {
     // soak then showed the memory ceiling of this family is the per-doc
     // ObjectHashAggregate (collect_list), IDENTICAL under both join
     // strategies — so merge bought no safety and cost the sort.
-    // materialize=false: the production form ends in an eager
-    // localCheckpoint, whose returned plan is just the checkpoint scan
+    // both end in an eager localCheckpoint, whose returned plan is just
+    // the checkpoint scan: read the interior plan from that action
     val docs = Tables.documents(spark, sf)
-    for ((name, df) <- Seq(
-        "jaccardPrefixPairs" ->
-          graft.ext.Dedup.jaccardPrefixPairs(docs, 3, 0.8, materialize = false),
-        "containmentPrefixPairs" ->
-          graft.ext.Dedup.containmentPrefixPairs(docs, 3, 0.5, materialize = false))) {
-      val p = df.queryExecution.sparkPlan.toString
+    for ((name, run) <- Seq(
+        "jaccardPrefixPairs" -> (() => graft.ext.Dedup.jaccardPrefixPairs(docs, 3, 0.8)),
+        "containmentPrefixPairs" -> (() => graft.ext.Dedup.containmentPrefixPairs(docs, 3, 0.5)))) {
+      val p = lastCheckpointPlan(run())
       assert(p.contains("ShuffledHashJoin"),
         s"$name candidate join must be a shuffled hash join on the hashed keys")
       assert(p.contains("SortMergeJoin"),

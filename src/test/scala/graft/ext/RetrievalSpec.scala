@@ -173,16 +173,16 @@ class RetrievalSpec extends AnyFunSuite {
       docs.filter(col("doc_id") < 5).select("doc_id"), dir)
     // simulate the race: a retraction lands AFTER the compactor's
     // snapshot; the guard must refuse the swap (prior layout intact)
-    val snap = Retrieval.tombstoneVersion(spark, dir)
+    val snap = graft.io.StandingIndex.tombstoneVersion(spark, dir)
     Retrieval.retractFromPositionalIndex(
       docs.filter(col("doc_id") === 7).select("doc_id"), dir)
     val e = intercept[java.io.IOException] {
-      Retrieval.guardTombstonesUnchanged(spark, dir, snap)
+      graft.io.StandingIndex.guardTombstonesUnchanged(spark, dir, snap)
     }
     assert(e.getMessage.contains("concurrent retraction"))
     // an unchanged tombstone set passes
-    Retrieval.guardTombstonesUnchanged(
-      spark, dir, Retrieval.tombstoneVersion(spark, dir))
+    graft.io.StandingIndex.guardTombstonesUnchanged(
+      spark, dir, graft.io.StandingIndex.tombstoneVersion(spark, dir))
   }
 
   test("combined-layout compaction keeps the sibling tables: BM25 and phrase both serve after it") {
@@ -228,7 +228,7 @@ class RetrievalSpec extends AnyFunSuite {
     Retrieval.writePositionalIndex(docs, dir)
     Retrieval.retractFromPositionalIndex(
       docs.filter(col("doc_id") < 5).select("doc_id"), dir)
-    val snap = Retrieval.tombstoneVersion(spark, dir)
+    val snap = graft.io.StandingIndex.tombstoneVersion(spark, dir)
     // the compaction's rewrite, computed under the snapshot
     val tmp = dir.stripSuffix("/") + ".compact"
     val tombs = spark.read.parquet(s"$dir/deleted").select("doc_id").distinct()
@@ -241,7 +241,7 @@ class RetrievalSpec extends AnyFunSuite {
       docs.filter(col("doc_id") === 7).select("doc_id"), dir)
     val before = canon(dir, "deleted")
     val e = intercept[java.io.IOException] {
-      Retrieval.guardedSwapInto(spark, tmp, dir, snap)
+      graft.io.StandingIndex.guardedSwapInto(spark, tmp, dir, snap)
     }
     assert(e.getMessage.contains("rolled back"))
     // the rollback restored the PRE-swap layout: all tombstones intact
