@@ -21,20 +21,22 @@ import org.apache.spark.sql.functions._
   */
 object LocaleNumber {
 
-  private val InvalidMarkers = Seq("-", "--", "---", "ND", "N/D", "nan", "NaN", "")
-
-  /** String → normalized en-US numeric string ('' = missing). */
+  /** String → normalized en-US numeric string ('' = missing).
+    *
+    * One strip regex and one `translate` serve every branch: `t` deletes
+    * the dots and maps ',' to '.', which is the comma rewrite and, when
+    * there is no comma, the multi-dot concat too. So `t` is the answer
+    * when `stripped` holds a comma (then `t` holds a '.') or at least two
+    * dots (then `t` is that many characters shorter); otherwise `stripped`
+    * is. The invalid markers need no branch of their own: none holds a
+    * digit, '.' or ',', so each strips to '' like null does, and '' falls
+    * to the `otherwise`. The one condition reads `stripped` and `t` twice,
+    * so codegen computes each once per row and the result shares them.
+    */
   def parse(c: Column): Column = {
-    val s = trim(coalesce(c.cast("string"), lit("")))
-    val stripped = regexp_replace(s, "[^0-9.,]", "")
-    val nDots = size(split(stripped, "\\.", -1)) - 1
-    when(s.isin(InvalidMarkers: _*), lit(""))
-      .when(stripped === "", lit(""))
-      .when(stripped.contains(",") && stripped.contains("."),
-        regexp_replace(regexp_replace(stripped, "\\.", ""), ",", "."))
-      .when(stripped.contains(","), regexp_replace(stripped, ",", "."))
-      .when(nDots > 1, regexp_replace(stripped, "\\.", ""))
-      .otherwise(stripped)
+    val stripped = regexp_replace(coalesce(c.cast("string"), lit("")), "[^0-9.,]", "")
+    val t = translate(stripped, ",.", ".")
+    when(t.contains(".") || length(stripped) - length(t) > 1, t).otherwise(stripped)
   }
 
   /** Parse + load-stage cast: '' → NULL → DoubleType. */

@@ -22,11 +22,11 @@ object IdaPipeline {
     */
   def cleanFile(raw: DataFrame, servico: String): DataFrame = {
     val indexed = Reshape.withRowIndex(raw)
-    val headerIdx = Reshape.findHeaderRow(indexed).getOrElse(
+    val (headerIdx, headerCells) = Reshape.findHeaderRow(indexed).getOrElse(
       throw new IllegalArgumentException("no header row found"))
     val table = Reshape.dropAllNullRows(
       Reshape.dropMetadataRows(
-        Reshape.promoteHeader(indexed, headerIdx)))
+        Reshape.promoteCells(indexed, headerIdx, headerCells)))
     val trimmed = trimDecimalCells(table.drop("_row_idx"))
     val normalized = Reshape.normalizeDateColumnNames(trimmed)
     Reshape.withServiceTag(Reshape.unpivotMonths(normalized), servico)
@@ -41,12 +41,22 @@ object IdaPipeline {
 
   /** Consolidate cleaned per-file frames into the canonical typed output
     * (main.py:644-704 + the load-stage coercions).
+    *
+    * The `VALOR` chain parse → trim → parse → cast is staged: one
+    * projection per step, each reading the column the step before wrote.
+    * Every step refers to its input several times, so the same chain
+    * written as one nested Column expands to hundreds of regex nodes per
+    * row (each copy of the inner step evaluated again). Catalyst's
+    * CollapseProject does not inline a non-trivial expression into a
+    * projection that refers to it more than once, so the stages survive
+    * optimization and each step runs once per row.
     */
   def consolidate(frames: Seq[DataFrame]): DataFrame = {
     val unioned = Consolidate.distinctRows(Consolidate.unionAll(frames))
     val parsed = unioned
-      .withColumn("VALOR", LocaleNumber.parseToDouble(
-        CleanValues.trimTrailingZeros(LocaleNumber.parse(col("VALOR")))))
+      .withColumn("VALOR", LocaleNumber.parse(col("VALOR")))
+      .withColumn("VALOR", CleanValues.trimTrailingZeros(col("VALOR")))
+      .withColumn("VALOR", LocaleNumber.parseToDouble(col("VALOR")))
       .withColumn("REFERENCIA_MES",
         to_date(concat(col("REFERENCIA_MES"), lit("-01")), "yyyy-MM-dd"))
     val renamed = Consolidate.renameCanonical(parsed)

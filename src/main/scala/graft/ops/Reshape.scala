@@ -27,22 +27,26 @@ object Reshape {
     df.sparkSession.createDataFrame(rdd, schema)
   }
 
-  /** First row index whose concatenated cells contain any marker
-    * (case-insensitive) — the reference's header scan (main.py:202-218).
-    * Returns None when no row matches. One scalar collected to the driver.
+  /** The first row whose concatenated cells contain any marker
+    * (case-insensitive) — the reference's header scan (main.py:202-218) —
+    * as its row index and its data cells. One action (a top-1 by index
+    * over the matching rows), so the caller can promote the header
+    * without reading the file again. None when no row matches.
     */
   def findHeaderRow(
       df: DataFrame,
       markers: Seq[String] = Seq("GRUPO ECONÔMICO", "GRUPO_ECON"),
-      idxCol: String = "_row_idx"): Option[Long] = {
+      idxCol: String = "_row_idx"): Option[(Long, Seq[Any])] = {
     val dataCols = df.columns.filter(_ != idxCol)
     val concat = upper(concat_ws(" ", dataCols.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
     val pred = markers.map(m => concat.contains(m.toUpperCase)).reduce(_ || _)
     df.filter(pred)
-      .agg(min(col(idxCol)))
+      .orderBy(col(idxCol))
+      .limit(1)
+      .select(col(idxCol) +: dataCols.map(col): _*)
       .collect()
       .headOption
-      .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+      .map(r => (r.getLong(0), r.toSeq.tail))
   }
 
   /** Promote row `headerIdx` to column names and keep only later rows
@@ -51,8 +55,17 @@ object Reshape {
     */
   def promoteHeader(df: DataFrame, headerIdx: Long, idxCol: String = "_row_idx"): DataFrame = {
     val dataCols = df.columns.filter(_ != idxCol)
-    val headerRow = df.filter(col(idxCol) === headerIdx).select(dataCols.map(col): _*).collect()(0)
-    val raw = headerRow.toSeq.map(v => Option(v).map(_.toString.trim).getOrElse(""))
+    val cells = df.filter(col(idxCol) === headerIdx).select(dataCols.map(col): _*).collect()(0).toSeq
+    promoteCells(df, headerIdx, cells, idxCol)
+  }
+
+  /** [[promoteHeader]] with the header cells already in hand (from
+    * [[findHeaderRow]]): no action.
+    */
+  private[ops] def promoteCells(
+      df: DataFrame, headerIdx: Long, cells: Seq[Any], idxCol: String = "_row_idx"): DataFrame = {
+    val dataCols = df.columns.filter(_ != idxCol)
+    val raw = cells.map(v => Option(v).map(_.toString.trim).getOrElse(""))
     val named = raw.zipWithIndex.map { case (n, i) => if (n.isEmpty) s"_c$i" else n }
     val deduped = named.zipWithIndex.map { case (n, i) =>
       if (named.indexOf(n) == i) n else s"${n}_$i"
@@ -68,17 +81,25 @@ object Reshape {
     "ÍNDICE DE DESEMPENHO NO ATENDIMENTO", "ANATEL")
 
   /** Drop rows where ANY column contains ANY marker, case-insensitive
-    * (main.py:240-251) — a fold of pure Catalyst predicates, no UDF.
+    * (main.py:240-251) — pure Catalyst predicates, no UDF.
+    *
+    * The markers are tested against ONE string per row: the upper-cased
+    * cells joined by NUL, so the filter holds one `contains` per marker
+    * instead of one per (column, marker) pair. That is exact, not an
+    * approximation: `upper` maps each character on its own, so the
+    * upper-cased join is the join of the upper-cased cells, and a marker
+    * holds no NUL (none of the reference's does), so no match can straddle
+    * two cells. The predicate is
+    * written as a conjunction of negations, leaving BooleanSimplification
+    * no NOT to push down one optimizer pass at a time.
     */
   def dropMetadataRows(
       df: DataFrame,
       markers: Seq[String] = MetadataMarkers,
       idxCol: String = "_row_idx"): DataFrame = {
     val dataCols = df.columns.filter(_ != idxCol)
-    val hit = (for { c <- dataCols; m <- markers }
-      yield upper(coalesce(col(c).cast("string"), lit(""))).contains(m.toUpperCase))
-      .reduce(_ || _)
-    df.filter(!hit)
+    val row = upper(concat_ws("\u0000", dataCols.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
+    df.filter(markers.map(m => !row.contains(m.toUpperCase)).reduce(_ && _))
   }
 
   /** dropna(how='all') on the data columns (main.py:254). */

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Contains, Expression, RegExpReplace}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions: the properties that make these queries
@@ -407,6 +410,73 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("hashpartitioning(grupo_economico"),
       "LAG window must partition by grupo_economico")
     assert(p.contains("HashAggregate"))
+  }
+
+  /** The three files of the IDA fixture release, read as q_ida_e2e_csv
+    * reads them.
+    */
+  private def idaFixtureFiles: Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    val dir = graft.queries.RefPipelinePack.idaFixtureDir
+    Seq(
+      "SMP" -> spark.read.format("ods").load(s"$dir/smp_2015.ods"),
+      "STFC" -> spark.read.format("ods").load(s"$dir/stfc_2015.ods"),
+      "SCM" -> graft.io.CsvEncodingReader.read(spark, s"$dir/scm_2015.tsv"))
+  }
+
+  private def countExprs(plan: LogicalPlan)(pf: PartialFunction[Expression, Unit]): Int =
+    plan.collect { case n => n.expressions.map(_.collect(pf).size).sum }.sum
+
+  test("IDA cleanFile: the metadata filter holds one contains per marker") {
+    // per (column, marker) contains made Catalyst's BooleanSimplification
+    // iterate once per pushed-down NOT; the NUL-joined row string holds 6
+    idaFixtureFiles.foreach { case (servico, raw) =>
+      val p = graft.ops.IdaPipeline.cleanFile(raw, servico).queryExecution.optimizedPlan
+      val n = countExprs(p) { case _: Contains => }
+      assert(n >= 1 && n <= 8, s"$servico: $n Contains in the optimized plan:\n$p")
+    }
+  }
+
+  test("IDA consolidate: the VALOR parse chain is staged, a few regexes per row") {
+    // records the largest RegExpReplace count over every plan Catalyst
+    // optimizes while the release is consolidated and checkpointed —
+    // including the sort under the sequential id, which `.rdd` plans
+    // without any QueryExecutionListener seeing it
+    val cleaned = idaFixtureFiles.map { case (servico, raw) =>
+      graft.ops.IdaPipeline.cleanFile(raw, servico).localCheckpoint()
+    }
+    var maxRegex = (0, "")
+    val probe = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = synchronized {
+        val n = countExprs(plan) { case _: RegExpReplace => }
+        if (n > maxRegex._1) maxRegex = (n, plan.toString)
+        plan
+      }
+    }
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    val before = exp.extraOptimizations
+    exp.extraOptimizations = before :+ probe
+    val rows =
+      try graft.ops.IdaPipeline.consolidate(cleaned).localCheckpoint().collect()
+      finally exp.extraOptimizations = before
+    assert(rows.nonEmpty)
+    val (n, worst) = maxRegex
+    assert(n >= 1 && n <= 12, s"$n RegExpReplace in one optimized consolidate plan:\n$worst")
+  }
+
+  test("IDA cleanFile locates and promotes the header in one job (single-file ODS read)") {
+    val (servico, raw) = idaFixtureFiles.head
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftShims.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.ops.IdaPipeline.cleanFile(raw, servico)
+      org.apache.spark.sql.GraftShims.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 1, s"${jobs.get} jobs to index, locate and promote the header")
   }
 
   test("dedup_span_mask: equi joins only, per-doc windows, no cartesian") {

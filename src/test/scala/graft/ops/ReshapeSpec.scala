@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -29,8 +30,10 @@ class ReshapeSpec extends AnyFunSuite {
 
   test("full clean path: index, locate header, promote, drop metadata/null rows") {
     val indexed = Reshape.withRowIndex(rawDf)
-    val headerIdx = Reshape.findHeaderRow(indexed)
-    assert(headerIdx.contains(3L))
+    val header = Reshape.findHeaderRow(indexed)
+    assert(header.map(_._1).contains(3L))
+    assert(header.map(_._2).contains(
+      Seq("GRUPO ECONÔMICO", "VARIAVEL", "2015-01-01 00:00:00", "2015-02-01 00:00:00")))
 
     val promoted = Reshape.promoteHeader(indexed, 3L)
     assert(promoted.columns.take(4).toSeq ==
@@ -44,6 +47,85 @@ class ReshapeSpec extends AnyFunSuite {
   test("metadata rows are dropped case-insensitively from any column") {
     val indexed = Reshape.withRowIndex(rawDf)
     assert(Reshape.dropMetadataRows(indexed).count() == 4) // 2 marker rows gone
+  }
+
+  test("findHeaderRow: None when no row matches") {
+    val indexed = Reshape.withRowIndex(rawDf)
+    assert(Reshape.findHeaderRow(indexed, markers = Seq("NO SUCH HEADER")).isEmpty)
+  }
+
+  /** The per-cell metadata filter `dropMetadataRows` replaced, kept here
+    * as the reference: drop a row when any cell, upper-cased, contains
+    * any upper-cased marker.
+    */
+  private def perCellReference(df: DataFrame, markers: Seq[String] = Reshape.MetadataMarkers): DataFrame = {
+    val dataCols = df.columns.filter(_ != "_row_idx")
+    val hit = (for { c <- dataCols; m <- markers }
+      yield upper(coalesce(col(c).cast("string"), lit(""))).contains(m.toUpperCase))
+      .reduce(_ || _)
+    df.filter(!hit)
+  }
+
+  private def indexedRows(rows: Seq[Seq[String]], nCols: Int): DataFrame = {
+    val schema = StructType((0 until nCols).map(i => StructField(s"_c$i", StringType)))
+    Reshape.withRowIndex(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(r => Row.fromSeq(r)), numSlices = 2), schema))
+  }
+
+  private def keptIdx(df: DataFrame): Seq[Long] =
+    df.select("_row_idx").collect().map(_.getLong(0)).toSeq.sorted
+
+  test("metadata filter: a marker split across two cells is kept, like the per-cell reference") {
+    val df = indexedRows(Seq(
+      Seq("SERVI", "ÇO: SMP", null),
+      Seq("ANA", "TEL", "x"),
+      Seq("PARA MAIORES", " INFORMAÇÕES", null)), 3)
+    assert(keptIdx(Reshape.dropMetadataRows(df)) == Seq(0L, 1L, 2L))
+    assert(keptIdx(perCellReference(df)) == Seq(0L, 1L, 2L))
+  }
+
+  test("metadata filter: a marker in any cell, in any letter case, drops the row") {
+    val df = indexedRows(Seq(
+      Seq("serviço: smp", null, null),
+      Seq(null, "Fonte: Anatel", null),
+      Seq(null, null, "período: 2015"),
+      Seq("CLARO", "IDA", "anatel"),
+      Seq("CLARO", "IDA", "87,50")), 3)
+    assert(keptIdx(Reshape.dropMetadataRows(df)) == Seq(4L))
+    assert(keptIdx(perCellReference(df)) == Seq(4L))
+  }
+
+  test("metadata filter: null cells never match and never hide a match") {
+    val df = indexedRows(Seq(
+      Seq(null, null, null),
+      Seq(null, null, "ANATEL"),
+      Seq("", null, "")), 3)
+    assert(keptIdx(Reshape.dropMetadataRows(df)) == Seq(0L, 2L))
+    assert(keptIdx(perCellReference(df)) == Seq(0L, 2L))
+  }
+
+  test("metadata filter agrees with the per-cell reference on seeded random rows") {
+    // cells are drawn from marker fragments (so markers split across
+    // cells often), whole markers in random letter case, plain text,
+    // empty strings and nulls
+    val rnd = new scala.util.Random(20150101L)
+    val fragments = Reshape.MetadataMarkers.flatMap { m =>
+      val cut = 1 + rnd.nextInt(m.length - 1)
+      Seq(m.take(cut), m.drop(cut))
+    } ++ Seq("CLARO", "87,50", "IDA", " ", "", ":")
+    def randomCase(s: String) =
+      s.map(ch => if (rnd.nextBoolean()) ch.toLower else ch.toUpper)
+    def cell(): String = rnd.nextInt(10) match {
+      case 0 => null
+      case 1 => randomCase(Reshape.MetadataMarkers(rnd.nextInt(Reshape.MetadataMarkers.size)))
+      case 2 => randomCase(fragments(rnd.nextInt(fragments.size)) + fragments(rnd.nextInt(fragments.size)))
+      case _ => randomCase(fragments(rnd.nextInt(fragments.size)))
+    }
+    val nCols = 5
+    val df = indexedRows(Seq.fill(400)(Seq.fill(nCols)(cell())), nCols)
+    val expected = keptIdx(perCellReference(df))
+    assert(expected.size > 40 && expected.size < 360, s"degenerate sample: ${expected.size} kept")
+    assert(keptIdx(Reshape.dropMetadataRows(df)) == expected)
   }
 
   test("date column names normalize to YYYY-MM and unpivot goes long") {
