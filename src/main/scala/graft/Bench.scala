@@ -60,26 +60,10 @@ object Bench {
       }
       pass(); math.min(pass(), pass())
     }
-    // Keep the line compact (3-decimal seconds, numeric sf): the driver
-    // captures only a bounded TAIL of stdout, and with 100+ queries the
-    // line exceeds that window — so the headline total/unit/sf go LAST,
-    // guaranteeing the captured tail always ends with them even when the
-    // front of the per-query map is cut off.
-    def fmt(v: Double): String = f"$v%.3f"
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0.1")
-    val line = s"""{"queries":$qs,"calib_sec":${fmt(calib)},"calib_mt_sec":${fmt(calibMt)},"metric":"total","value":${fmt(total)},"unit":"sec","sf":$sfNum}"""
+    val (line, summary) = jsonLines(results, calib, calibMt, sfNum)
     println(line)
-    // A totals-only summary as the LAST stdout line: the driver's tail
-    // window is ~2 KiB, so the full per-query line above never parses
-    // there (BENCH_r15/r16 recorded "parsed": null). This compact line
-    // always lands whole inside the tail; the complete per-query map
-    // lives in the self-artifact below.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":$sfNum,""" +
-      s""""calib_sec":${fmt(calib)},"calib_mt_sec":${fmt(calibMt)},""" +
-      s""""n_queries":${results.size}}""")
+    println(summary)
     // The COMPLETE per-query artifact, self-emitted: the driver's
     // BENCH_r{N}.json capture retains only a bounded stdout tail (r12
     // kept 76 of 263 per-query numbers), so cross-round per-query
@@ -95,17 +79,53 @@ object Bench {
     spark.stop()
   }
 
+  /** The full line (also the self-artifact) and the closing summary line.
+    *
+    * Keep the full line compact (3-decimal seconds, numeric sf): the
+    * driver captures only a bounded TAIL of stdout, and with 100+ queries
+    * the line exceeds that window — so the headline total/unit/sf go
+    * LAST, guaranteeing the captured tail always ends with them even when
+    * the front of the per-query map is cut off. `failed` names every
+    * query that threw in any pass; its time is not a query time.
+    *
+    * The summary is a totals-only line printed LAST: the driver's tail
+    * window is ~2 KiB, so the full per-query line never parses there
+    * (BENCH_r15/r16 recorded "parsed": null). This compact line always
+    * lands whole inside the tail; the complete per-query map lives in the
+    * self-artifact.
+    */
+  def jsonLines(
+      results: Seq[(String, Double, Boolean)],
+      calib: Double,
+      calibMt: Double,
+      sfNum: String): (String, String) = {
+    def fmt(v: Double): String = f"$v%.3f"
+    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    val failed = results.collect { case (k, _, true) => k }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = results.map(_._2).sum
+    val line = s"""{"queries":$qs,"failed":$failedJson,"calib_sec":${fmt(calib)},"calib_mt_sec":${fmt(calibMt)},"metric":"total","value":${fmt(total)},"unit":"sec","sf":$sfNum}"""
+    val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":$sfNum,""" +
+      s""""calib_sec":${fmt(calib)},"calib_mt_sec":${fmt(calibMt)},""" +
+      s""""n_queries":${results.size},"n_failed":${failed.size}}"""
+    (line, summary)
+  }
+
   /** The bench protocol over `queries`, in order: one untimed warm-up
     * pass, then two timed passes, per-query minimum. A query that throws
-    * is reported on stderr and keeps its elapsed time.
+    * is reported on stderr, keeps its elapsed time and is flagged failed
+    * (the third field) if it threw in any pass.
     */
   def timeQueries(
       spark: SparkSession,
       sfDir: String,
-      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[(String, Double)] = {
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[(String, Double, Boolean)] = {
+    val failed = scala.collection.mutable.Set[String]()
     def run(name: String, fn: (SparkSession, String) => DataFrame): Unit =
       try fn(spark, sfDir).count()
       catch { case e: Throwable =>
+        failed += name
         System.err.println(s"[bench] $name failed: ${Verify.rootCause(e)}") }
     queries.foreach { case (name, fn) => run(name, fn) }
 
@@ -119,6 +139,6 @@ object Bench {
       name -> (System.nanoTime() - t0) / 1e9
     }
     val (p1, p2) = (timedPass(), timedPass())
-    p1.zip(p2).map { case ((name, a), (_, b)) => name -> math.min(a, b) }
+    p1.zip(p2).map { case ((name, a), (_, b)) => (name, math.min(a, b), failed(name)) }
   }
 }

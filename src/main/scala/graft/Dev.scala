@@ -49,7 +49,8 @@ object Dev {
 
   private def time(spark: SparkSession, sf: String, names: Seq[String]): Unit =
     Bench.timeQueries(spark, sf, names.map(n => n -> SparkEntry.queries(n)))
-      .foreach { case (name, t) => println(f"[time] $name%-32s $t%8.3f s") }
+      .foreach { case (name, t, failed) =>
+        println(f"[time] $name%-32s $t%8.3f s" + (if (failed) " FAILED" else "")) }
 
   private def plans(spark: SparkSession, sf: String, outDir: String, suffix: String,
       names: Seq[String]): Unit = {
@@ -130,7 +131,10 @@ object Dev {
     PlanDocPicks.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sf)
       out.append(s"\n## $name — $why\n\n```\n")
-      out.append(df.queryExecution.explainString(FormattedMode).trim)
+      // normalized like the fingerprints, plus source line numbers, so a
+      // regeneration with no plan change rewrites nothing
+      out.append(PlanFingerprint.normalize(df.queryExecution.explainString(FormattedMode).trim)
+        .replaceAll("\\.scala:\\d+", ".scala:_"))
       out.append("\n```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), out.toString)

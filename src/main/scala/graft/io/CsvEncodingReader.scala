@@ -41,26 +41,33 @@ object CsvEncodingReader {
     }.getOrElse("ISO-8859-1")
   }
 
-  /** All-string, headerless read (header rows are data until the pipeline
-    * promotes them — main.py:320's header=None, dtype=str).
+  /** Widest row [[read]] accepts: 64 columns covers 5 years of a monthly
+    * ANATEL sheet (2 id columns + 12 months per year).
     */
-  def read(
-      spark: SparkSession,
-      path: String,
-      sep: String = "\t",
-      numCols: Int = 64): DataFrame = {
+  private val MaxCols = 64
+
+  /** All-string, tab-separated, headerless read (header rows are data
+    * until the pipeline promotes them — main.py:320's header=None,
+    * dtype=str). The schema holds one column past the 64 accepted: Spark's
+    * PERMISSIVE mode would silently drop the fields of a wider row, so a
+    * value in that column fails the read instead.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
     val enc = detectEncoding(path)
-    val schema = StructType((0 until numCols).map(i => StructField(s"_c$i", StringType)))
+    val schema = StructType((0 to MaxCols).map(i => StructField(s"_c$i", StringType)))
     val raw = spark.read
-      .option("sep", sep)
+      .option("sep", "\t")
       .option("encoding", enc)
       .option("header", "false")
       .schema(schema)
       .csv(path)
-    // drop the all-null column padding beyond the widest actual row
+    // one job counts the non-null cells of every column: it finds the
+    // too-wide rows and the all-null padding past the widest real row
     val nonNullCounts = raw.columns.map(c =>
       org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.col(c)).as(c))
     val counts = raw.agg(nonNullCounts.head, nonNullCounts.tail: _*).collect()(0)
+    require(counts.getLong(MaxCols) == 0,
+      s"$path has rows wider than $MaxCols columns")
     val keep = raw.columns.zipWithIndex.filter { case (_, i) => counts.getLong(i) > 0 }.map(_._1)
     raw.select(keep.map(org.apache.spark.sql.functions.col): _*)
   }

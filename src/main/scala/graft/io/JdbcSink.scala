@@ -3,89 +3,37 @@ package graft.io
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StringType
 
 /** Typed JDBC table sink (SURVEY.md §2.1 S9; reference drops/creates a
   * typed PostgreSQL table and executemany-inserts one transaction at a
-  * time, /root/reference/connect_postgre.py:209-321).
+  * time, connect_postgre.py:209-321).
   *
-  * Spark-first version: `createTableColumnTypes` carries the explicit DDL
-  * types and the JDBC writer inserts per partition with batched
-  * statements — parallel connections instead of the reference's single
-  * connection/transaction.
+  * Spark's JDBC dialect is the type map: at CREATE TABLE Spark maps
+  * every column's Spark type through the URL's `JdbcDialect`
+  * (`JdbcUtils.getJdbcType`). An entry of the `createTableColumnTypes`
+  * write option does not land verbatim either: Spark parses it as Spark
+  * DDL (`CatalystSqlParser.parseTableSchema`) and maps the parsed type
+  * through the same dialect. So the only override that changes the DDL
+  * is a string width: Derby's dialect maps a plain string to CLOB,
+  * PostgreSQL's to TEXT, and `VARCHAR(n)` gives the reference's typed
+  * column on both. Every other column keeps the dialect's type (BIGINT,
+  * DATE, DOUBLE PRECISION / FLOAT8, REAL / FLOAT4, BOOLEAN). The writer
+  * inserts per partition with batched statements — parallel connections
+  * instead of the reference's single connection/transaction.
   */
 object JdbcSink {
 
-  /** Spark type → SQL DDL type, mirroring the reference's
-    * pandas_to_sql_type map (connect_postgre.py:121-147): ints→INTEGER
-    * family, floats→DOUBLE PRECISION/REAL, bool→BOOLEAN,
-    * datetime→TIMESTAMP, everything else a string type — `stringSql`
-    * defaults to PostgreSQL's TEXT; engines without it (Derby) pass a
-    * VARCHAR(n) spelling.
-    */
-  def sqlType(dt: DataType, stringSql: String = "TEXT"): String = dt match {
-    case LongType                    => "BIGINT"
-    case IntegerType                 => "INTEGER"
-    case ShortType | ByteType        => "SMALLINT"
-    case DoubleType                  => "DOUBLE PRECISION"
-    case FloatType                   => "REAL"
-    case BooleanType                 => "BOOLEAN"
-    case TimestampType               => "TIMESTAMP"
-    case DateType                    => "DATE"
-    case d: DecimalType              => s"DECIMAL(${d.precision},${d.scale})"
-    case _                           => stringSql
-  }
+  /** Rows per batched INSERT. */
+  private val BatchSize = 10000
 
-  /** The canonical IDA table's explicit column DDL
-    * (connect_postgre.py:162-169).
+  /** The `createTableColumnTypes` value: `<name> <stringSql>` for each
+    * string column, nothing for the rest (see the object doc).
     */
-  val IdaColumnTypes: String =
-    "id BIGINT, grupo_economico TEXT, servico TEXT, mes_referencia DATE, " +
-      "valor DOUBLE PRECISION, tipo_servico TEXT"
+  private[graft] def sparkColumnTypes(df: DataFrame, stringSql: String): String =
+    df.schema.fields.filter(_.dataType == StringType)
+      .map(f => s"${f.name} $stringSql").mkString(", ")
 
-  /** DDL column list for an arbitrary frame via [[sqlType]] — the
-    * PostgreSQL-facing DDL the reference builds (connect_postgre.py:
-    * 171-207), usable with a plain JDBC statement.
-    */
-  def createTableColumnTypes(df: DataFrame, stringSql: String = "TEXT"): String =
-    df.schema.fields.map(f => s"${f.name} ${sqlType(f.dataType, stringSql)}").mkString(", ")
-
-  /** Column-type list for Spark's `createTableColumnTypes` WRITE option,
-    * which Spark validates as SPARK DDL (not engine DDL — the JDBC
-    * dialect translates to engine types at CREATE TABLE). The only
-    * meaningful overrides are therefore string width and decimal
-    * precision; `stringSql` carries the VARCHAR spelling (PostgreSQL's
-    * dialect would map plain STRING to TEXT, Derby's to CLOB — an
-    * explicit VARCHAR(n) gives the reference's typed-column behavior on
-    * both).
-    */
-  def sparkColumnTypes(df: DataFrame, stringSql: String = "VARCHAR(10000)"): String =
-    df.schema.fields.map { f =>
-      val t = f.dataType match {
-        case LongType             => "BIGINT"
-        case IntegerType          => "INTEGER"
-        case ShortType | ByteType => "SMALLINT"
-        case DoubleType           => "DOUBLE"
-        // REAL, not FLOAT: these strings land verbatim in the engine's
-        // CREATE TABLE, and Derby reads FLOAT as FLOAT(53) ≡ DOUBLE —
-        // breaking read-back schema identity. REAL is 4-byte on every
-        // target engine (and valid Spark DDL for the validation parse).
-        case FloatType            => "REAL"
-        case BooleanType          => "BOOLEAN"
-        case TimestampType        => "TIMESTAMP"
-        case DateType             => "DATE"
-        case d: DecimalType       => s"DECIMAL(${d.precision},${d.scale})"
-        case _                    => stringSql
-      }
-      s"${f.name} $t"
-    }.mkString(", ")
-
-  /** Database bootstrap (SURVEY.md §2.1 S8; connect_postgre.py:68-119):
-    * CREATE DATABASE if absent, via a plain driver-side JDBC connection to
-    * the system database — not a Spark operator, mirrored for surface
-    * completeness. PostgreSQL runs CREATE DATABASE outside transactions,
-    * hence autocommit.
-    */
   /** The parameterized existence probe run against the `postgres` system
     * database (connect_postgre.py:92-96 parity). Exposed so the
     * postgres-dialect branch — unexecutable in this sandbox (no live
@@ -106,6 +54,12 @@ object JdbcSink {
     s"""CREATE DATABASE "$dbName""""
   }
 
+  /** Database bootstrap (SURVEY.md §2.1 S8; connect_postgre.py:68-119):
+    * CREATE DATABASE if absent, via a plain driver-side JDBC connection to
+    * the system database — not a Spark operator, mirrored for surface
+    * completeness. PostgreSQL runs CREATE DATABASE outside transactions,
+    * hence autocommit.
+    */
   def createDatabaseIfAbsent(systemUrl: String, dbName: String, props: Properties): Unit = {
     val conn = java.sql.DriverManager.getConnection(systemUrl, props)
     try {
@@ -145,19 +99,22 @@ object JdbcSink {
       case None => java.sql.DriverManager.getConnection(url, props).close()
     }
 
-  /** Overwrite-write with explicit types and per-partition batching
-    * (DROP+CREATE semantics like the reference's recreate-on-rerun).
+  /** Overwrite-write with the dialect's column types, string columns as
+    * `stringSql`, and per-partition batching (DROP+CREATE semantics like
+    * the reference's recreate-on-rerun).
     */
   def write(
       df: DataFrame,
       url: String,
       table: String,
       props: Properties = new Properties(),
-      batchSize: Int = 10000,
-      stringSql: String = "VARCHAR(10000)"): Unit =
+      stringSql: String = "VARCHAR(10000)"): Unit = {
+    val types = sparkColumnTypes(df, stringSql)
     df.write
       .mode(SaveMode.Overwrite)
-      .option("createTableColumnTypes", sparkColumnTypes(df, stringSql))
-      .option("batchsize", batchSize)
+      .options(if (types.isEmpty) Map.empty[String, String]
+        else Map("createTableColumnTypes" -> types))
+      .option("batchsize", BatchSize)
       .jdbc(url, table, props)
+  }
 }

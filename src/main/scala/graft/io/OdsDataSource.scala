@@ -13,12 +13,13 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 wrapper for the ODS reader (SURVEY.md §7.4 #3):
+/** The one read path from an .ods file to a DataFrame, a DataSource V2
+  * source over [[OdsReader]]'s parse (SURVEY.md §7.4 #3):
   * `spark.read.format("ods").load(path)` — schema inference (positional
-  * all-string _c0.._cN, matching the driver-side [[OdsReader]]), one
-  * input partition per file (spreadsheets are small; the DSv2 value is
-  * catalog/format integration, with many files parallelizing across
-  * tasks, not splitting within one zip).
+  * all-string _c0.._cN, ragged rows null-padded), one input partition
+  * per file (spreadsheets are small; the DSv2 value is catalog/format
+  * integration, with many files parallelizing across tasks, not
+  * splitting within one zip).
   */
 class OdsDataSource extends TableProvider with DataSourceRegister {
 

@@ -6,23 +6,20 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-
-/** Minimal ODS (OpenDocument Spreadsheet) source (SURVEY.md §2.1 S4;
-  * reference reads ODS via pandas+odfpy, /root/reference/main.py:259-276).
+/** ODS (OpenDocument Spreadsheet) parsing (SURVEY.md §2.1 S4; reference
+  * reads ODS via pandas+odfpy, main.py:259-276).
   *
   * No Spark ODS source exists. An .ods file is a zip whose
   * `content.xml` holds `table:table-row` / `table:table-cell` elements;
-  * a StAX parse on the driver suffices for spreadsheet-sized files (they
-  * are small by construction — this is an ingest format, not a data-lake
-  * format). Every cell is read as a STRING, matching the reference's
-  * `dtype=str` read: at this stage column names are still buried in the
-  * data (header promotion happens later in the pipeline).
+  * a StAX parse suffices for spreadsheet-sized files (they are small by
+  * construction — this is an ingest format, not a data-lake format).
+  * Every cell is read as a STRING, matching the reference's `dtype=str`
+  * read: at this stage column names are still buried in the data
+  * (header promotion happens later in the pipeline).
   *
-  * Scale note: a DataSource V2 wrapper would only distribute the zip
-  * parse, which is pointless for files this small; bulk data arrives as
-  * parquet/CSV. Driver-parse + createDataFrame is the honest design.
+  * This object only parses. The one way from an .ods file to a DataFrame
+  * is the DataSource V2 source built on it, [[OdsDataSource]]:
+  * `spark.read.format("ods").load(path)`.
   */
 object OdsReader {
 
@@ -32,12 +29,6 @@ object OdsReader {
     * a row in driver memory. Null filler cells collapse to 1 regardless.
     */
   private val MaxEmptyRepeat = 4096
-
-  /** Read the first sheet of an .ods file as an all-string DataFrame with
-    * positional columns _c0.._cN (ragged rows are null-padded).
-    */
-  def read(spark: SparkSession, path: String): DataFrame =
-    fromRows(spark, readRowsCached(path))
 
   /** Per-JVM parse memo keyed on (path, content digest): the DSv2 path
     * parses each file TWICE per query — once on the driver for
@@ -70,13 +61,6 @@ object OdsReader {
         parsed.synchronized(parsed.put(key, rows))
         rows
     }
-  }
-
-  def fromRows(spark: SparkSession, rows: Seq[Seq[String]]): DataFrame = {
-    val width = if (rows.isEmpty) 0 else rows.map(_.size).max
-    val schema = StructType((0 until width).map(i => StructField(s"_c$i", StringType)))
-    val padded = rows.map(r => Row.fromSeq(r.padTo(width, null)))
-    spark.createDataFrame(spark.sparkContext.parallelize(padded, 1), schema)
   }
 
   /** Unzip → locate content.xml → parse the first table's rows. */

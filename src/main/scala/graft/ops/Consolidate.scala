@@ -87,12 +87,6 @@ object Consolidate {
     df.sparkSession.createDataFrame(out, schema)
   }
 
-  /** Column-name normalizer (connect_postgre.py:199-205): lowercase;
-    * spaces, dots and hyphens → underscore. Driver-side metadata op.
-    */
-  def normalizeColumnNames(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(_.trim.toLowerCase.replaceAll("[ .\\-]", "_")): _*)
-
   /** Canonical output renames (main.py:672-692). */
   val CanonicalRenames: Map[String, String] = Map(
     "GRUPO_ECONOMICO" -> "grupo_economico",

@@ -39,22 +39,27 @@ object MetricsView {
   def apply(events: DataFrame): DataFrame = buildView(events, eventTypes)
 
   /** Dynamic variant (SURVEY.md §7.4 #5): pivot groups collected from the
-    * data (two-pass) — the engine-API form. NULL groups are excluded (a
-    * null can't name a pivot column), and a collected set that differs
+    * data (two-pass) — the engine-API form. A collected set that differs
     * from the fixed [[eventTypes]] list is logged loudly: the
     * metrics_view_dynamic driver gate shares metrics_view's oracle, which
     * is only sound while the data's type domain equals the fixed list.
     */
   def dynamic(events: DataFrame): DataFrame = {
-    val types = events.select("event_type")
-      .filter(col("event_type").isNotNull).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
+    val types = groupsOf(events, "event_type")
     if (types != eventTypes)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"dynamic pivot collected event_type domain $types != fixed $eventTypes; " +
           "the shared metrics_view oracle no longer applies to this data")
     buildView(events, types)
   }
+
+  /** The sorted distinct non-NULL values of `group`: the pivot columns of
+    * a dynamic view. A NULL group cannot name a column, so it gets none;
+    * its rates still enter the period average, as in the reference's SQL.
+    */
+  private def groupsOf(df: DataFrame, group: String): Seq[String] =
+    df.select(group).filter(col(group).isNotNull).distinct()
+      .collect().map(_.getString(0)).sorted.toSeq
 
   /** Stage 1 — the per-(day, type) aggregate, kept as decomposable
     * sum+count (NOT avg) so a stream can maintain it incrementally:
@@ -72,37 +77,17 @@ object MetricsView {
     * compacted output of [[graft.streaming.EventStream.maintainedDaily]]).
     * Everything here runs on (days × types) rows, never fact cardinality.
     */
-  def fromDailyAggregate(daily: DataFrame, types: Seq[String]): DataFrame =
-    finishView(
-      daily.select(col("dia"), col("event_type"),
-        (col("sum_value") / col("n_value")).as("valor_atual")),
-      types)
-
-  private def buildView(events: DataFrame, types: Seq[String]): DataFrame =
-    fromDailyAggregate(dailyAggregate(events), types)
-
-  private def finishView(daily: DataFrame, types: Seq[String]): DataFrame = {
-    val w = Window.partitionBy("event_type").orderBy("dia")
-    val taxa = daily
-      .withColumn("valor_anterior", lag(col("valor_atual"), 1).over(w))
-      .filter(col("valor_anterior").isNotNull && col("valor_anterior") =!= 0)
-      .withColumn("taxa_var",
-        round((col("valor_atual") - col("valor_anterior")) /
-          when(col("valor_anterior") === 0, lit(null)).otherwise(col("valor_anterior")) * 100, 1))
-    val pivotCols = types.map { t =>
-      coalesce(round(avg(when(col("event_type") === t, col("taxa_var"))), 1), lit(0.0))
-        .as(s"taxa_$t")
-    }
+  def fromDailyAggregate(daily: DataFrame, types: Seq[String]): DataFrame = {
+    val rows = daily.select(col("dia"), col("event_type"),
+      (col("sum_value") / col("n_value")).as("valor_atual"))
     val diffCols = types.map(t => round(col(s"taxa_$t") - col("taxa_media"), 1).as(s"dif_$t"))
-    taxa
-      .groupBy("dia")
-      .agg(round(avg(col("taxa_var")), 1).as("taxa_media"),
-        pivotCols :+ countDistinct(col("event_type")).as("n_tipos"): _*)
-      .filter(col("n_tipos") >= 2)
-      .select(col("dia") +: col("taxa_media") +: types.map(t => col(s"taxa_$t")): _*)
+    view(rows, "dia", "event_type", "taxa_media", types)
       .select(col("*") +: diffCols: _*)
       .orderBy(col("dia").desc)
   }
+
+  private def buildView(events: DataFrame, types: Seq[String]): DataFrame =
+    fromDailyAggregate(dailyAggregate(events), types)
 
   /** The view in its ORIGINAL shape (README.md:119-219): over the
     * canonical IDA table (grupo_economico, servico, mes_referencia,
@@ -114,58 +99,79 @@ object MetricsView {
       ida: DataFrame,
       indicador: String = "Indicador de Desempenho no Atendimento (IDA)"): DataFrame = {
     val filtered = ida.filter(col("servico") === indicador)
-    val grupos = filtered.select("grupo_economico").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-
     val monthly = filtered
       .groupBy(col("mes_referencia"), col("grupo_economico"))
       .agg(avg(col("valor")).as("valor_atual"))
-    val w = Window.partitionBy("grupo_economico").orderBy("mes_referencia")
-    val taxa = monthly
+    view(monthly, "mes_referencia", "grupo_economico", "taxa_variacao_media",
+      groupsOf(filtered, "grupo_economico"))
+      .orderBy(col("mes_referencia").desc)
+  }
+
+  /** The view body over rows of (`period`, `group`, `valor_atual`): LAG
+    * over the period within each group, the % change rounded to 1 dp
+    * (NULLIF guard), then per period the rounded average as `mean`, one
+    * `taxa_<g>` pivot column per group, and HAVING COUNT(DISTINCT group)
+    * >= 2. Unordered; each form sorts its own output.
+    */
+  private def view(
+      rows: DataFrame, period: String, group: String, mean: String,
+      groups: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(group).orderBy(period)
+    val taxa = rows
       .withColumn("valor_anterior", lag(col("valor_atual"), 1).over(w))
       .filter(col("valor_anterior").isNotNull && col("valor_anterior") =!= 0)
       .withColumn("taxa_var",
         round((col("valor_atual") - col("valor_anterior")) /
           when(col("valor_anterior") === 0, lit(null)).otherwise(col("valor_anterior")) * 100, 1))
-    val pivotCols = grupos.map { g =>
-      coalesce(round(avg(when(col("grupo_economico") === g, col("taxa_var"))), 1), lit(0.0))
-        .as(s"taxa_$g")
+    val pivotCols = groups.map { g =>
+      coalesce(round(avg(when(col(group) === g, col("taxa_var"))), 1), lit(0.0)).as(s"taxa_$g")
     }
     taxa
-      .groupBy(col("mes_referencia"))
-      .agg(round(avg(col("taxa_var")), 1).as("taxa_variacao_media"),
-        pivotCols :+ countDistinct(col("grupo_economico")).as("n_grupos"): _*)
+      .groupBy(period)
+      .agg(round(avg(col("taxa_var")), 1).as(mean),
+        pivotCols :+ countDistinct(col(group)).as("n_grupos"): _*)
       .filter(col("n_grupos") >= 2)
       .drop("n_grupos")
-      .orderBy(col("mes_referencia").desc)
+  }
+
+  /** The oracles' SQL form of [[view]]: over a CTE `from` of (`period`,
+    * `group`, valor_atual) rows, the CTEs `lagged`, `taxa` and `pivoted`
+    * (period, mean, taxa_<g>…). The caller opens the WITH and selects
+    * from `pivoted`. DuckDB dialect, ANSI enough for `spark.sql` too.
+    */
+  private[graft] def oracleBody(
+      from: String, period: String, group: String, mean: String,
+      groups: Seq[String]): String = {
+    val pivot = groups.map { g =>
+      s"COALESCE(ROUND(AVG(CASE WHEN $group = '$g' THEN taxa_var END), 1), 0.0) AS taxa_$g"
+    }.mkString(",\n         ")
+    s"""lagged AS (
+       |  SELECT $period, $group, valor_atual,
+       |         LAG(valor_atual) OVER (PARTITION BY $group ORDER BY $period) AS valor_anterior
+       |  FROM $from
+       |), taxa AS (
+       |  SELECT $period, $group,
+       |         ROUND((valor_atual - valor_anterior) / NULLIF(valor_anterior, 0) * 100, 1) AS taxa_var
+       |  FROM lagged
+       |  WHERE valor_anterior IS NOT NULL AND valor_anterior <> 0
+       |), pivoted AS (
+       |  SELECT $period, ROUND(AVG(taxa_var), 1) AS $mean,
+       |         $pivot
+       |  FROM taxa
+       |  GROUP BY $period
+       |  HAVING COUNT(DISTINCT $group) >= 2
+       |)""".stripMargin
   }
 
   /** DuckDB-dialect equivalent (ANSI; shared with PostgreSQL semantics). */
   val oracle: String = {
-    val pivot = eventTypes.map { t =>
-      s"COALESCE(ROUND(AVG(CASE WHEN event_type = '$t' THEN taxa_var END), 1), 0.0) AS taxa_$t"
-    }.mkString(", ")
     val diffs = eventTypes.map(t => s"ROUND(taxa_$t - taxa_media, 1) AS dif_$t").mkString(", ")
     s"""WITH base AS (
        |  SELECT CAST(ts AS DATE) AS dia, event_type, AVG(value) AS valor_atual
        |  FROM events WHERE value IS NOT NULL
        |  GROUP BY 1, 2
-       |), lagged AS (
-       |  SELECT dia, event_type, valor_atual,
-       |         LAG(valor_atual) OVER (PARTITION BY event_type ORDER BY dia) AS valor_anterior
-       |  FROM base
-       |), taxa AS (
-       |  SELECT dia, event_type,
-       |         ROUND((valor_atual - valor_anterior) / NULLIF(valor_anterior, 0) * 100, 1) AS taxa_var
-       |  FROM lagged
-       |  WHERE valor_anterior IS NOT NULL AND valor_anterior <> 0
-       |), pivoted AS (
-       |  SELECT dia, ROUND(AVG(taxa_var), 1) AS taxa_media, $pivot
-       |  FROM taxa
-       |  GROUP BY dia
-       |  HAVING COUNT(DISTINCT event_type) >= 2
-       |)
-       |SELECT dia, taxa_media, ${eventTypes.map("taxa_" + _).mkString(", ")}, $diffs
+       |), ${oracleBody("base", "dia", "event_type", "taxa_media", eventTypes)}
+       |SELECT *, $diffs
        |FROM pivoted
        |ORDER BY dia DESC""".stripMargin
   }

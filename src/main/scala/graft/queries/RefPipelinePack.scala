@@ -170,7 +170,7 @@ object RefPipelinePack extends QueryPack {
     * engine runs: whole-row DISTINCT, the locale parse
     * (invalid-markers → NULL; '1.234,56' → 1234.56; '1234,56' → 1234.56;
     * multi-dot → digit concat), month-date cast, per-(month, group) AVG,
-    * LAG pct-change with NULLIF, dynamic pivot, HAVING ≥ 2 groups.
+    * then the view's own SQL body ([[graft.ops.MetricsView.oracleBody]]).
     */
   private def oracleRows(g: String, s: String, months: Seq[String], raws: Seq[String], tipo: String) =
     months.zip(raws).map { case (m, r) =>
@@ -199,9 +199,8 @@ object RefPipelinePack extends QueryPack {
 
   private def idaOracleFor(valueRows: Seq[String], groups: Seq[String]): String = {
     val values = valueRows.mkString(",\n    ")
-    val pivot = groups.map { g =>
-      s"""COALESCE(ROUND(AVG(CASE WHEN grupo_economico = '$g' THEN taxa_var END), 1), 0.0) AS "taxa_$g""""
-    }.mkString(",\n  ")
+    val view = graft.ops.MetricsView.oracleBody(
+      "monthly", "mes_referencia", "grupo_economico", "taxa_variacao_media", groups)
     s"""WITH raw(grupo_economico, servico, mes, valor_raw, tipo_servico) AS (
        |  VALUES
        |    $values
@@ -229,19 +228,8 @@ object RefPipelinePack extends QueryPack {
        |  SELECT mes_referencia, grupo_economico, AVG(valor) AS valor_atual
        |  FROM parsed WHERE servico = '$Ida'
        |  GROUP BY 1, 2
-       |), lagged AS (
-       |  SELECT *, LAG(valor_atual) OVER (PARTITION BY grupo_economico ORDER BY mes_referencia) AS valor_anterior
-       |  FROM monthly
-       |), taxa AS (
-       |  SELECT mes_referencia, grupo_economico,
-       |    ROUND((valor_atual - valor_anterior) / NULLIF(valor_anterior, 0) * 100, 1) AS taxa_var
-       |  FROM lagged WHERE valor_anterior IS NOT NULL AND valor_anterior <> 0
-       |)
-       |SELECT mes_referencia, ROUND(AVG(taxa_var), 1) AS taxa_variacao_media,
-       |  $pivot
-       |FROM taxa
-       |GROUP BY mes_referencia
-       |HAVING COUNT(DISTINCT grupo_economico) >= 2
+       |), $view
+       |SELECT * FROM pivoted
        |ORDER BY mes_referencia DESC""".stripMargin
   }
 

@@ -138,7 +138,7 @@ class DiscoverySpec extends AnyFunSuite {
     val bytes = d.download(relevant.head.getString(0)).get
     val f = java.nio.file.Files.createTempFile("disc-e2e", ".ods")
     java.nio.file.Files.write(f, bytes)
-    val df = OdsReader.read(spark, f.toString)
+    val df = spark.read.format("ods").load(f.toString)
     assert(df.count() == 3) // header + 2 data rows, promotion is downstream's job
   }
 }

@@ -40,7 +40,7 @@ class IoSpec extends AnyFunSuite {
       Seq("ÍNDICE DE DESEMPENHO NO ATENDIMENTO", null),
       Seq("GRUPO ECONÔMICO", "2015-01-01 00:00:00"),
       Seq("CLARO", "87,50")))
-    val df = OdsReader.read(spark, path)
+    val df = spark.read.format("ods").load(path)
     assert(df.columns.toSeq == Seq("_c0", "_c1"))
     val rows = df.collect()
     assert(rows.length == 3)
@@ -62,17 +62,6 @@ class IoSpec extends AnyFunSuite {
     assert(rows == Seq(Seq("X", "X", "X", "Y")))
   }
 
-  test("ODS DataSource V2: spark.read.format(\"ods\") matches the driver-side reader") {
-    val path = makeOds(Seq(
-      Seq("GRUPO ECONÔMICO", "VARIAVEL", "2015-01"),
-      Seq("CLARO", "IDA", "87,50"),
-      Seq("VIVO", "IDA", null)))
-    val viaDsv2 = spark.read.format("ods").load(path)
-    val viaDriver = OdsReader.read(spark, path)
-    assert(viaDsv2.schema == viaDriver.schema)
-    assert(viaDsv2.collect().map(_.toSeq).toSeq == viaDriver.collect().map(_.toSeq).toSeq)
-  }
-
   test("CsvEncodingReader detects latin-1 and reads accented text intact") {
     val f = Files.createTempFile("fixture", ".tsv")
     val content = "GRUPO ECONÔMICO\tVALOR\nSÃO PAULO\t87,50\n"
@@ -90,21 +79,24 @@ class IoSpec extends AnyFunSuite {
     assert(CsvEncodingReader.detectEncoding(f.toString) == "UTF-8")
   }
 
-  test("JdbcSink DDL type mapping mirrors the reference's pandas map") {
-    import org.apache.spark.sql.types._
-    assert(JdbcSink.sqlType(LongType) == "BIGINT")
-    assert(JdbcSink.sqlType(IntegerType) == "INTEGER")
-    assert(JdbcSink.sqlType(DoubleType) == "DOUBLE PRECISION")
-    assert(JdbcSink.sqlType(BooleanType) == "BOOLEAN")
-    assert(JdbcSink.sqlType(TimestampType) == "TIMESTAMP")
-    assert(JdbcSink.sqlType(DateType) == "DATE")
-    assert(JdbcSink.sqlType(StringType) == "TEXT")
-    import spark.implicits._
-    val df = Seq((1L, "x", 1.5)).toDF("id", "name", "v")
-    assert(JdbcSink.createTableColumnTypes(df) == "id BIGINT, name TEXT, v DOUBLE PRECISION")
-    // engines without TEXT (Derby) get a VARCHAR spelling
-    assert(JdbcSink.createTableColumnTypes(df, stringSql = "VARCHAR(255)")
-      == "id BIGINT, name VARCHAR(255), v DOUBLE PRECISION")
+  private def tsvRow(width: Int): String = {
+    val f = Files.createTempFile("fixture", ".tsv")
+    Files.write(f, (1 to width).map(i => s"v$i").mkString("", "\t", "\n").getBytes("UTF-8"))
+    f.toString
+  }
+
+  test("CsvEncodingReader rejects a row wider than 64 fields instead of truncating it") {
+    // PERMISSIVE CSV keeps only the schema's width of tokens: a 70-field
+    // row must fail, not come back as 64 columns
+    val path = tsvRow(70)
+    val ex = intercept[IllegalArgumentException](CsvEncodingReader.read(spark, path).collect())
+    assert(ex.getMessage.contains("wider than 64 columns"))
+  }
+
+  test("CsvEncodingReader reads a 64-field row intact") {
+    val df = CsvEncodingReader.read(spark, tsvRow(64))
+    assert(df.columns.length == 64)
+    assert(df.collect().map(_.toSeq).toSeq == Seq((1 to 64).map(i => s"v$i")))
   }
 
   test("OdsWriter -> OdsReader round trip: strings, nulls, XML escapes, repeats") {
@@ -218,6 +210,19 @@ class IoSpec extends AnyFunSuite {
       (3L, "a<b'c\"d", Some(-1.25), true, 3.75f))
       .toDF("id", "grupo", "valor", "flag", "ratio")
     JdbcSink.write(df, url, "ida_rt", stringSql = "VARCHAR(255)")
+    // the DDL that landed: Derby's dialect types, the string override
+    val conn = java.sql.DriverManager.getConnection(url)
+    val ddl =
+      try {
+        val rs = conn.getMetaData.getColumns(null, null, "IDA_RT", null)
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (r.getString("COLUMN_NAME"), r.getString("TYPE_NAME"), r.getInt("COLUMN_SIZE")))
+          .toList
+      } finally conn.close()
+    assert(ddl.map { case (n, t, _) => (n, t) } == Seq(
+      "id" -> "BIGINT", "grupo" -> "VARCHAR", "valor" -> "DOUBLE",
+      "flag" -> "BOOLEAN", "ratio" -> "REAL"))
+    assert(ddl(1)._3 == 255)
     val back = spark.read.jdbc(url, "ida_rt", new java.util.Properties())
     assert(back.schema.map(f => (f.name, f.dataType)).toSeq ==
       df.schema.map(f => (f.name, f.dataType)).toSeq)
@@ -246,9 +251,12 @@ class IoSpec extends AnyFunSuite {
     assert(JdbcSink.pgSystemUrl("jdbc:postgresql://db/ida?ssl=true") ==
       Some(("jdbc:postgresql://db/postgres", "ida")))
     assert(JdbcSink.pgSystemUrl("jdbc:derby:memory:x;create=true").isEmpty)
-    // the postgres-facing DDL type map (connect_postgre.py:121-169):
-    // TEXT strings, DOUBLE PRECISION floats — the IDA table's column DDL
-    // reproduces the reference's CREATE TABLE column list exactly
+    // the column DDL Spark emits for the canonical IDA table through
+    // PostgreSQL's dialect (connect_postgre.py:162-169): TEXT strings and
+    // FLOAT8 (= DOUBLE PRECISION) by default, and JdbcSink's override
+    // changes only the string columns
+    import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+    import org.apache.spark.sql.jdbc.JdbcDialects
     import org.apache.spark.sql.types._
     val ida = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -256,9 +264,12 @@ class IoSpec extends AnyFunSuite {
         StructField("id", LongType), StructField("grupo_economico", StringType),
         StructField("servico", StringType), StructField("mes_referencia", DateType),
         StructField("valor", DoubleType), StructField("tipo_servico", StringType))))
-    assert(JdbcSink.createTableColumnTypes(ida) == JdbcSink.IdaColumnTypes)
-    assert(JdbcSink.IdaColumnTypes ==
-      "id BIGINT, grupo_economico TEXT, servico TEXT, mes_referencia DATE, " +
-        "valor DOUBLE PRECISION, tipo_servico TEXT")
+    val pg = JdbcDialects.get("jdbc:postgresql://db:5432/ida")
+    def ddl(stringType: String) =
+      s""""id" BIGINT , "grupo_economico" $stringType , "servico" $stringType , """ +
+        s""""mes_referencia" DATE , "valor" FLOAT8 , "tipo_servico" $stringType """
+    assert(JdbcUtils.schemaString(pg, ida.schema, caseSensitive = false) == ddl("TEXT"))
+    assert(JdbcUtils.schemaString(pg, ida.schema, caseSensitive = false,
+      Some(JdbcSink.sparkColumnTypes(ida, "VARCHAR(255)"))) == ddl("VARCHAR(255)"))
   }
 }

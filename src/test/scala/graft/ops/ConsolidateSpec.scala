@@ -64,11 +64,6 @@ class ConsolidateSpec extends AnyFunSuite {
     }
   }
 
-  test("normalizeColumnNames lowercases and maps separators to underscore") {
-    val df = Seq((1, 2, 3)).toDF("Grupo Econ", "a.b", "c-d")
-    assert(Consolidate.normalizeColumnNames(df).columns.toSeq == Seq("grupo_econ", "a_b", "c_d"))
-  }
-
   test("renameCanonical + reorder produce the canonical output schema") {
     val df = Seq(("CLARO", "IDA", "2015-01", "87.5", "SMP"))
       .toDF("GRUPO_ECONOMICO", "VARIAVEL", "REFERENCIA_MES", "VALOR", "SERVICO")

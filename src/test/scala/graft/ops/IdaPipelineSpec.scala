@@ -2,9 +2,10 @@ package graft.ops
 
 import java.sql.Date
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.io.OdsReader
+import graft.io.OdsWriter
 
 /** Golden end-to-end test: the FIXTURES.md A1 messy-spreadsheet shape
   * pushed through the whole pipeline (ODS-shaped frame + a second file
@@ -14,7 +15,14 @@ import graft.io.OdsReader
 class IdaPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def fileA = OdsReader.fromRows(spark, Seq(
+  /** The rows as a real .ods file, read back through `format("ods")`. */
+  private def ods(rows: Seq[Seq[String]]): DataFrame = {
+    val f = java.nio.file.Files.createTempFile("graft-ida", ".ods").toString
+    OdsWriter.write(rows, f)
+    spark.read.format("ods").load(f)
+  }
+
+  private def fileA = ods(Seq(
     Seq("ÍNDICE DE DESEMPENHO NO ATENDIMENTO", null, null, null),
     Seq("SERVIÇO: SMP", "PERÍODO: 2015", "FONTE: ANATEL", null),
     Seq(null, null, null, null),
@@ -23,7 +31,7 @@ class IdaPipelineSpec extends AnyFunSuite {
     Seq("CLARO", "IDA", "87,50", "90.00"), // exact duplicate -> dedup
     Seq("VIVO", "IDA", "1.234,56", "ND")))
 
-  private def fileB = OdsReader.fromRows(spark, Seq(
+  private def fileB = ods(Seq(
     // different month column + OPERADORA id column (heterogeneous union)
     Seq("GRUPO ECONÔMICO", "VARIAVEL", "OPERADORA", "2015-03"),
     Seq("TIM", "IDA", "TIM S/A", "15.00")))
