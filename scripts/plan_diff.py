@@ -7,9 +7,16 @@ Usage:
   git show HEAD~1:PLAN_FINGERPRINTS.json > /tmp/old.json && \
       python3 scripts/plan_diff.py /tmp/old.json PLAN_FINGERPRINTS.json
 
-Prints added/removed queries and, for each changed hash, a unified diff of
-the operator skeletons — the plan-shape change behind a bench
-regression. Exit code 1 if anything differs (CI-friendly).
+Prints added/removed queries and, for each changed hash, one of:
+  CHANGED    the operator skeleton differs (a plan-shape change: join
+             strategy, exchange placement, a lost pushdown), followed by a
+             unified diff of the skeletons;
+  HASH-ONLY  the skeleton is identical and only the normalized plan text
+             moved (an alias, a literal, an expression order). Some such
+             flips come from outside the query: RewriteDistinctAggregates
+             orders its keys by expression-id hashes, so a change in how
+             many ids an earlier-sorted query allocates can flip them.
+Exit code 1 if anything differs (CI-friendly).
 """
 import difflib
 import json
@@ -33,7 +40,11 @@ def main(old_path: str, new_path: str) -> int:
         if old[name]["hash"] == new[name]["hash"]:
             continue
         changed = True
-        print(f"CHANGED  {name}  {old[name]['hash'][:12]} -> {new[name]['hash'][:12]}")
+        hashes = f"{old[name]['hash'][:12]} -> {new[name]['hash'][:12]}"
+        if old[name]["skeleton"] == new[name]["skeleton"]:
+            print(f"HASH-ONLY  {name}  {hashes}")
+            continue
+        print(f"CHANGED  {name}  {hashes}")
         diff = difflib.unified_diff(
             old[name]["skeleton"], new[name]["skeleton"],
             fromfile=f"{name}@old", tofile=f"{name}@new", lineterm="")

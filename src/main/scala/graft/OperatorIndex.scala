@@ -12,9 +12,8 @@ object OperatorIndex {
 
   def render: String = {
     val sb = new StringBuilder
-    // + metrics_view and metrics_view_dynamic (flagship pair, SparkEntry)
-    val total = Catalog.all.size + 2
-    val oracled = Catalog.all.values.count(_.oracle.isDefined) + 2
+    val total = Catalog.all.size
+    val oracled = Catalog.all.values.count(_.oracle.isDefined)
     sb ++= "# Operator index\n\n"
     sb ++= "One line per query in the engine's driver-checked surface — what it\n"
     sb ++= "computes and whether the driver gate hash-compares it against a DuckDB\n"
@@ -22,13 +21,7 @@ object OperatorIndex {
     sb ++= "semantics aren't ANSI-SQL-expressible). GENERATED from `Catalog.packs`\n"
     sb ++= "by `graft.OperatorIndex` — edit query docs in the packs, not here.\n\n"
     sb ++= s"$total queries, $oracled DuckDB-oracle-checked.\n\n"
-    sb ++= "## Flagship (SparkEntry.entry)\n\n"
-    sb ++= "| query | check | what it computes |\n|---|---|---|\n"
-    sb ++= "| `metrics_view` | oracle | The reference's consolidacao_de_metricas view: " +
-      "month-over-month % variation of average IDA per group (LAG + pivot + HAVING) |\n"
-    sb ++= "| `metrics_view_dynamic` | oracle | The flagship with the pivot group list " +
-      "collected from the data (two-pass dynamic pivot), the reference's original " +
-      "dynamic-column shape |\n\n"
+    sb ++= "The flagship query (`SparkEntry.entry`) is `metrics_view`, listed under RefPipelinePack.\n\n"
     Catalog.packs.foreach { pack =>
       sb ++= s"## ${pack.name} (${pack.queries.size})\n\n"
       sb ++= "| query | check | what it computes |\n|---|---|---|\n"

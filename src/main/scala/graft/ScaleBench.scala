@@ -89,7 +89,8 @@ object ScaleBench {
         e, threshold = 0.45, nCentroids = k, trainCap = math.max(256L, 4L * k))
     }))
 
-  private val IdOffset = 100000000L
+  /** Id offset between replicas: replica r's ids are the source's + r·IdOffset. */
+  private[graft] val IdOffset = 100000000L
 
   /** k perturbed replicas of `df` unioned together; replica 0 is the
     * original frame bit-for-bit.
@@ -97,11 +98,10 @@ object ScaleBench {
   private def amplify(df: DataFrame, k: Int)(perturb: (DataFrame, Int) => DataFrame): DataFrame =
     (0 until k).map(r => if (r == 0) df else perturb(df, r)).reduce(_.union(_))
 
-  def materialize(spark: SparkSession, baseDir: String, outDir: String, k: Int): Unit = {
-    val fs = new java.io.File(outDir)
-    if (new java.io.File(fs, "_DONE").exists()) return
-    fs.mkdirs()
-
+  /** ×k `documents`: ids offset per replica, every token tagged. Also
+    * the amplifier of [[SoakBench]].
+    */
+  private[graft] def amplifiedDocuments(spark: SparkSession, baseDir: String, k: Int): DataFrame =
     amplify(Tables.documents(spark, baseDir), k) { (d, r) =>
       d.select(
         (col("doc_id") + lit(r * IdOffset)).as("doc_id"),
@@ -115,8 +115,12 @@ object ScaleBench {
         // operator. Genuinely new data keeps first-k-char diversity.)
         regexp_replace(col("text"), "(\\S+)", s"$$1r$r").as("text"),
         col("lang"), col("source"), col("n_chars"))
-    }.write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+    }
 
+  /** ×k `embeddings`: ids offset per replica, vectors rotated. Also the
+    * amplifier of [[SoakBench]].
+    */
+  private[graft] def amplifiedEmbeddings(spark: SparkSession, baseDir: String, k: Int): DataFrame =
     amplify(Tables.embeddings(spark, baseDir), k) { (d, r) =>
       val rot = r % 64
       d.select(
@@ -126,7 +130,15 @@ object ScaleBench {
         concat(slice(col("embedding"), rot + 1, 64 - rot),
           slice(col("embedding"), 1, rot)).as("embedding"),
         col("label"))
-    }.write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
+    }
+
+  def materialize(spark: SparkSession, baseDir: String, outDir: String, k: Int): Unit = {
+    val fs = new java.io.File(outDir)
+    if (new java.io.File(fs, "_DONE").exists()) return
+    fs.mkdirs()
+
+    amplifiedDocuments(spark, baseDir, k).write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+    amplifiedEmbeddings(spark, baseDir, k).write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
 
     amplify(Tables.lineitem(spark, baseDir), k) { (d, r) =>
       d.withColumn("l_orderkey", col("l_orderkey") + lit(r * IdOffset))

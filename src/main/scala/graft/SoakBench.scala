@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Memory-pressure soak of the flagship dedup paths: runs the chosen
   * queries against a ×k-amplified `documents` table inside a
@@ -51,40 +50,22 @@ object SoakBench {
   }
 
   /** ×k replication of `documents` and `embeddings` only — the
-    * ScaleBench perturbations (token-suffix replica tags ⇒ disjoint
-    * shingle spaces; norm-preserving vector rotation ⇒ decorrelated
-    * replicas), cached under target/soak with per-table done flags so
-    * the dedup-only caches from earlier rounds stay valid.
+    * ScaleBench amplifiers ([[ScaleBench.amplifiedDocuments]],
+    * [[ScaleBench.amplifiedEmbeddings]]), cached under target/soak with
+    * per-table done flags so the dedup-only caches from earlier rounds
+    * stay valid.
     */
   private def materializeDocs(
       spark: SparkSession, baseDir: String, outDir: String, k: Int): Unit = {
     val root = new java.io.File(outDir)
     root.mkdirs()
     if (!new java.io.File(root, "_DONE").exists()) {
-      val base = Tables.documents(spark, baseDir)
-      (0 until k).map { r =>
-        if (r == 0) base
-        else base.select(
-          (col("doc_id") + lit(r * 100000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1r$r").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_.union(_))
+      ScaleBench.amplifiedDocuments(spark, baseDir, k)
         .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
       new java.io.File(root, "_DONE").createNewFile()
     }
     if (!new java.io.File(root, "_DONE_EMB").exists()) {
-      val base = Tables.embeddings(spark, baseDir)
-      (0 until k).map { r =>
-        if (r == 0) base
-        else {
-          val rot = r % 64
-          base.select(
-            (col("vec_id") + lit(r * 100000000L)).as("vec_id"),
-            concat(slice(col("embedding"), rot + 1, 64 - rot),
-              slice(col("embedding"), 1, rot)).as("embedding"),
-            col("label"))
-        }
-      }.reduce(_.union(_))
+      ScaleBench.amplifiedEmbeddings(spark, baseDir, k)
         .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
       new java.io.File(root, "_DONE_EMB").createNewFile()
     }

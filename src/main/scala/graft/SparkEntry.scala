@@ -8,7 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * extension suite); `oracleSql` carries the DuckDB-runnable equivalent for
   * every SQL-expressible query. Keys and result column names MUST match
   * between the two maps — the driver sorts columns by name and hash-compares
-  * values.
+  * values. Both maps are plain views of [[Catalog.all]]; the flagship
+  * pair (`metrics_view`, `metrics_view_dynamic`) is registered in
+  * RefPipelinePack like every other query.
   */
 object SparkEntry {
 
@@ -17,17 +19,8 @@ object SparkEntry {
     ops.MetricsView(Tables.events(spark, "/root/testdata/sf0.001"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Catalog.all.map { case (name, q) => name -> q.fn } +
-      ("metrics_view" -> ((s: SparkSession, dir: String) => ops.MetricsView(Tables.events(s, dir)))) +
-      // Two-pass dynamic-pivot form (the engine-API entry point users
-      // call when the group list is not known up front). The testdata's
-      // event_type domain equals MetricsView.eventTypes, so the collected
-      // list — and therefore the result — matches the fixed-list oracle.
-      ("metrics_view_dynamic" -> ((s: SparkSession, dir: String) =>
-        ops.MetricsView.dynamic(Tables.events(s, dir))))
+    Catalog.all.map { case (name, q) => name -> q.fn }
 
   def oracleSql: Map[String, String] =
-    Catalog.all.collect { case (name, QueryDef(_, _, Some(sql))) => name -> sql } +
-      ("metrics_view" -> ops.MetricsView.oracle) +
-      ("metrics_view_dynamic" -> ops.MetricsView.oracle)
+    Catalog.all.collect { case (name, QueryDef(_, _, Some(sql))) => name -> sql }
 }

@@ -20,6 +20,17 @@ import graft.io.StandingIndex
   * sign-LSH ([[lshBuckets]]): hyperplanes derived from the portable hash
   * (no stored model), bucket join instead of full cross product; recall is
   * spec-tested against brute force.
+  *
+  * Serving spine: each top-k entry point owns only its CANDIDATE STAGE
+  * (brute-force cross join, LSH buckets, IVF probes, SQ8 codes, sign
+  * signatures, MIH bands, PQ codes) and hands it to the same shared
+  * steps — the approximate pre-cut to `rerank` candidates per query
+  * ([[rerankCut]]: approximate score, then neighbor_id ascending), the
+  * full-precision re-rank join ([[rescore]]) and the exact cut
+  * ([[topK]]). The ranking contract is written once, in [[topK]], and
+  * is what every DuckDB oracle replays: per query (and per sweep
+  * setting), exact cosine descending, ties to the smaller neighbor_id,
+  * rank ≤ k, cosine reported rounded to 6 dp.
   */
 object Similarity {
 
@@ -63,10 +74,96 @@ object Similarity {
         transform(col(vecCol).cast("array<double>"), x => x / col("_nrm"))))
       .drop("_nrm")
 
+  /** (`id`, `vec`): the unit-normalized vectors of `df` keyed by id. Two
+    * spellings stay because they plan differently: renaming the id
+    * BEFORE the normalize (the brute-force, LSH, SQ8 and binary paths)
+    * leaves a Project under the Generate barrier, renaming it AFTER
+    * (`renameFirst = false`, the IVF and PQ paths) folds the rename into
+    * the projection above it.
+    */
+  private def unitVectors(
+      df: DataFrame, idCol: String, vecCol: String, id: String, vec: String,
+      renameFirst: Boolean): DataFrame =
+    if (renameFirst)
+      withNormalized(df.select(col(idCol).as(id), col(vecCol)), vecCol, vec).select(id, vec)
+    else
+      withNormalized(df.select(col(idCol), col(vecCol)), vecCol, vec)
+        .select(col(idCol).as(id), col(vec))
+
+  /** (query_id, qv): the normalized query side every entry point scores. */
+  private def queryVectors(
+      queries: DataFrame, idCol: String, vecCol: String, renameFirst: Boolean = true): DataFrame =
+    unitVectors(queries, idCol, vecCol, "query_id", "qv", renameFirst)
+
+  /** (neighbor_id, cv): the normalized corpus side every entry point scores. */
+  private def corpusVectors(
+      corpus: DataFrame, idCol: String, vecCol: String, renameFirst: Boolean = true): DataFrame =
+    unitVectors(corpus, idCol, vecCol, "neighbor_id", "cv", renameFirst)
+
+  /** (carry…, query_id, neighbor_id, cos): exact cosine of each pair
+    * row carrying both unit vectors. Projected BEFORE any rank window, so
+    * the top-k shuffle/sort carries (id, id, cos), never two 64-double
+    * vectors per row.
+    */
+  private def cosines(pairs: DataFrame, carry: Seq[String] = Nil): DataFrame =
+    pairs.select(carry.map(col) ++
+      Seq(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos")): _*)
+
+  /** The exact cut — the ranking contract of the object doc, written
+    * once: per (settings…, query_id), `row_number` by cos desc then
+    * neighbor_id asc, keep rank ≤ k, report round(cos, 6) AS cosine.
+    * `settings` are the parameter columns a sweep ranks each setting
+    * under (nprobe, radius); top-k outputs pass none.
+    */
+  private def topK(scored: DataFrame, k: Int, settings: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy((settings :+ "query_id").map(col): _*)
+      .orderBy(col("cos").desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(settings.map(col) ++ Seq(col("query_id"), col("rank"), col("neighbor_id"),
+        round(col("cos"), 6).as("cosine")): _*)
+  }
+
+  /** The approximate pre-cut: per (settings…, query_id) keep the `rerank`
+    * best candidates by the approximate `score` ordering (`ascore` desc
+    * or `ham` asc), ties to the smaller neighbor_id. Output: (settings…,
+    * query_id, neighbor_id) — the slice [[rescore]] re-scores exactly.
+    */
+  private def rerankCut(
+      scored: DataFrame, score: Column, rerank: Int, settings: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy((settings :+ "query_id").map(col): _*)
+      .orderBy(score, col("neighbor_id").asc)
+    scored.withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= rerank)
+      .select((settings ++ Seq("query_id", "neighbor_id")).map(col): _*)
+  }
+
+  /** The full-precision re-rank join: candidates ⋈ corpus vectors
+    * (neighbor_id, cv) ⋈ query vectors (query_id, qv) → [[cosines]].
+    * `broadcastCandidates` keeps lshTopK's shape: its bucket-join
+    * candidate set is queries × few, so it broadcasts into the corpus
+    * side instead of the corpus joining into it.
+    */
+  private def rescore(
+      cand: DataFrame, cv: DataFrame, qv: DataFrame,
+      settings: Seq[String] = Nil, broadcastCandidates: Boolean = false): DataFrame = {
+    val withCv =
+      if (broadcastCandidates) cv.join(broadcast(cand), Seq("neighbor_id"))
+      else cand.join(cv, Seq("neighbor_id"))
+    cosines(withCv.join(qv, Seq("query_id")), settings)
+  }
+
+  /** The contract-schema empty top-k frame an empty corpus (or index)
+    * degrades to; each caller keeps its own non-empty guard.
+    */
+  private def emptyTopK(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Int, Long, Double)].toDF("query_id", "rank", "neighbor_id", "cosine")
+  }
+
   /** Exact top-k neighbors by cosine for each query vector (self excluded).
     * `queries` and `corpus` both have (idCol, vecCol); queries are
-    * broadcast. Output: query_id, rank, neighbor_id, cosine (rounded 6dp;
-    * rank by exact cosine desc then neighbor id for total determinism).
+    * broadcast. Output: query_id, rank, neighbor_id, cosine.
     */
   def bruteForceTopK(
       queries: DataFrame,
@@ -74,19 +171,9 @@ object Similarity {
       k: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(
-      withNormalized(queries.select(col(idCol).as("query_id"), col(vecCol)), vecCol, "qv")
-        .select("query_id", "qv"))
-    val c = withNormalized(corpus.select(col(idCol).as("neighbor_id"), col(vecCol)), vecCol, "cv")
-      .select("neighbor_id", "cv")
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    c.join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-      // project BEFORE the rank window: the top-k shuffle/sort must carry
-      // (id, id, cos), not two 64-double vectors per row
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
+    val q = broadcast(queryVectors(queries, idCol, vecCol))
+    val c = corpusVectors(corpus, idCol, vecCol)
+    topK(cosines(c.join(q, col("query_id") =!= col("neighbor_id"))), k)
   }
 
   /** Deterministic pseudo-random hyperplane weight for (plane p, dim d) in
@@ -148,18 +235,8 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
       .dropDuplicates("query_id", "neighbor_id")
-    val qv = broadcast(
-      withNormalized(queries.select(col(idCol).as("query_id"), col(vecCol)), vecCol, "qv")
-        .select("query_id", "qv"))
-    val cv = withNormalized(corpus.select(col(idCol).as("neighbor_id"), col(vecCol)), vecCol, "cv")
-      .select("neighbor_id", "cv")
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    cv.join(broadcast(cand), Seq("neighbor_id"))
-      .join(qv, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
+    topK(rescore(cand, corpusVectors(corpus, idCol, vecCol),
+      broadcast(queryVectors(queries, idCol, vecCol)), broadcastCandidates = true), k)
   }
 
   /** Per-table variant of [[lshBucket]] — table index salts the plane id. */
@@ -460,8 +537,7 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(trainCap >= nCentroids, "training slice must cover the centroid seeds")
-    val c = withNormalized(corpus.select(col(idCol), col(vecCol)), vecCol, "cv")
-      .select(col(idCol).as("neighbor_id"), col("cv"))
+    val c = corpusVectors(corpus, idCol, vecCol, renameFirst = false)
 
     // The centroid set IS the index's small model — train it on the
     // driver (trainCap rows, the standard train-then-broadcast shape)
@@ -480,42 +556,35 @@ object Similarity {
       // zero recall.
       require(c.isEmpty,
         s"ivfTopK: corpus is non-empty but has no ids < $nCentroids to seed centroids")
-      import c.sparkSession.implicits._
-      return Seq.empty[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "cosine")
+      return emptyTopK(c.sparkSession)
     }
 
     // same large-k switchover as semanticDupPairs: literal argmax while
     // the expression stays codegen-sized, broadcast-table + max_by above
     val assigned = withCell(c, centroids, "cv")
-    ivfProbe(assigned, centroids, queries, k, nProbe, idCol, vecCol)
+    topK(ivfCandidates(assigned, centroids, queries, nProbe, idCol, vecCol), k)
   }
 
-  /** The probe stage shared by [[ivfTopK]] (inline assignment) and
-    * [[ivfTopKIndexed]] (assignment read from the materialized index):
-    * nProbe nearest cells per query, then exact re-rank of the probed
-    * cells' members.
+  /** The IVF probe list (query_id, qv, cell, prk): each query's `nProbe`
+    * nearest cells by (qdot desc, cent_id asc), `prk` the probe rank.
+    * Queries are few, so the window runs over a broadcast-sized frame.
     */
-  private def ivfProbe(
-      assigned: DataFrame,
-      centroids: Array[(Long, Array[Double])],
-      queries: DataFrame,
-      k: Int,
-      nProbe: Int,
-      idCol: String,
-      vecCol: String): DataFrame = {
-    val wRank = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    ivfCandidates(assigned, centroids, queries, nProbe, idCol, vecCol)
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
+  private def probeList(
+      q: DataFrame, centroids: Array[(Long, Array[Double])], nProbe: Int): DataFrame = {
+    val cents = broadcast(q.sparkSession.createDataFrame(centroids.toSeq).toDF("cent_id", "centv"))
+    val wProbe = Window.partitionBy("query_id")
+      .orderBy(col("qdot").desc, col("cent_id").asc)
+    q.crossJoin(cents)
+      .withColumn("qdot", dot(col("qv"), col("centv")))
+      .withColumn("prk", row_number().over(wProbe))
+      .filter(col("prk") <= nProbe)
+      .select(col("query_id"), col("qv"), col("cent_id").as("cell"), col("prk"))
   }
 
-  /** The probed-candidate stream (query_id, neighbor_id, cos) both IVF
-    * serving shapes cut from: [[ivfProbe]] ranks it to top-k,
-    * [[ivfRangeIndexed]] filters it by a cosine radius. Probes are
-    * nProbe nearest cells per query; candidates are exact cosines over
-    * the probed cells' members only.
+  /** The probed-candidate stream (query_id, neighbor_id, cos) every IVF
+    * serving shape cuts from: [[ivfTopK]] and [[ivfTopKIndexed]] rank it
+    * to top-k, [[ivfRangeIndexed]] filters it by a cosine radius.
+    * Candidates are exact cosines over the probed cells' members only.
     */
   private def ivfCandidates(
       assigned: DataFrame,
@@ -529,31 +598,35 @@ object Similarity {
       // pass (membership at np is prk <= np), instead of re-joining the
       // assignment table once per setting
       carryProbeRank: Boolean = false): DataFrame = {
-    // probe list: nProbe nearest cells per query (queries are few — the
-    // window runs over a broadcast-sized frame)
-    val q = broadcast(
-      withNormalized(queries.select(col(idCol), col(vecCol)), vecCol, "qv")
-        .select(col(idCol).as("query_id"), col("qv")))
-    val cents = broadcast(q.sparkSession.createDataFrame(
-      centroids.map { case (cid, w) => (cid, w) }.toSeq).toDF("cent_id", "centv"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("qdot").desc, col("cent_id").asc)
-    val probes = q.crossJoin(cents)
-      .withColumn("qdot", dot(col("qv"), col("centv")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cent_id").as("cell"), col("prk"))
-
+    val probes = probeList(
+      broadcast(queryVectors(queries, idCol, vecCol, renameFirst = false)), centroids, nProbe)
     // candidates = corpus vectors in probed cells; exact scoring. Project
     // to (ids, cos) before any downstream shuffle — no vectors move.
-    val out = assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    if (carryProbeRank)
-      out.select(col("query_id"), col("neighbor_id"),
-        dot(col("qv"), col("cv")).as("cos"), col("prk"))
-    else
-      out.select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
+    cosines(assigned.join(broadcast(probes), Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id")),
+      if (carryProbeRank) Seq("prk") else Nil)
   }
+
+  /** The persisted centroid model of a materialized IVF index, in
+    * cent_id order.
+    */
+  private def readCentroids(spark: SparkSession, indexDir: String): Array[(Long, Array[Double])] =
+    spark.read.parquet(s"$indexDir/centroids")
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+
+  /** The live members (neighbor_id, cv, cell) of a materialized IVF
+    * index. Partition-column inference reads cell=N directories as int,
+    * so the assignment's long type is restored for the probe join; then
+    * merge-on-read tombstones ([[retractFromIvfIndex]]) drop retracted
+    * members via a broadcast anti join — the tombstone set is
+    * deletion-request-sized, never corpus-sized.
+    */
+  private def liveCells(spark: SparkSession, indexDir: String): DataFrame =
+    StandingIndex.dropRetracted(
+      spark.read.parquet(s"$indexDir/cells").withColumn("cell", col("cell").cast("long")),
+      StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
 
   /** RANGE (radius) search from the MATERIALIZED IVF index: every corpus
     * vector within the probed cells whose exact cosine to the query is
@@ -577,21 +650,13 @@ object Similarity {
       nProbe: Int = 4,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val centroids: Array[(Long, Array[Double])] =
-      spark.read.parquet(s"$indexDir/centroids")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
+    val centroids = readCentroids(spark, indexDir)
     if (centroids.isEmpty) {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double)]
         .toDF("query_id", "neighbor_id", "cosine")
     }
-    val cells = spark.read.parquet(s"$indexDir/cells")
-      .withColumn("cell", col("cell").cast("long"))
-    val assigned = StandingIndex.dropRetracted(cells,
-      StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
-    ivfCandidates(assigned, centroids, queries, nProbe, idCol, vecCol)
+    ivfCandidates(liveCells(spark, indexDir), centroids, queries, nProbe, idCol, vecCol)
       .filter(col("cos") >= minCosine)
       .select(col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
   }
@@ -625,8 +690,7 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(nProbes.nonEmpty, "ivfSweep needs at least one nProbe setting")
-    val c = withNormalized(corpus.select(col(idCol), col(vecCol)), vecCol, "cv")
-      .select(col(idCol).as("neighbor_id"), col("cv"))
+    val c = corpusVectors(corpus, idCol, vecCol, renameFirst = false)
     val centroids: Array[(Long, Array[Double])] =
       ivfModel(corpus, nCentroids, lloydIters, trainCap, idCol, vecCol)
     if (centroids.isEmpty) {
@@ -658,12 +722,7 @@ object Similarity {
     val tagged = candAll.withColumn("nprobe",
       explode(filter(npArr, v => col("prk") <= v)))
     val nCand = tagged.groupBy("nprobe").agg(count(lit(1)).as("n_candidates"))
-    val wRankN = Window.partitionBy("nprobe", "query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    val top = tagged
-      .withColumn("rank", row_number().over(wRankN))
-      .filter(col("rank") <= k)
-      .select("nprobe", "query_id", "neighbor_id")
+    val top = topK(tagged, k, Seq("nprobe")).select("nprobe", "query_id", "neighbor_id")
     val hits = exact.join(top, Seq("query_id", "neighbor_id"))
       .groupBy("nprobe").agg(count(lit(1)).as("n_hit"))
     // a degenerate corpus can leave the exact panel EMPTY (one vector,
@@ -708,14 +767,12 @@ object Similarity {
     // schema even when the corpus — and therefore the model — is empty
     spark.createDataset(centroids.toSeq).toDF("cent_id", "centv")
       .write.mode("overwrite").parquet(s"$dir/centroids")
+    val c = corpusVectors(corpus, idCol, vecCol)
     if (centroids.isEmpty) {
-      val c = withNormalized(corpus.select(col(idCol), col(vecCol)), vecCol, "cv")
       require(c.isEmpty,
         s"writeIvfIndex: corpus is non-empty but has no ids < $nCentroids to seed centroids")
       return // empty model: no cells to write, probes return empty
     }
-    val c = withNormalized(corpus.select(col(idCol), col(vecCol)), vecCol, "cv")
-      .select(col(idCol).as("neighbor_id"), col("cv"))
     withCell(c, centroids, "cv")
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
   }
@@ -739,14 +796,8 @@ object Similarity {
       indexDir: String,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
-    val spark = newVecs.sparkSession
-    val centroids: Array[(Long, Array[Double])] =
-      spark.read.parquet(s"$indexDir/centroids")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-    val c = withNormalized(newVecs.select(col(idCol), col(vecCol)), vecCol, "cv")
-      .select(col(idCol).as("neighbor_id"), col("cv"))
+    val centroids = readCentroids(newVecs.sparkSession, indexDir)
+    val c = corpusVectors(newVecs, idCol, vecCol)
     if (centroids.isEmpty) {
       // an empty model has no cells to route into — admitting an empty
       // batch is a no-op (the empty-corpus degrade writeIvfIndex
@@ -785,13 +836,8 @@ object Similarity {
       // an empty-corpus index has a centroid table but no cells
       // directory (writeIvfIndex's empty-model degrade) — compaction
       // then only clears tombstones
-      if (StandingIndex.exists(spark, s"$indexDir/cells")) {
-        val cells = spark.read.parquet(s"$indexDir/cells")
-          .withColumn("cell", col("cell").cast("long"))
-        StandingIndex.dropRetracted(cells,
-            StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
-          .write.partitionBy("cell").parquet(s"$tmp/cells")
-      }
+      if (StandingIndex.exists(spark, s"$indexDir/cells"))
+        liveCells(spark, indexDir).write.partitionBy("cell").parquet(s"$tmp/cells")
     }
 
   /** Probe a MATERIALIZED IVF index ([[writeIvfIndex]]) — identical
@@ -808,28 +854,10 @@ object Similarity {
       nProbe: Int = 4,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val centroids: Array[(Long, Array[Double])] =
-      spark.read.parquet(s"$indexDir/centroids")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-    if (centroids.isEmpty) {
-      // empty index (built over an empty corpus): contract-schema empty
-      // frame, same degrade as ivfTopK
-      import spark.implicits._
-      return Seq.empty[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "cosine")
-    }
-    // partition-column inference reads cell=N directories as int —
-    // restore the assignment's long type for the probe join
-    val cells = spark.read.parquet(s"$indexDir/cells")
-      .withColumn("cell", col("cell").cast("long"))
-    // merge-on-read tombstones ([[retractFromIvfIndex]]): retracted
-    // members drop from the probed slice via a broadcast anti join —
-    // the tombstone set is deletion-request-sized, never corpus-sized
-    val assigned = StandingIndex.dropRetracted(cells,
-      StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
-    ivfProbe(assigned, centroids, queries, k, nProbe, idCol, vecCol)
+    val centroids = readCentroids(spark, indexDir)
+    // empty index (built over an empty corpus): same degrade as ivfTopK
+    if (centroids.isEmpty) return emptyTopK(spark)
+    topK(ivfCandidates(liveCells(spark, indexDir), centroids, queries, nProbe, idCol, vecCol), k)
   }
 
   /** ANN top-k via SQ8 scalar quantization: the candidate scan runs over
@@ -848,11 +876,8 @@ object Similarity {
       rerank: Int = 50,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(
-      withNormalized(queries.select(col(idCol).as("query_id"), col(vecCol)), vecCol, "qv")
-        .select("query_id", "qv"))
-    val c = withNormalized(corpus.select(col(idCol).as("neighbor_id"), col(vecCol)), vecCol, "cv")
-      .select("neighbor_id", "cv")
+    val q = broadcast(queryVectors(queries, idCol, vecCol))
+    val c = corpusVectors(corpus, idCol, vecCol)
 
     // quantize: per-vector (mn, scale) + smallint codes. The explode
     // barrier keeps mn/scale evaluated once (not re-inlined per lambda).
@@ -868,24 +893,14 @@ object Similarity {
             lit(0.0)).cast("smallint")).as("codes"))
 
     // approximate scan over the quantized table only
-    val wApprox = Window.partitionBy("query_id").orderBy(col("ascore").desc, col("neighbor_id").asc)
-    val cand = quant.join(q, col("query_id") =!= col("neighbor_id"))
+    val cand = rerankCut(quant.join(q, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         dot(col("qv"),
-          transform(col("codes"), cd => col("mn") + cd.cast("double") * col("scale"))).as("ascore"))
-      .withColumn("rk", row_number().over(wApprox))
-      .filter(col("rk") <= rerank)
-      .select("query_id", "neighbor_id")
+          transform(col("codes"), cd => col("mn") + cd.cast("double") * col("scale"))).as("ascore")),
+      col("ascore").desc, rerank)
 
     // full-precision re-rank of the candidate slice
-    val wRank = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand
-      .join(c, Seq("neighbor_id"))
-      .join(q.withColumnRenamed("qv", "qv2"), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv2"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
+    topK(rescore(cand, c, q), k)
   }
 
   /** The 64-bit SIGN signature of a normalized 64-dim vector: bit i set
@@ -924,8 +939,8 @@ object Similarity {
     * re-score with full-precision cosine. Sign-of-component is the
     * random-hyperplane LSH limit case (axis-aligned planes), so hamming
     * approximates angle; the exact re-rank restores precision where it
-    * matters. Deterministic end to end (integer hamming, then the usual
-    * cos-desc/id-asc ties), so the DuckDB oracle replays every bit.
+    * matters. Deterministic end to end (integer hamming, then the shared
+    * cut), so the DuckDB oracle replays every bit.
     */
   def binaryTopK(
       queries: DataFrame,
@@ -934,32 +949,28 @@ object Similarity {
       rerank: Int = 50,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(
-      withNormalized(queries.select(col(idCol).as("query_id"), col(vecCol)), vecCol, "qv")
-        .select(col("query_id"), col("qv"), signSignature(col("qv")).as("qs")))
-    val c = withNormalized(corpus.select(col(idCol).as("neighbor_id"), col(vecCol)), vecCol, "cv")
-      .select("neighbor_id", "cv")
+    val q = signedQueries(queries, idCol, vecCol)
+    val c = corpusVectors(corpus, idCol, vecCol)
     val sigs = c.select(col("neighbor_id"), signSignature(col("cv")).as("sg"))
 
     // hamming scan over 8-byte signatures only — vectors stay out of it
-    val wHam = Window.partitionBy("query_id").orderBy(col("ham").asc, col("neighbor_id").asc)
-    val cand = sigs.join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        bit_count(col("sg").bitwiseXOR(col("qs"))).as("ham"))
-      .withColumn("rk", row_number().over(wHam))
-      .filter(col("rk") <= rerank)
-      .select("query_id", "neighbor_id")
+    val cand = rerankCut(sigs.join(q, col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), hamming.as("ham")),
+      col("ham").asc, rerank)
 
     // full-precision re-rank of the candidate slice
-    val wRank = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand
-      .join(c, Seq("neighbor_id"))
-      .join(q.select(col("query_id"), col("qv")), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
+    topK(rescore(cand, c, q.select(col("query_id"), col("qv"))), k)
   }
+
+  /** Broadcast (query_id, qv, qs): normalized queries with their sign
+    * signature — the query side of every binary entry point.
+    */
+  private def signedQueries(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
+    broadcast(queryVectors(queries, idCol, vecCol)
+      .select(col("query_id"), col("qv"), signSignature(col("qv")).as("qs")))
+
+  /** Hamming distance between the corpus signature `sg` and the query's `qs`. */
+  private def hamming: Column = bit_count(col("sg").bitwiseXOR(col("qs")))
 
   /** The 4 × 16-bit MULTI-INDEX band keys of a 64-bit sign signature
     * (Norouzi et al., "Fast Search in Hamming Space with Multi-Index
@@ -983,14 +994,18 @@ object Similarity {
       dir: String,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
-    val c = withNormalized(corpus.select(col(idCol), col(vecCol)), vecCol, "cv")
-      .select(col(idCol).as("neighbor_id"), col("cv"))
+    val c = corpusVectors(corpus, idCol, vecCol)
+    bandedSigs(c).write.mode("overwrite").parquet(s"$dir/sigs")
+    c.write.mode("overwrite").parquet(s"$dir/vecs")
+  }
+
+  /** The `sigs/` rows of the binary index: (neighbor_id, sg, b0..b3) —
+    * each vector's sign signature and its 4 multi-index band keys.
+    */
+  private def bandedSigs(c: DataFrame): DataFrame =
     c.select(col("neighbor_id"), signSignature(col("cv")).as("sg"))
       .select(col("neighbor_id") +: col("sg") +:
         (0 until 4).map(i => sigBand(col("sg"), i).as(s"b$i")): _*)
-      .write.mode("overwrite").parquet(s"$dir/sigs")
-    c.write.mode("overwrite").parquet(s"$dir/vecs")
-  }
 
   /** Incremental admission into the binary band index — the
     * [[refreshIvfIndex]] posture without a trained model to respect:
@@ -1012,13 +1027,8 @@ object Similarity {
       batchId: Long,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
-    val c = withNormalized(newVecs.select(col(idCol), col(vecCol)), vecCol, "cv")
-      .select(col(idCol).as("neighbor_id"), col("cv"))
-    graft.io.BatchFiles.land(
-      c.select(col("neighbor_id"), signSignature(col("cv")).as("sg"))
-        .select(col("neighbor_id") +: col("sg") +:
-          (0 until 4).map(i => sigBand(col("sg"), i).as(s"b$i")): _*),
-      s"$indexDir/sigs", batchId)
+    val c = corpusVectors(newVecs, idCol, vecCol)
+    graft.io.BatchFiles.land(bandedSigs(c), s"$indexDir/sigs", batchId)
     graft.io.BatchFiles.land(c, s"$indexDir/vecs", batchId)
   }
 
@@ -1050,8 +1060,8 @@ object Similarity {
   /** Radius-bounded binary ANN served from the MATERIALIZED band index
     * — the indexed twin the unpruned [[binaryTopK]] scan lacked:
     * candidates come from 4 band equi-joins, hamming-verified against
-    * the full signature, ranked (hamming asc, id asc), and the top
-    * `rerank` re-scored with exact cosine. The serving shape of 1-bit
+    * the full signature, pre-cut by hamming to the top `rerank` and
+    * re-scored with exact cosine. The serving shape of 1-bit
     * near-duplicate lookup: "find what this slightly-edited embedding
     * is a copy of".
     *
@@ -1084,9 +1094,7 @@ object Similarity {
       s"radius $radius outside the 1-bit MIH regime: 4 disjoint bands with " +
         "single-bit key enumeration guarantee completeness only for radius <= 7 " +
         "(larger radii need multi-bit key enumeration)")
-    val q = broadcast(
-      withNormalized(queries.select(col(idCol), col(vecCol)), vecCol, "qv")
-        .select(col(idCol).as("query_id"), col("qv"), signSignature(col("qv")).as("qs")))
+    val q = signedQueries(queries, idCol, vecCol)
     // band collisions, hamming-verified within radius, distinct once —
     // the radius filter runs BEFORE the distinct so the dedup shuffle
     // carries only in-radius rows (the serving-path cost shape; the
@@ -1099,19 +1107,8 @@ object Similarity {
     // broadcast anti join — deletion-request-sized, never corpus-sized
     val live = StandingIndex.dropRetracted(cand,
       StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
-    val wHam = Window.partitionBy("query_id").orderBy(col("ham").asc, col("neighbor_id").asc)
-    val slice = live
-      .withColumn("rk", row_number().over(wHam))
-      .filter(col("rk") <= rerank)
-      .select("query_id", "neighbor_id")
-    val wRank = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    slice
-      .join(spark.read.parquet(s"$indexDir/vecs"), Seq("neighbor_id"))
-      .join(q.select(col("query_id"), col("qv")), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
+    topK(rescore(rerankCut(live, col("ham").asc, rerank),
+      spark.read.parquet(s"$indexDir/vecs"), q.select(col("query_id"), col("qv"))), k)
   }
 
   /** The raw band-collision stream (query_id, neighbor_id, ham) of the
@@ -1138,8 +1135,7 @@ object Similarity {
         .select("query_id", "neighbor_id", "qs", "sg")
     }.reduce(_ unionAll _)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        bit_count(col("sg").bitwiseXOR(col("qs"))).as("ham"))
+      .select(col("query_id"), col("neighbor_id"), hamming.as("ham"))
   }
 
   /** Radius parameter sweep of the banded binary index — the MIH twin of
@@ -1169,24 +1165,16 @@ object Similarity {
     require(radii.nonEmpty, "binarySweep needs at least one radius setting")
     require(radii.forall(r => r >= 0 && r <= 7),
       "binarySweep radii must stay in the 1-bit MIH regime (0..7)")
-    val q = broadcast(
-      withNormalized(queries.select(col(idCol), col(vecCol)), vecCol, "qv")
-        .select(col(idCol).as("query_id"), col("qv"), signSignature(col("qv")).as("qs")))
+    val q = signedQueries(queries, idCol, vecCol)
+    val qv = q.select(col("query_id"), col("qv"))
     // one collision table per enumeration regime, shared across radii
     val regime: Map[Boolean, DataFrame] = radii.map(_ > 3).distinct.map { enum =>
       enum -> bandCollisions(spark, indexDir, q, if (enum) 7 else 3)
         .distinct().localCheckpoint()
     }.toMap
     val vecs = spark.read.parquet(s"$indexDir/vecs")
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
     // exact tower over the index's stored (already normalized) vectors
-    val exact = vecs
-      .join(q.select(col("query_id"), col("qv")),
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
+    val exact = topK(cosines(vecs.join(qv, col("query_id") =!= col("neighbor_id"))), k)
       .select(col("query_id"), col("neighbor_id"))
       .localCheckpoint()
     // ONE radius-tagged pipeline per enumeration regime instead of a
@@ -1205,20 +1193,9 @@ object Similarity {
       val poolAll = pairs.withColumn("radius",
         explode(filter(rsArr, rv => col("ham") <= rv)))
       val nPool = poolAll.groupBy("radius").agg(count(lit(1)).as("n_in_radius"))
-      val wHamR = Window.partitionBy("radius", "query_id")
-        .orderBy(col("ham").asc, col("neighbor_id").asc)
-      val wRankR = Window.partitionBy("radius", "query_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      val top = poolAll
-        .withColumn("rk", row_number().over(wHamR))
-        .filter(col("rk") <= rerank)
-        .select("radius", "query_id", "neighbor_id")
-        .join(vecs, Seq("neighbor_id"))
-        .join(q.select(col("query_id"), col("qv")), Seq("query_id"))
-        .select(col("radius"), col("query_id"), col("neighbor_id"),
-          dot(col("qv"), col("cv")).as("cos"))
-        .withColumn("rank", row_number().over(wRankR))
-        .filter(col("rank") <= k)
+      val radius = Seq("radius")
+      val top = topK(rescore(rerankCut(poolAll, col("ham").asc, rerank, radius),
+          vecs, qv, radius), k, radius)
         .select("radius", "query_id", "neighbor_id")
       val hits = exact.join(top, Seq("query_id", "neighbor_id"))
         .groupBy("radius").agg(count(lit(1)).as("n_hit"))
@@ -1273,70 +1250,74 @@ object Similarity {
     // sampled codebooks: normalized sub-vectors of the first 16 corpus
     // vectors, collected driver-side (16 rows) and embedded as literals
     val seeds = normalizedVectors(corpus, 16L, idCol, vecCol)
-    val c = withNormalized(corpus.select(col(idCol), col(vecCol)), vecCol, "cv")
-      .select(col(idCol).as("neighbor_id"), col("cv"))
+    val c = corpusVectors(corpus, idCol, vecCol, renameFirst = false)
     if (seeds.isEmpty) {
       require(c.isEmpty,
         "pqTopK: corpus is non-empty but has no ids < 16 to seed codebooks")
-      import c.sparkSession.implicits._
-      return Seq.empty[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "cosine")
+      return emptyTopK(c.sparkSession)
     }
-    // codebooks(j)(t) = subspace-j slice of seed vector t (code = t+1,
-    // 1-based to match array_position / SQL list_position)
-    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
+    val codebooks = pqCodebooks(seeds, m, subDim)
+    val coded = pqCodes(c, Seq("neighbor_id"), codebooks, subDim)
+
+    // ADC scan: queries broadcast with pre-sliced subvectors
+    val qv = queryVectors(queries, idCol, vecCol)
+    val q = broadcast(qv.select(col("query_id") +: subSlices(col("qv"), "qs", m, subDim): _*))
+    val cand = rerankCut(coded.join(q, col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), adcScore(codebooks).as("ascore")),
+      col("ascore").desc, rerank)
+
+    // full-precision re-rank of the candidate slice
+    topK(rescore(cand, c, broadcast(qv)), k)
+  }
+
+  /** PQ codebooks: codebooks(j)(t) = the subspace-j slice of seed vector t
+    * (code = t+1, 1-based to match array_position / SQL list_position).
+    */
+  private def pqCodebooks(
+      seeds: Array[(Long, Array[Double])], m: Int, subDim: Int): Array[Array[Array[Double]]] =
+    Array.tabulate(m) { j =>
       seeds.map { case (_, v) => v.slice(j * subDim, (j + 1) * subDim) }
     }
 
-    // map-side code assignment: per subspace, argmin over the distance
-    // surrogate ||c||² - 2·(sv·c) (the sv self-dot is constant per row and
-    // dropped on BOTH engines), first minimum on ties = lowest code. Two
-    // explode barriers: the first materializes each subvector slice ONCE
-    // (instead of 16 re-slices per subspace inside the interpreted dist
-    // expressions), the second materializes codes once, not re-inlined
-    // per query.
-    val sliced = c.select(col("neighbor_id"), explode(array(struct(
-        (0 until m).map(j => slice(col("cv"), j * subDim + 1, subDim).as(s"sv$j")): _*))).as("s"))
-      .select(col("neighbor_id") +: (0 until m).map(j => col(s"s.sv$j")): _*)
+  /** The `m` subspace slices of `vec`, named `<prefix>0` … `<prefix>{m-1}`. */
+  private def subSlices(vec: Column, prefix: String, m: Int, subDim: Int): Seq[Column] =
+    (0 until m).map(j => slice(vec, j * subDim + 1, subDim).as(s"$prefix$j"))
+
+  /** Map-side PQ code assignment over (`keep`…, cv) rows → (`keep`…,
+    * code0 … code{m-1}): per subspace, argmin over the distance surrogate
+    * ||c||² - 2·(sv·c) (the sv self-dot is constant per row and dropped on
+    * BOTH engines), first minimum on ties = lowest code. Two explode
+    * barriers: the first materializes each subvector slice ONCE (instead
+    * of 16 re-slices per subspace inside the interpreted dist
+    * expressions), the second materializes codes once, not re-inlined per
+    * query. [[ivfpqTopK]] keeps `cell` through both, so the index build
+    * (cell + m codes per vector) never shuffles the corpus.
+    */
+  private def pqCodes(
+      c: DataFrame, keep: Seq[String], codebooks: Array[Array[Array[Double]]],
+      subDim: Int): DataFrame = {
+    val m = codebooks.length
+    val sliced = c.select(keep.map(col) :+
+        explode(array(struct(subSlices(col("cv"), "sv", m, subDim): _*))).as("s"): _*)
+      .select(keep.map(col) ++ (0 until m).map(j => col(s"s.sv$j")): _*)
     def codeCol(j: Int): Column = {
       val dists = array(codebooks(j).map { cw =>
         lit(dotSeq(cw, cw)) - lit(2.0) * dot(col(s"sv$j"), typedLit(cw))
       }.toIndexedSeq: _*)
       array_position(dists, array_min(dists))
     }
-    val coded = sliced.select(col("neighbor_id"), explode(array(struct(
-        (0 until m).map(j => codeCol(j).as(s"code$j")): _*))).as("cd"))
-      .select(col("neighbor_id") +: (0 until m).map(j => col(s"cd.code$j")): _*)
+    sliced.select(keep.map(col) :+
+        explode(array(struct((0 until m).map(j => codeCol(j).as(s"code$j")): _*))).as("cd"): _*)
+      .select(keep.map(col) ++ (0 until m).map(j => col(s"cd.code$j")): _*)
+  }
 
-    // ADC scan: queries broadcast with pre-sliced subvectors; approx
-    // score = Σ_j dot(q_sub_j, codebook_j[code_j]) in fixed j order
-    val q = broadcast(
-      withNormalized(queries.select(col(idCol).as("query_id"), col(vecCol)), vecCol, "qv")
-        .select(col("query_id") +: (0 until m).map(j =>
-          slice(col("qv"), j * subDim + 1, subDim).as(s"qs$j")): _*))
-    val ascore = (0 until m).map { j =>
+  /** The ADC approximate score Σ_j dot(qs_j, codebook_j[code_j]), summed
+    * in fixed subspace order so the double result is reproducible.
+    */
+  private def adcScore(codebooks: Array[Array[Array[Double]]]): Column =
+    codebooks.indices.map { j =>
       dot(col(s"qs$j"), element_at(typedLit(codebooks(j).map(_.toSeq).toSeq), col(s"code$j").cast("int")))
     }.reduceLeft(_ + _)
-    val wApprox = Window.partitionBy("query_id").orderBy(col("ascore").desc, col("neighbor_id").asc)
-    val cand = coded.join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), ascore.as("ascore"))
-      .withColumn("rk", row_number().over(wApprox))
-      .filter(col("rk") <= rerank)
-      .select("query_id", "neighbor_id")
-
-    // full-precision re-rank of the candidate slice
-    val qv = broadcast(
-      withNormalized(queries.select(col(idCol).as("query_id"), col(vecCol)), vecCol, "qv")
-        .select("query_id", "qv"))
-    val wRank = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand
-      .join(c, Seq("neighbor_id"))
-      .join(qv, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
-  }
 
   /** ANN top-k via IVF-PQ: [[ivfTopK]]'s trained-cell pruning composed in
     * front of [[pqTopK]]'s ADC scan — the standard large-batch ANN shape.
@@ -1352,7 +1333,7 @@ object Similarity {
     * `by_residual=false` regime), so the codebooks are exactly
     * [[pqTopK]]'s and the oracle replays cells AND codebooks unchanged.
     * Every step is order-pinned the same way (argmin keeps the first
-    * minimum, ADC sums left-to-right, probe/rank ties break on ascending
+    * minimum, ADC sums left-to-right, probe ties break on ascending cell
     * id) — approximate operator, hash-checked exactly.
     */
   def ivfpqTopK(
@@ -1371,8 +1352,7 @@ object Similarity {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     require(trainCap >= nCentroids, "training slice must cover the centroid seeds")
     val subDim = dim / m
-    val c = withNormalized(corpus.select(col(idCol), col(vecCol)), vecCol, "cv")
-      .select(col(idCol).as("neighbor_id"), col("cv"))
+    val c = corpusVectors(corpus, idCol, vecCol, renameFirst = false)
 
     val centroids = ivfModel(corpus, nCentroids, lloydIters, trainCap, idCol, vecCol)
     val seeds = normalizedVectors(corpus, 16L, idCol, vecCol)
@@ -1381,72 +1361,29 @@ object Similarity {
       // (same contract as ivfTopK/pqTopK — fail loudly otherwise)
       require(c.isEmpty,
         "ivfpqTopK: corpus is non-empty but lacks the low ids that seed centroids/codebooks")
-      import c.sparkSession.implicits._
-      return Seq.empty[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "cosine")
+      return emptyTopK(c.sparkSession)
     }
-    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      seeds.map { case (_, v) => v.slice(j * subDim, (j + 1) * subDim) }
-    }
+    val codebooks = pqCodebooks(seeds, m, subDim)
 
-    // map-side cell assignment + PQ code assignment in ONE corpus pass:
-    // the cell rides through pqTopK's two explode barriers, so the index
-    // build (cell + m codes per vector) never shuffles the corpus.
-    val assigned = withCell(c, centroids, "cv")
-    val sliced = assigned.select(col("neighbor_id"), col("cell"), explode(array(struct(
-        (0 until m).map(j => slice(col("cv"), j * subDim + 1, subDim).as(s"sv$j")): _*))).as("s"))
-      .select(col("neighbor_id") +: col("cell") +: (0 until m).map(j => col(s"s.sv$j")): _*)
-    def codeCol(j: Int): Column = {
-      val dists = array(codebooks(j).map { cw =>
-        lit(dotSeq(cw, cw)) - lit(2.0) * dot(col(s"sv$j"), typedLit(cw))
-      }.toIndexedSeq: _*)
-      array_position(dists, array_min(dists))
-    }
-    val coded = sliced.select(col("neighbor_id"), col("cell"), explode(array(struct(
-        (0 until m).map(j => codeCol(j).as(s"code$j")): _*))).as("cd"))
-      .select(col("neighbor_id") +: col("cell") +: (0 until m).map(j => col(s"cd.code$j")): _*)
+    // map-side cell assignment + PQ code assignment in ONE corpus pass
+    val coded = pqCodes(withCell(c, centroids, "cv"), Seq("neighbor_id", "cell"), codebooks, subDim)
 
-    // probe list: nProbe nearest cells per query, sub-sliced query
-    // vectors riding along for the ADC scan (queries are few — the
-    // window runs over a broadcast-sized frame)
-    val q = withNormalized(queries.select(col(idCol), col(vecCol)), vecCol, "qv")
-      .select(col(idCol).as("query_id"), col("qv"))
-    val cents = broadcast(q.sparkSession.createDataFrame(
-      centroids.map { case (cid, w) => (cid, w) }.toSeq).toDF("cent_id", "centv"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("qdot").desc, col("cent_id").asc)
-    val probes = broadcast(
-      broadcast(q).crossJoin(cents)
-        .withColumn("qdot", dot(col("qv"), col("centv")))
-        .withColumn("prk", row_number().over(wProbe))
-        .filter(col("prk") <= nProbe)
-        .select(col("query_id") +: col("cent_id").as("cell") +:
-          (0 until m).map(j => slice(col("qv"), j * subDim + 1, subDim).as(s"qs$j")): _*))
+    // probe list with the sub-sliced query vectors riding along for the
+    // ADC scan
+    val q = queryVectors(queries, idCol, vecCol, renameFirst = false)
+    val probes = broadcast(probeList(broadcast(q), centroids, nProbe)
+      .select(col("query_id") +: col("cell") +: subSlices(col("qv"), "qs", m, subDim): _*))
 
     // ADC scan over probed cells only: each corpus vector lives in
     // exactly one cell, so the cell join yields each (query, candidate)
     // pair at most once — no distinct needed (unlike LSH buckets)
-    val ascore = (0 until m).map { j =>
-      dot(col(s"qs$j"), element_at(typedLit(codebooks(j).map(_.toSeq).toSeq), col(s"code$j").cast("int")))
-    }.reduceLeft(_ + _)
-    val wApprox = Window.partitionBy("query_id").orderBy(col("ascore").desc, col("neighbor_id").asc)
-    val cand = coded.join(probes, Seq("cell"))
+    val cand = rerankCut(coded.join(probes, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), ascore.as("ascore"))
-      .withColumn("rk", row_number().over(wApprox))
-      .filter(col("rk") <= rerank)
-      .select("query_id", "neighbor_id")
+      .select(col("query_id"), col("neighbor_id"), adcScore(codebooks).as("ascore")),
+      col("ascore").desc, rerank)
 
     // full-precision re-rank of the candidate slice
-    val qv = broadcast(q.select(col("query_id"), col("qv")))
-    val wRank = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand
-      .join(c, Seq("neighbor_id"))
-      .join(qv, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
+    topK(rescore(cand, c, broadcast(q)), k)
   }
 
   /** All-pairs cosine near-duplicates ≥ threshold — the exact verification

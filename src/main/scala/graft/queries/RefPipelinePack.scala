@@ -386,6 +386,23 @@ object RefPipelinePack extends QueryPack {
              |)
              |GROUP BY metric ORDER BY metric""".stripMargin)),
 
+    // The flagship (SparkEntry.entry): the reference's view over events.
+    "metrics_view" -> QueryDef(
+      "The reference's consolidacao_de_metricas view: month-over-month % variation " +
+        "of average IDA per group (LAG + pivot + HAVING)",
+      (s, dir) => graft.ops.MetricsView(Tables.events(s, dir)),
+      Some(graft.ops.MetricsView.oracle)),
+
+    // Two-pass dynamic-pivot form (the engine-API entry point users call
+    // when the group list is not known up front). The testdata's
+    // event_type domain equals MetricsView.eventTypes, so the collected
+    // list — and therefore the result — matches the fixed-list oracle.
+    "metrics_view_dynamic" -> QueryDef(
+      "The flagship with the pivot group list collected from the data (two-pass " +
+        "dynamic pivot), the reference's original dynamic-column shape",
+      (s, dir) => graft.ops.MetricsView.dynamic(Tables.events(s, dir)),
+      Some(graft.ops.MetricsView.oracle)),
+
     // The flagship view SHAPE over the orders fact table (SURVEY.md §7.0:
     // the consolidacao family re-expressed over orders as well as events):
     // month × priority avg -> LAG pct-change -> pivot -> HAVING -> DESC.

@@ -247,20 +247,41 @@ class SimilaritySpec extends AnyFunSuite {
     assert(indexed == inline && indexed.nonEmpty)
   }
 
-  test("binary top-k: rerank >= corpus size degrades to exact brute force") {
-    val e = Tables.embeddings(spark, sf).filter(col("vec_id") < 200)
-    val queries = e.filter(col("vec_id") < 8)
+  test("exact limit: unpruned re-rank and IVF top-k equal brute force") {
+    // 200 vectors plus an exact duplicate of each (id + 1000): every
+    // neighbor has a twin at an identical cosine, so ranks inside each
+    // twin pair are decided by the shared neighbor_id tie-break alone
+    val base = Tables.embeddings(spark, sf).filter(col("vec_id") < 200)
+    val corpus = base.unionByName(base.withColumn("vec_id", col("vec_id") + 1000L))
+    val queries = corpus.filter(col("vec_id") < 8)
+    val n = corpus.count().toInt
+    assert(corpus.filter(aggregate(col("embedding"), lit(0.0),
+      (acc, x) => acc + x.cast("double") * x.cast("double")) === 0.0).isEmpty,
+      "zero-norm vectors are covered by their own test")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-    // with every corpus vector a candidate, the exact re-rank IS the
-    // brute-force answer — the approximation lives only in the cut
-    val all = rows(Similarity.binaryTopK(queries, e, k = 5, rerank = 100000))
-    val exact = rows(Similarity.bruteForceTopK(queries, e, k = 5))
-    assert(all == exact && all.nonEmpty)
+    val exact = rows(Similarity.bruteForceTopK(queries, corpus, k = 5))
+    assert(exact.length == 8 * 5)
+    assert(exact.groupBy(r => (r(0), r(3))).exists(_._2.size > 1),
+      "the fixture must put tied cosines inside the top-k")
+    val idx = java.nio.file.Files.createTempDirectory("ivf-exact-limit").toString
+    Similarity.writeIvfIndex(corpus, idx)
+    val cannotPrune = Seq(
+      "sq8TopK rerank >= n" -> Similarity.sq8TopK(queries, corpus, k = 5, rerank = n),
+      "binaryTopK rerank >= n" -> Similarity.binaryTopK(queries, corpus, k = 5, rerank = n),
+      "pqTopK rerank >= n" -> Similarity.pqTopK(queries, corpus, k = 5, rerank = n),
+      "ivfTopK nProbe = nCentroids" ->
+        Similarity.ivfTopK(queries, corpus, k = 5, nCentroids = 16, nProbe = 16),
+      "ivfTopKIndexed nProbe = nCentroids" ->
+        Similarity.ivfTopKIndexed(spark, idx, queries, k = 5, nProbe = 16),
+      "ivfpqTopK nProbe = nCentroids, rerank >= n" ->
+        Similarity.ivfpqTopK(queries, corpus, k = 5, nCentroids = 16, nProbe = 16, rerank = n))
+    cannotPrune.foreach { case (name, df) => assert(rows(df) == exact, name) }
     // the default cut keeps signatures useful: top-1 survives hamming
     // preselection on this corpus (sign-LSH at 64 planes is tight)
-    val cut = rows(Similarity.binaryTopK(queries, e, k = 1))
-    assert(cut == rows(Similarity.bruteForceTopK(queries, e, k = 1)))
+    val single = base.filter(col("vec_id") < 8)
+    assert(rows(Similarity.binaryTopK(single, base, k = 1)) ==
+      rows(Similarity.bruteForceTopK(single, base, k = 1)))
   }
 
   test("binary signatures reject non-64-dim vectors loudly") {
