@@ -1,14 +1,30 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_millis}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Loaders for the harness parquet tables (/root/repo/TESTDATA.md).
+/** Loaders for the harness parquet tables (TESTDATA.md), and
+  * the engine's one schema-less parquet read path.
   *
   * Every `SparkEntry.queries` entry receives an `sfDir` pointing at one of
   * the `/root/testdata/sf*` directories; these helpers are the single place
   * that maps a logical table name to its parquet file.
+  *
+  * Every parquet read that does not name its own schema goes through
+  * [[read]] (or [[schemaOf]]). A bare `spark.read.parquet(dir)` infers the
+  * schema from one footer in a Spark job on every call; [[read]] keeps the
+  * inferred schemas in a bounded map and hands the cached one to
+  * `spark.read.schema(s)`, so a repeated read of an unchanged table or a
+  * grown standing-index directory starts no job before its action. The
+  * map holds `StructType`s only, never rows. Its key is what Spark's
+  * inference reads (with `mergeSchema` off, the first data file of the
+  * read by path, assuming all files agree): that file's qualified path,
+  * length and modification time, plus the session values of the parquet
+  * confs that change what a footer infers to ([[inferenceConfs]]). A
+  * directory that only gains files keeps its key; a rewritten or
+  * compacted table gets a new file, length or mtime, and misses.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -16,7 +32,70 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
+
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private val schemas =
+    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StructType]): Boolean = size > 256
+    }
+
+  /** `spark.read.parquet(paths: _*)`, with the data schema taken from the
+    * metadata map (one footer job on a miss, none on a hit). Partition
+    * columns stay with Spark's partition discovery, which lists but runs
+    * no job. A read that finds no data file (an empty or missing
+    * directory) leaves the map alone and takes the bare reader, so
+    * Spark's own error stands.
+    */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    firstDataFile(spark, paths) match {
+      case None => spark.read.parquet(paths: _*)
+      case Some(f) =>
+        val key = (Seq(f.getPath.toString, f.getLen, f.getModificationTime) ++
+          inferenceConfs.map(spark.conf.getOption(_).getOrElse(""))).mkString("|")
+        val schema = schemas.synchronized(Option(schemas.get(key))).getOrElse {
+          // infer outside the lock: concurrent misses may infer twice
+          val s = spark.read.parquet(f.getPath.toString).schema
+          schemas.synchronized(schemas.put(key, s))
+          s
+        }
+        spark.read.schema(schema).parquet(paths: _*)
+    }
+
+  /** The schema a read of `paths` resolves to, partition columns included. */
+  def schemaOf(spark: SparkSession, paths: String*): StructType =
+    read(spark, paths: _*).schema
+
+  /** The file Spark's parquet inference reads: the first by qualified path
+    * of all files under `paths` (globs expanded) that no hidden component
+    * below its read root excludes.
+    */
+  private def firstDataFile(spark: SparkSession, paths: Seq[String]): Option[FileStatus] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    paths.flatMap { p =>
+      val root = new Path(p)
+      val fs = root.getFileSystem(conf)
+      Option(fs.globStatus(root)).toSeq.flatten.flatMap(files(fs, _))
+    }.minByOption(_.getPath.toString)
+  }
+
+  /** Spark's listing filter: `_*` (except `_k=v` partition dirs), `.*` and
+    * in-flight `*._COPYING_` names are not data.
+    */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  private def files(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName))
+      .flatMap(files(fs, _))
 
   def region(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "nation")

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -157,11 +158,11 @@ object Dedup {
     */
   private[graft] def liveFingerprints(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val admitted = spark.read.parquet(s"$dir/fp")
+    val admitted = Tables.read(spark, s"$dir/fp")
       .groupBy("fp").agg(sum("n").as("n"))
     val net =
       if (StandingIndex.exists(spark, s"$dir/retract")) {
-        val retracted = spark.read.parquet(s"$dir/retract")
+        val retracted = Tables.read(spark, s"$dir/retract")
           .select("fp", "doc_id").distinct()
           .groupBy("fp").agg(count(lit(1)).as("r"))
         admitted.join(retracted, Seq("fp"), "left")
@@ -189,12 +190,12 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
     StandingIndex.compact(spark, dir) { tmp =>
       val live = liveFingerprints(spark, dir).localCheckpoint()
-      spark.read.parquet(s"$dir/fp")
+      Tables.read(spark, s"$dir/fp")
         .groupBy("fp").agg(sum("n").as("n"))
         .join(live, Seq("fp"), "left_semi")
         .write.parquet(s"$tmp/fp")
       if (StandingIndex.exists(spark, s"$dir/retract"))
-        spark.read.parquet(s"$dir/retract")
+        Tables.read(spark, s"$dir/retract")
           .select("fp", "doc_id").distinct()
           .join(live, Seq("fp"), "left_semi")
           .write.parquet(s"$tmp/retract")
@@ -505,11 +506,11 @@ object Dedup {
     positionedShingleRows(corpus, n)
       .select(col("doc_id"), col("pos"), Hashing.portableTokenHash60(col("gram")).as("g"))
       .write.mode("overwrite").parquet(s"$dir/postings")
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = Tables.read(spark, s"$dir/postings")
     val weight = if (byOccurrence) count(lit(1)) else countDistinct("doc_id")
     postings.groupBy("g").agg(weight.as("df"))
       .write.mode("overwrite").parquet(s"$dir/df")
-    val dfT = spark.read.parquet(s"$dir/df")
+    val dfT = Tables.read(spark, s"$dir/df")
     spansFromCovered(
       postings.join(dfT.filter(col("df") >= minDf).select("g"), Seq("g"))
         .select("doc_id", "pos"), n)
@@ -537,9 +538,9 @@ object Dedup {
       n: Int,
       minDf: Long = 2L,
       byOccurrence: Boolean = false): DataFrame = {
-    val postings = spark.read.parquet(s"$indexDir/postings")
-    val df0 = spark.read.parquet(s"$indexDir/df")
-    val spans0 = spark.read.parquet(s"$indexDir/spans")
+    val postings = Tables.read(spark, s"$indexDir/postings")
+    val df0 = Tables.read(spark, s"$indexDir/df")
+    val spans0 = Tables.read(spark, s"$indexDir/spans")
     val victims = docIds.select(col(docIds.columns.head).as("doc_id")).distinct()
     val victimPostings = postings.join(broadcast(victims), Seq("doc_id"))
     // per-gram weight decrement = #victim docs holding the gram
@@ -612,9 +613,9 @@ object Dedup {
       n: Int,
       minDf: Long = 2L,
       byOccurrence: Boolean = false): DataFrame = {
-    val postings = spark.read.parquet(s"$indexDir/postings")
-    val df0 = spark.read.parquet(s"$indexDir/df")
-    val spans0 = spark.read.parquet(s"$indexDir/spans")
+    val postings = Tables.read(spark, s"$indexDir/postings")
+    val df0 = Tables.read(spark, s"$indexDir/df")
+    val spans0 = Tables.read(spark, s"$indexDir/spans")
     val clash = postings
       .join(broadcast(batch.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
       .select("doc_id").limit(1).collect()
@@ -1175,11 +1176,11 @@ object Dedup {
       threshold: Double,
       rowsPerBand: Int = 4,
       shingleN: Int = 3): DataFrame = {
-    val bands = spark.read.parquet(s"$indexDir/bands")
+    val bands = Tables.read(spark, s"$indexDir/bands")
     val liveBands = StandingIndex.dropRetracted(bands,
       StandingIndex.tombstones(spark, indexDir, "corpus_id"), "corpus_id")
     classifyAgainstIndex(
-      spark.read.parquet(s"$indexDir/shingles"),
+      Tables.read(spark, s"$indexDir/shingles"),
       liveBands,
       incoming, threshold, rowsPerBand, shingleN)
   }
@@ -1236,7 +1237,7 @@ object Dedup {
       // column order (readers match by name, but one layout is one schema)
       Seq("bands" -> Seq("band", "key", "corpus_id"), "shingles" -> Seq("corpus_id", "h"))
         .foreach { case (t, cols) =>
-          StandingIndex.dropRetracted(spark.read.parquet(s"$dir/$t"), tombs, "corpus_id")
+          StandingIndex.dropRetracted(Tables.read(spark, s"$dir/$t"), tombs, "corpus_id")
             .select(cols.map(col): _*)
             .write.parquet(s"$tmp/$t")
         }

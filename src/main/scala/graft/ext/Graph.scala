@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -206,8 +207,8 @@ object Graph {
       .map(_.toString)
     require(standingFiles.nonEmpty,
       s"refreshOrientedIndex: no standing edge table under $dir/edges — build the index first")
-    val edges0 = spark.read.parquet(standingFiles.toIndexedSeq: _*)
-    val oriented0 = spark.read.parquet(s"$dir/oriented")
+    val edges0 = Tables.read(spark, standingFiles.toIndexedSeq: _*)
+    val oriented0 = Tables.read(spark, s"$dir/oriented")
     // genuinely new edges; batch-bounded and consumed repeatedly
     val newEdges = batch.select("s", "d").distinct()
       .join(edges0, Seq("s", "d"), "left_anti")
@@ -215,12 +216,12 @@ object Graph {
     graft.io.BatchFiles.land(newEdges, s"$dir/edges", batchId)
     // degrees from the post-land edge table: graph-bound aggregate,
     // idempotent under replay by construction
-    degrees(spark.read.parquet(s"$dir/edges"))
+    degrees(Tables.read(spark, s"$dir/edges"))
       .write.mode("overwrite").parquet(s"$dir/degrees.next")
     graft.io.DirSwap.swapInto(fs,
       new org.apache.hadoop.fs.Path(s"$dir/degrees.next"),
       new org.apache.hadoop.fs.Path(s"$dir/degrees"))
-    val degNew = spark.read.parquet(s"$dir/degrees")
+    val degNew = Tables.read(spark, s"$dir/degrees")
     // victims: standing edges touching an endpoint whose degree changed
     val touched = newEdges.select(col("s").as("v"))
       .unionAll(newEdges.select(col("d").as("v"))).distinct()
@@ -296,8 +297,8 @@ object Graph {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val vic = nodes.select("v").distinct().localCheckpoint()
-    val edges0 = spark.read.parquet(s"$dir/edges")
-    val oriented0 = spark.read.parquet(s"$dir/oriented")
+    val edges0 = Tables.read(spark, s"$dir/edges")
+    val oriented0 = Tables.read(spark, s"$dir/oriented")
     // edges incident to a retracted node: dropped entirely. Derived from
     // BOTH the edge table and the oriented table's pairs — on a healthy
     // index they agree, but after a crash between the edges swap and the
@@ -330,12 +331,12 @@ object Graph {
     graft.io.DirSwap.swapInto(fs,
       new org.apache.hadoop.fs.Path(s"$dir/edges.next"),
       new org.apache.hadoop.fs.Path(s"$dir/edges"))
-    val edgesNew = spark.read.parquet(s"$dir/edges")
+    val edgesNew = Tables.read(spark, s"$dir/edges")
     degrees(edgesNew).write.mode("overwrite").parquet(s"$dir/degrees.next")
     graft.io.DirSwap.swapInto(fs,
       new org.apache.hadoop.fs.Path(s"$dir/degrees.next"),
       new org.apache.hadoop.fs.Path(s"$dir/degrees"))
-    val degNew = spark.read.parquet(s"$dir/degrees")
+    val degNew = Tables.read(spark, s"$dir/degrees")
     // survivor edges needing re-orientation: those touching a
     // degree-changed endpoint (two-hop-bounded, never the graph)
     val reorient = edgesNew

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -228,7 +229,7 @@ object Multimodal {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       maxHamming: Int = 10): DataFrame = {
-    val sigs = spark.read.parquet(s"$dir/sigs")
+    val sigs = Tables.read(spark, s"$dir/sigs")
     val live = StandingIndex.dropRetracted(sigs,
       StandingIndex.tombstones(spark, dir, "asset_id"), "asset_id")
     val a = live.select(col("band"), col("key"),
@@ -255,7 +256,7 @@ object Multimodal {
     */
   def contentDedupIndexed(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val ch = spark.read.parquet(s"$dir/chash")
+    val ch = Tables.read(spark, s"$dir/chash")
     val live = StandingIndex.dropRetracted(ch,
       StandingIndex.tombstones(spark, dir, "asset_id"), "asset_id")
     live.groupBy("h")
@@ -275,7 +276,7 @@ object Multimodal {
       Seq("sigs" -> Seq("asset_id", "phash", "band", "key"),
           "chash" -> Seq("asset_id", "kind", "h"))
         .foreach { case (t, cols) =>
-          StandingIndex.dropRetracted(spark.read.parquet(s"$dir/$t"), tombs, "asset_id")
+          StandingIndex.dropRetracted(Tables.read(spark, s"$dir/$t"), tombs, "asset_id")
             .select(cols.map(col): _*)
             .write.parquet(s"$tmp/$t")
         }

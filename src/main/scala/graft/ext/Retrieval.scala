@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,12 +51,12 @@ object Retrieval {
     * Shared by the one-shot build and [[compactIndex]].
     */
   private def deriveFromTf(spark: SparkSession, dir: String): Unit = {
-    val tfBack = spark.read.parquet(s"$dir/tf")
+    val tfBack = Tables.read(spark, s"$dir/tf")
     tfBack.groupBy("tok").agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$dir/df")
     tfBack.groupBy("doc_id").agg(sum("tf").as("len"))
       .write.mode("overwrite").parquet(s"$dir/dlen")
-    spark.read.parquet(s"$dir/dlen")
+    Tables.read(spark, s"$dir/dlen")
       .agg(count(lit(1)).as("n_docs"), avg("len").as("avg_len"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
@@ -80,11 +81,11 @@ object Retrieval {
   def compactIndex(spark: SparkSession, dir: String): Unit =
     StandingIndex.compact(spark, dir) { tmp =>
       val tombs = StandingIndex.tombstones(spark, dir, "doc_id")
-      StandingIndex.dropRetracted(spark.read.parquet(s"$dir/tf"), tombs, "doc_id")
+      StandingIndex.dropRetracted(Tables.read(spark, s"$dir/tf"), tombs, "doc_id")
         .write.parquet(s"$tmp/tf")
       deriveFromTf(spark, tmp)
       if (StandingIndex.exists(spark, s"$dir/pos"))
-        StandingIndex.dropRetracted(spark.read.parquet(s"$dir/pos"), tombs, "doc_id")
+        StandingIndex.dropRetracted(Tables.read(spark, s"$dir/pos"), tombs, "doc_id")
           .write.parquet(s"$tmp/pos")
     }
 
@@ -117,14 +118,14 @@ object Retrieval {
         .write.mode("append").parquet(s"$dir/dlen")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-      val mergedDf = spark.read.parquet(s"$dir/df")
+      val mergedDf = Tables.read(spark, s"$dir/df")
         .unionByName(delta.groupBy("tok").agg(count(lit(1)).as("df")))
         .groupBy("tok").agg(sum("df").as("df"))
       mergedDf.write.mode("overwrite").parquet(s"$dir/df.next")
       graft.io.DirSwap.swapInto(fs,
         new org.apache.hadoop.fs.Path(s"$dir/df.next"),
         new org.apache.hadoop.fs.Path(s"$dir/df"))
-      spark.read.parquet(s"$dir/dlen")
+      Tables.read(spark, s"$dir/dlen")
         .agg(count(lit(1)).as("n_docs"), avg("len").as("avg_len"))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats.next")
       graft.io.DirSwap.swapInto(fs,
@@ -194,7 +195,7 @@ object Retrieval {
   def compactPositionalIndex(spark: SparkSession, dir: String): Unit =
     if (StandingIndex.exists(spark, s"$dir/tf")) compactIndex(spark, dir)
     else StandingIndex.compact(spark, dir) { tmp =>
-      StandingIndex.dropRetracted(spark.read.parquet(s"$dir/pos"),
+      StandingIndex.dropRetracted(Tables.read(spark, s"$dir/pos"),
           StandingIndex.tombstones(spark, dir, "doc_id"), "doc_id")
         .write.parquet(s"$tmp/pos")
     }
@@ -205,7 +206,7 @@ object Retrieval {
     * the query-pruned slice, never the full table).
     */
   private def livePositions(spark: SparkSession, dir: String): DataFrame =
-    StandingIndex.dropRetracted(spark.read.parquet(s"$dir/pos"),
+    StandingIndex.dropRetracted(Tables.read(spark, s"$dir/pos"),
       StandingIndex.tombstones(spark, dir, "doc_id"), "doc_id")
 
   /** Exact PHRASE match over the positional index: occurrences are
@@ -302,14 +303,14 @@ object Retrieval {
     * is an index table. `qtoks` must be (query_id, tok) distinct rows.
     */
   def bm25Scores(spark: SparkSession, dir: String, qtoks: DataFrame): DataFrame = {
-    val dlen = spark.read.parquet(s"$dir/dlen")
+    val dlen = Tables.read(spark, s"$dir/dlen")
     StandingIndex.tombstones(spark, dir, "doc_id") match {
       case None =>
         bm25From(
-          spark.read.parquet(s"$dir/tf"),
-          spark.read.parquet(s"$dir/df"),
+          Tables.read(spark, s"$dir/tf"),
+          Tables.read(spark, s"$dir/df"),
           dlen,
-          spark.read.parquet(s"$dir/stats"),
+          Tables.read(spark, s"$dir/stats"),
           qtoks)
       case Some(t) =>
         // merge-on-read under tombstones: stats re-derive from the LIVE
@@ -318,8 +319,8 @@ object Retrieval {
         // bm25From on the query-token slice only
         val dlenLive = StandingIndex.dropRetracted(dlen, Some(t), "doc_id")
         bm25From(
-          spark.read.parquet(s"$dir/tf"),
-          spark.read.parquet(s"$dir/df"),
+          Tables.read(spark, s"$dir/tf"),
+          Tables.read(spark, s"$dir/df"),
           dlenLive,
           dlenLive.agg(count(lit(1)).as("n_docs"), avg("len").as("avg_len")),
           qtoks, Some(t))

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -611,7 +612,7 @@ object Similarity {
     * cent_id order.
     */
   private def readCentroids(spark: SparkSession, indexDir: String): Array[(Long, Array[Double])] =
-    spark.read.parquet(s"$indexDir/centroids")
+    Tables.read(spark, s"$indexDir/centroids")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
@@ -625,7 +626,7 @@ object Similarity {
     */
   private def liveCells(spark: SparkSession, indexDir: String): DataFrame =
     StandingIndex.dropRetracted(
-      spark.read.parquet(s"$indexDir/cells").withColumn("cell", col("cell").cast("long")),
+      Tables.read(spark, s"$indexDir/cells").withColumn("cell", col("cell").cast("long")),
       StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
 
   /** RANGE (radius) search from the MATERIALIZED IVF index: every corpus
@@ -725,22 +726,35 @@ object Similarity {
     val top = topK(tagged, k, Seq("nprobe")).select("nprobe", "query_id", "neighbor_id")
     val hits = exact.join(top, Seq("query_id", "neighbor_id"))
       .groupBy("nprobe").agg(count(lit(1)).as("n_hit"))
-    // a degenerate corpus can leave the exact panel EMPTY (one vector,
-    // self excluded): the oracle's hits CTE then has no rows, so the
-    // engine must emit none either — and never divide by the zero
     val nTruth = exact.agg(count(lit(1)).as("n_truth"))
     import assigned.sparkSession.implicits._
-    nProbes.map(_.toLong).toDF("nprobe")
-      .join(broadcast(nCand), Seq("nprobe"), "left")
-      .join(broadcast(hits), Seq("nprobe"), "left")
-      .crossJoin(broadcast(nTruth))
+    recallReport(nProbes.map(_.toLong).toDF("nprobe"), nCand, "n_candidates", hits,
+      Seq(nTruth))
+  }
+
+  /** The recall report both sweeps share: each setting (the one column of
+    * `settings`) left-joined to its `countCol` count and its `n_hit`, and
+    * crossed with the single-row `totals` (the exact panel's `n_truth`,
+    * plus any count reported as is). A degenerate corpus can leave the
+    * exact panel EMPTY (one vector, self excluded): the oracle's hits CTE
+    * then has no rows, so no row survives `n_truth > 0`, and nothing
+    * divides by the zero. Columns: the setting, the reported totals,
+    * `countCol`, `n_hit`, `recall` (6 dp).
+    */
+  private def recallReport(settings: DataFrame, counts: DataFrame, countCol: String,
+      hits: DataFrame, totals: Seq[DataFrame]): DataFrame = {
+    val key = settings.columns.head
+    val joined = settings
+      .join(broadcast(counts), Seq(key), "left")
+      .join(broadcast(hits), Seq(key), "left")
+    val reported = totals.flatMap(_.columns).filterNot(_ == "n_truth")
+    val nHit = coalesce(col("n_hit"), lit(0L))
+    totals.foldLeft(joined)((df, t) => df.crossJoin(broadcast(t)))
       .filter(col("n_truth") > 0)
-      .select(
-        col("nprobe"),
-        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        round(coalesce(col("n_hit"), lit(0L)).cast("double") /
-          col("n_truth"), 6).as("recall"))
+      .select((key +: reported).map(col) ++ Seq(
+        coalesce(col(countCol), lit(0L)).as(countCol),
+        nHit.as("n_hit"),
+        round(nHit.cast("double") / col("n_truth"), 6).as("recall")): _*)
   }
 
   /** Materialize the IVF index: `centroids/` (the trained model, tiny)
@@ -831,7 +845,7 @@ object Similarity {
     */
   def compactIvfIndex(spark: SparkSession, indexDir: String): Unit =
     StandingIndex.compact(spark, indexDir) { tmp =>
-      spark.read.parquet(s"$indexDir/centroids")
+      Tables.read(spark, s"$indexDir/centroids")
         .coalesce(1).write.parquet(s"$tmp/centroids")
       // an empty-corpus index has a centroid table but no cells
       // directory (writeIvfIndex's empty-model degrade) — compaction
@@ -1052,7 +1066,7 @@ object Similarity {
       val tombs = StandingIndex.tombstones(spark, indexDir, "vec_id")
       Seq("sigs", "vecs").foreach { t =>
         StandingIndex.dropRetracted(
-            spark.read.parquet(s"$indexDir/$t"), tombs, "neighbor_id", "vec_id")
+            Tables.read(spark, s"$indexDir/$t"), tombs, "neighbor_id", "vec_id")
           .write.parquet(s"$tmp/$t")
       }
     }
@@ -1108,7 +1122,7 @@ object Similarity {
     val live = StandingIndex.dropRetracted(cand,
       StandingIndex.tombstones(spark, indexDir, "vec_id"), "neighbor_id", "vec_id")
     topK(rescore(rerankCut(live, col("ham").asc, rerank),
-      spark.read.parquet(s"$indexDir/vecs"), q.select(col("query_id"), col("qv"))), k)
+      Tables.read(spark, s"$indexDir/vecs"), q.select(col("query_id"), col("qv"))), k)
   }
 
   /** The raw band-collision stream (query_id, neighbor_id, ham) of the
@@ -1120,7 +1134,7 @@ object Similarity {
     */
   private def bandCollisions(
       spark: SparkSession, indexDir: String, q: DataFrame, radius: Int): DataFrame = {
-    val sigs = spark.read.parquet(s"$indexDir/sigs")
+    val sigs = Tables.read(spark, s"$indexDir/sigs")
     (0 until 4).map { i =>
       val probes =
         if (radius <= 3)
@@ -1172,7 +1186,7 @@ object Similarity {
       enum -> bandCollisions(spark, indexDir, q, if (enum) 7 else 3)
         .distinct().localCheckpoint()
     }.toMap
-    val vecs = spark.read.parquet(s"$indexDir/vecs")
+    val vecs = Tables.read(spark, s"$indexDir/vecs")
     // exact tower over the index's stored (already normalized) vectors
     val exact = topK(cosines(vecs.join(qv, col("query_id") =!= col("neighbor_id"))), k)
       .select(col("query_id"), col("neighbor_id"))
@@ -1200,19 +1214,8 @@ object Similarity {
       val hits = exact.join(top, Seq("query_id", "neighbor_id"))
         .groupBy("radius").agg(count(lit(1)).as("n_hit"))
       import pairs.sparkSession.implicits._
-      rs.map(_.toLong).toDF("radius")
-        .join(broadcast(nPool), Seq("radius"), "left")
-        .join(broadcast(hits), Seq("radius"), "left")
-        .crossJoin(broadcast(nVerified))
-        .crossJoin(broadcast(nTruth))
-        .filter(col("n_truth") > 0)
-        .select(
-          col("radius"),
-          col("n_verified"),
-          coalesce(col("n_in_radius"), lit(0L)).as("n_in_radius"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)).cast("double") /
-            col("n_truth"), 6).as("recall"))
+      recallReport(rs.map(_.toLong).toDF("radius"), nPool, "n_in_radius", hits,
+        Seq(nVerified, nTruth))
     }.reduce(_ unionByName _)
   }
 

@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,7 +50,7 @@ object Compactor {
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     DirSwap.recoverInterrupted(fs, dirPath, ".compact-old")
     val before = parquetFiles(spark, dir)
-    val df = spark.read.parquet(dir)
+    val df = Tables.read(spark, dir)
     val rows = df.count()
     val tmp = dir.stripSuffix("/") + ".compact-tmp"
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // stale tmp from a crash

@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,7 +45,7 @@ object DeletionVectors {
     */
   def delete(spark: SparkSession, tableDir: String, dvDir: String,
       predicate: Column): Long = {
-    val doomed = spark.read.parquet(tableDir)
+    val doomed = Tables.read(spark, tableDir)
       .filter(predicate)
       .select(col("_metadata.file_path").as("file_path"),
         col("_metadata.row_index").as("row_index"))
@@ -57,14 +58,14 @@ object DeletionVectors {
     * harmless: anti-join semantics are idempotent.
     */
   def read(spark: SparkSession, tableDir: String, dvDir: String): DataFrame = {
-    val base = spark.read.parquet(tableDir)
+    val base = Tables.read(spark, tableDir)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dvDir), spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(dvDir))) return base
     val live = base
       .withColumn("__dv_file", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
-    val dv = spark.read.parquet(dvDir)
+    val dv = Tables.read(spark, dvDir)
       .select(col("file_path").as("__dv_file"), col("row_index").as("__dv_pos"))
     live.join(broadcast(dv), Seq("__dv_file", "__dv_pos"), "left_anti")
       .drop("__dv_file", "__dv_pos")

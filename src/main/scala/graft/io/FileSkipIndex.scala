@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,7 +70,7 @@ object FileSkipIndex {
       if (keepStored.length == stored.length) index
       else index.filter(col("file").isin(keepStored.toIndexedSeq: _*))
     if (fresh.isEmpty) kept
-    else kept.unionByName(build(spark.read.parquet(fresh.toIndexedSeq: _*), keys, measures))
+    else kept.unionByName(build(Tables.read(spark, fresh.toIndexedSeq: _*), keys, measures))
   }
 
   /** Files whose [min,max] envelope intersects [lo, hi] on `key`. The

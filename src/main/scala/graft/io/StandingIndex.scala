@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
@@ -58,7 +59,7 @@ object StandingIndex {
     */
   def tombstones(spark: SparkSession, dir: String, key: String): Option[DataFrame] =
     if (exists(spark, s"$dir/deleted"))
-      Some(spark.read.parquet(s"$dir/deleted").select(key).distinct())
+      Some(Tables.read(spark, s"$dir/deleted").select(key).distinct())
     else None
 
   /** `df` without the rows whose `key` is tombstoned. */

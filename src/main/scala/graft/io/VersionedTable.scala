@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -111,7 +112,7 @@ object VersionedTable {
     val dataDir =
       s"$tableDir/data/c${"%05d".format(next)}-audit-${java.util.UUID.randomUUID()}"
     df.write.mode("error").parquet(dataDir)
-    if (!audit(spark.read.parquet(dataDir))) return None
+    if (!audit(Tables.read(spark, dataDir))) return None
     val live =
       if (overwrite || prev == 0) Seq(dataDir)
       else liveDirs(spark, tableDir, prev) :+ dataDir
@@ -190,7 +191,7 @@ object VersionedTable {
     val next = prev + 1
     val dataDir = s"$tableDir/data/c${"%05d".format(next)}-compact"
     f.delete(new Path(dataDir), true) // orphan from a crashed prior run
-    RangeSortedSink.write(spark.read.parquet(merge: _*), dataDir,
+    RangeSortedSink.write(Tables.read(spark, merge: _*), dataDir,
       numFiles, sortCols: _*)
     publish(f, tableDir, next, keep :+ dataDir)
     next
@@ -200,7 +201,7 @@ object VersionedTable {
   def readAt(spark: SparkSession, tableDir: String,
       version: Option[Int] = None): DataFrame = {
     val v = version.getOrElse(latestVersion(spark, tableDir))
-    spark.read.parquet(liveDirs(spark, tableDir, v): _*)
+    Tables.read(spark, liveDirs(spark, tableDir, v): _*)
   }
 
   /** Row-level MERGE published as the next version — the UPDATE/UPSERT/

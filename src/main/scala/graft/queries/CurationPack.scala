@@ -356,7 +356,7 @@ object CurationPack extends QueryPack {
             .distinct()
             .coalesce(1).write.mode("overwrite").parquet(s"$tmp/edges")
         }
-        val edges = s.read.parquet(s"$edgeDir/edges")
+        val edges = Tables.read(s, s"$edgeDir/edges")
         val nodes = Tables.nation(s, dir).select(col("n_nationkey").as("node"), col("n_name"))
         Curation.domainRank(nodes, edges, iterations = 3)
           .select(col("n_name"), col("rank"))

@@ -255,7 +255,7 @@ object DedupPack extends QueryPack {
             .distinct()
             .write.mode("overwrite").parquet(s"$tmp/sh")
         }
-        val sh = s.read.parquet(s"$shDir/sh")
+        val sh = Tables.read(s, s"$shDir/sh")
         sh.groupBy("h").agg(array_sort(collect_set(col("source"))).as("srcs"))
           .filter(size(col("srcs")) >= 2)
           .select(explode(expr(
@@ -773,7 +773,7 @@ object DedupPack extends QueryPack {
           s, "substr-index", s"$dir/documents.parquet")(
           t => Dedup.writeSpanMaskIndex(substringDocs(s, dir), t, n = 5,
             byOccurrence = true))
-        s.read.parquet(s"$idx/spans").orderBy("doc_id", "span_start")
+        Tables.read(s, s"$idx/spans").orderBy("doc_id", "span_start")
       },
       Some(substringIndexOracle(""))),
 
@@ -956,7 +956,7 @@ object DedupPack extends QueryPack {
             docs.filter(pmod(col("doc_id"), lit(3)) === 1L), 1L, tmp, n = 5)
           graft.streaming.SpanMaskIngest.compactToBatchLayout(s, tmp, n = 5)
         }
-        s.read.parquet(s"$idx/spans").orderBy("doc_id", "span_start")
+        Tables.read(s, s"$idx/spans").orderBy("doc_id", "span_start")
       },
       Some("""WITH d AS (
              |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t
@@ -1126,8 +1126,8 @@ object DedupPack extends QueryPack {
     "dedup_lsh_recall" -> QueryDef(
       "Recall/precision of MinHash(16)+LSH(4x4) banding vs exact Jaccard >= 0.3",
       (s, dir) => {
-        val banded = s.read.parquet(s"${lshBandsDir(s, dir)}/bands")
-        val truth = s.read.parquet(s"${jaccardPairsDir(s, dir)}/pairs")
+        val banded = Tables.read(s, s"${lshBandsDir(s, dir)}/bands")
+        val truth = Tables.read(s, s"${jaccardPairsDir(s, dir)}/pairs")
           .select("doc_a", "doc_b")
         // shuffle_hash: corpus-sized signature self-join, same engine
         // pin as minHashLshPairs (round-16 broadcast-estimate hazard)
@@ -1210,7 +1210,7 @@ object DedupPack extends QueryPack {
       "Recall/precision/cost per MinHash band geometry (16x1..1x16) vs exact Jaccard >= 0.3",
       (s, dir) =>
         Dedup.lshBandSweep(Tables.documents(s, dir),
-            s.read.parquet(s"${jaccardPairsDir(s, dir)}/pairs"),
+            Tables.read(s, s"${jaccardPairsDir(s, dir)}/pairs"),
             rowsPerBandSettings = Seq(1, 2, 4, 8, 16))
           .orderBy("rows_per_band"),
       Some {
@@ -1393,7 +1393,7 @@ object DedupPack extends QueryPack {
     "dedup_cc_clusters" -> QueryDef(
       "Near-dup clusters: connected components over 3-gram Jaccard >= 0.3 pairs",
       (s, dir) =>
-        s.read.parquet(s"${ccLabelsDir(s, dir)}/labels")
+        Tables.read(s, s"${ccLabelsDir(s, dir)}/labels")
           .groupBy("cluster")
           .agg(count(lit(1)).as("n_docs"),
             min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
@@ -1418,7 +1418,7 @@ object DedupPack extends QueryPack {
     "dedup_cc_incremental" -> QueryDef(
       "CC labels maintained incrementally (base <300 subgraph + edge batch) == full rebuild",
       (s, dir) => {
-        val pairs = s.read.parquet(s"${jaccardPairsDir(s, dir)}/pairs")
+        val pairs = Tables.read(s, s"${jaccardPairsDir(s, dir)}/pairs")
           .select("doc_a", "doc_b")
         val base = pairs.filter(col("doc_a") < 300 && col("doc_b") < 300)
         val batch = pairs.filter(col("doc_a") >= 300 || col("doc_b") >= 300)
@@ -1452,9 +1452,9 @@ object DedupPack extends QueryPack {
     "dedup_cc_retract" -> QueryDef(
       "CC labels maintained under doc retraction (affected clusters re-solve) == survivor rebuild",
       (s, dir) => {
-        val pairs = s.read.parquet(s"${jaccardPairsDir(s, dir)}/pairs")
+        val pairs = Tables.read(s, s"${jaccardPairsDir(s, dir)}/pairs")
           .select("doc_a", "doc_b")
-        val labels = s.read.parquet(s"${ccLabelsDir(s, dir)}/labels")
+        val labels = Tables.read(s, s"${ccLabelsDir(s, dir)}/labels")
         val vic = Tables.documents(s, dir)
           .filter(pmod(col("doc_id"), lit(3L)) === 0).select("doc_id")
         Dedup.retractComponents(labels, pairs, vic)
@@ -1475,7 +1475,7 @@ object DedupPack extends QueryPack {
       "Corpus size after canonical-per-cluster dedup (keep min doc per component)",
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        s.read.parquet(s"${ccLabelsDir(s, dir)}/labels")
+        Tables.read(s, s"${ccLabelsDir(s, dir)}/labels")
           .agg(count(lit(1)).as("n_clustered"),
             countDistinct("cluster").as("n_clusters"))
           .crossJoin(docs.agg(count(lit(1)).as("n_corpus")))
@@ -1503,7 +1503,7 @@ object DedupPack extends QueryPack {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val docs = Tables.documents(s, dir)
-        val labels = s.read.parquet(s"${ccLabelsDir(s, dir)}/labels")
+        val labels = Tables.read(s, s"${ccLabelsDir(s, dir)}/labels")
         val w = Window.partitionBy("cluster")
           .orderBy(col("q").desc, col("doc_id").asc)
         labels
@@ -1553,7 +1553,7 @@ object DedupPack extends QueryPack {
       "90/5/5 split hashed on near-dup cluster representatives (clusters never straddle)",
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val labels = s.read.parquet(s"${ccLabelsDir(s, dir)}/labels")
+        val labels = Tables.read(s, s"${ccLabelsDir(s, dir)}/labels")
         val rep = coalesce(col("cluster"), col("doc_id"))
         val bucket = pmod(Hashing.portableTokenHash(rep.cast("string")), lit(20L))
         val split = when(bucket < 18, "train").when(bucket === 18, "val")
@@ -1647,7 +1647,7 @@ object DedupPack extends QueryPack {
     // resolve the pairs artifact FIRST (sequentially — see jaccardPairsDir)
     val pairs = jaccardPairsDir(s, dir)
     graft.io.IndexCatalog.resolve(s, "cc-labels", s"$dir/documents.parquet") { tmp =>
-      Dedup.connectedComponents(s.read.parquet(s"$pairs/pairs"))
+      Dedup.connectedComponents(Tables.read(s, s"$pairs/pairs"))
         .write.mode("overwrite").parquet(s"$tmp/labels")
     }
   }

@@ -78,7 +78,7 @@ object GraphPack extends QueryPack {
       (s, dir) => {
         val idx = graphIndexDir(s, dir)
         Graph.triangleStatsFrom(
-          s.read.parquet(s"$idx/oriented"), s.read.parquet(s"$idx/degrees"))
+          Tables.read(s, s"$idx/oriented"), Tables.read(s, s"$idx/degrees"))
       },
       Some(s"""$edgeCte,
              |rk AS (SELECT v, dg * 1000000000000 + v AS r FROM deg),
@@ -121,8 +121,8 @@ object GraphPack extends QueryPack {
       "Top-10 predicted co-purchase links by common-neighbor Jaccard",
       (s, dir) => {
         val idx = graphIndexDir(s, dir)
-        val o = s.read.parquet(s"$idx/oriented")
-        val deg = s.read.parquet(s"$idx/degrees")
+        val o = Tables.read(s, s"$idx/oriented")
+        val deg = Tables.read(s, s"$idx/degrees")
         val und = o.select(col("u").as("n"), col("w").as("v"))
           .unionAll(o.select(col("w").as("n"), col("u").as("v")))
         val cn = Graph.commonNeighborCounts(
@@ -161,7 +161,7 @@ object GraphPack extends QueryPack {
     // that justifies the orientation above).
     "graph_degrees" -> QueryDef(
       "Degree distribution of the co-purchase graph",
-      (s, dir) => s.read.parquet(s"${graphIndexDir(s, dir)}/degrees")
+      (s, dir) => Tables.read(s, s"${graphIndexDir(s, dir)}/degrees")
         .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
         .orderBy("deg"),
       Some(s"""$edgeCte
@@ -192,13 +192,13 @@ object GraphPack extends QueryPack {
           s, "graph-refresh", s"$dir/lineitem.parquet") { tmp =>
           coPurchaseEdgesWhere(s, dir, pmod(col("l_orderkey"), lit(40L)) === 0)
             .write.mode("overwrite").parquet(s"$tmp/edges")
-          val standing = s.read.parquet(s"$tmp/edges")
+          val standing = Tables.read(s, s"$tmp/edges")
           graft.io.BatchFiles.land(
             coPurchaseEdgesWhere(s, dir, pmod(col("l_orderkey"), lit(40L)) === 20)
               .join(standing, Seq("s", "d"), "left_anti"),
             s"$tmp/edges", batchId = 1L)
         }
-        Graph.degrees(s.read.parquet(s"$idx/edges"))
+        Graph.degrees(Tables.read(s, s"$idx/edges"))
           .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
           .orderBy("deg")
       },
@@ -226,7 +226,7 @@ object GraphPack extends QueryPack {
           s, "graph-tri-refresh", s"$dir/lineitem.parquet") { tmp =>
           coPurchaseEdgesWhere(s, dir, pmod(col("l_orderkey"), lit(40L)) === 0)
             .write.mode("overwrite").parquet(s"$tmp/edges")
-          val e0 = s.read.parquet(s"$tmp/edges")
+          val e0 = Tables.read(s, s"$tmp/edges")
           Graph.degrees(e0).write.mode("overwrite").parquet(s"$tmp/degrees")
           Graph.orient(e0).write.mode("overwrite").parquet(s"$tmp/oriented")
           Graph.refreshOrientedIndex(s, tmp,
@@ -234,7 +234,7 @@ object GraphPack extends QueryPack {
             batchId = 1L)
         }
         Graph.triangleStatsFrom(
-          s.read.parquet(s"$idx/oriented"), s.read.parquet(s"$idx/degrees"))
+          Tables.read(s, s"$idx/oriented"), Tables.read(s, s"$idx/degrees"))
       },
       Some(s"""$edgeCte,
              |rk AS (SELECT v, dg * 1000000000000 + v AS r FROM deg),
@@ -279,15 +279,15 @@ object GraphPack extends QueryPack {
           s, "graph-tri-retract", s"$dir/lineitem.parquet") { tmp =>
           val e0 = coPurchaseEdges(s, dir)
           e0.write.mode("overwrite").parquet(s"$tmp/edges")
-          val landed = s.read.parquet(s"$tmp/edges")
+          val landed = Tables.read(s, s"$tmp/edges")
           Graph.degrees(landed).write.mode("overwrite").parquet(s"$tmp/degrees")
           Graph.orient(landed).write.mode("overwrite").parquet(s"$tmp/oriented")
           Graph.retractNodesFromOrientedIndex(s, tmp,
-            s.read.parquet(s"$tmp/degrees")
+            Tables.read(s, s"$tmp/degrees")
               .filter(pmod(col("v"), lit(17L)) === 0).select("v"))
         }
         Graph.triangleStatsFrom(
-          s.read.parquet(s"$idx/oriented"), s.read.parquet(s"$idx/degrees"))
+          Tables.read(s, s"$idx/oriented"), Tables.read(s, s"$idx/degrees"))
       },
       Some(s"""$edgeCte,
              |e2 AS (SELECT s, d FROM e WHERE s % 17 != 0 AND d % 17 != 0),
@@ -332,10 +332,10 @@ object GraphPack extends QueryPack {
       "BFS layers (depth<=3) from the min-id node: nodes reached per depth",
       (s, dir) => {
         val idx = graphIndexDir(s, dir)
-        val o = s.read.parquet(s"$idx/oriented")
+        val o = Tables.read(s, s"$idx/oriented")
         val und = o.select(col("u").as("n"), col("w").as("v"))
           .unionAll(o.select(col("w").as("n"), col("u").as("v")))
-        val deg = s.read.parquet(s"$idx/degrees")
+        val deg = Tables.read(s, s"$idx/degrees")
         val l0 = deg.agg(min(col("v")).as("v")).select(col("v"), lit(0L).as("dist"))
         val layers = (1 to 3).foldLeft(Seq(l0)) { (ls, d) =>
           val next = ls.last.select(col("v").as("fv"))
@@ -389,11 +389,11 @@ object GraphPack extends QueryPack {
       "Top-20 communities after 3 synchronous label-propagation rounds",
       (s, dir) => {
         val idx = graphIndexDir(s, dir)
-        val o = s.read.parquet(s"$idx/oriented")
+        val o = Tables.read(s, s"$idx/oriented")
         val und = o.select(col("u").as("n"), col("w").as("v"))
           .unionAll(o.select(col("w").as("n"), col("u").as("v")))
           .repartition(col("v")).localCheckpoint()
-        val deg = s.read.parquet(s"$idx/degrees")
+        val deg = Tables.read(s, s"$idx/degrees")
         val lp3 = (1 to 3).foldLeft(deg.select(col("v"), col("v").as("lab"))) {
           (labels, _) =>
             und.join(labels, "v")
@@ -423,7 +423,7 @@ object GraphPack extends QueryPack {
       "Top-20 communities at the label-propagation fixpoint (converged, cap 8)",
       (s, dir) => {
         val idx = graphIndexDir(s, dir)
-        val o = s.read.parquet(s"$idx/oriented")
+        val o = Tables.read(s, s"$idx/oriented")
         val und = o.select(col("u").as("n"), col("w").as("v"))
           .unionAll(o.select(col("w").as("n"), col("u").as("v")))
         val (labels, _) = Graph.labelPropagationConverged(und, maxRounds = 8)
@@ -445,7 +445,7 @@ object GraphPack extends QueryPack {
       "5-core of the co-purchase graph: per-node within-core degree (converged peel, cap 8)",
       (s, dir) => {
         val idx = graphIndexDir(s, dir)
-        val o = s.read.parquet(s"$idx/oriented")
+        val o = Tables.read(s, s"$idx/oriented")
         val und = o.select(col("u").as("n"), col("w").as("v"))
           .unionAll(o.select(col("w").as("n"), col("u").as("v")))
         val (core, _) = Graph.kCoreConverged(und, k = 5, maxRounds = 8)

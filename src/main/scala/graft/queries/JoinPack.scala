@@ -520,7 +520,7 @@ object JoinPack extends QueryPack {
           enrich(even = true).write.mode("overwrite").parquet(s"$tmp/mv")
           enrich(even = false).write.mode("append").parquet(s"$tmp/mv")
         }
-        s.read.parquet(s"$mv/mv")
+        Tables.read(s, s"$mv/mv")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n"), sum("qty").as("sum_qty"))
           .orderBy("o_orderpriority")

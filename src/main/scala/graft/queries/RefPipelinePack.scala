@@ -42,7 +42,7 @@ object RefPipelinePack extends QueryPack {
           col("l_quantity").cast("long").as("qty"))
       graft.io.RangeSortedSink.write(slice, s"$tmp/data", numFiles = 16,
         col("l_orderkey"))
-      graft.io.FileSkipIndex.build(s.read.parquet(s"$tmp/data"),
+      graft.io.FileSkipIndex.build(Tables.read(s, s"$tmp/data"),
           Seq("l_orderkey"), measures = Seq("qty"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/index")
     }
@@ -59,7 +59,7 @@ object RefPipelinePack extends QueryPack {
           col("l_quantity").cast("long").as("qty"))
       slice.repartition(16, col("line_uid"))
         .write.mode("overwrite").parquet(s"$tmp/data")
-      graft.io.FileSkipIndex.buildBloom(s.read.parquet(s"$tmp/data"), "line_uid")
+      graft.io.FileSkipIndex.buildBloom(Tables.read(s, s"$tmp/data"), "line_uid")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/index")
     }
 
@@ -927,7 +927,7 @@ object RefPipelinePack extends QueryPack {
             .toDF("o_orderpriority", "speed")
             .coalesce(1).write.mode("overwrite").parquet(s"$tmp/dim")
         }
-        val dim = s.read.parquet(s"$lay/dim")
+        val dim = Tables.read(s, s"$lay/dim")
         // explicit schema: an all-empty partitioned write leaves no
         // partition dirs or footers to infer from (partition column
         // matched by name)
@@ -956,9 +956,9 @@ object RefPipelinePack extends QueryPack {
       "Range-sorted layout + min/max file index: pruned range read vs original",
       (s, dir) => {
         val idx = fileskipIndexDir(s, dir)
-        val schema = s.read.parquet(s"$idx/data").schema
+        val schema = Tables.schemaOf(s, s"$idx/data")
         graft.io.FileSkipIndex.prunedRead(
-            s, s.read.parquet(s"$idx/index"), schema, "l_orderkey", 1000L, 3000L)
+            s, Tables.read(s, s"$idx/index"), schema, "l_orderkey", 1000L, 3000L)
           .agg(count(lit(1)).as("n"),
             count_distinct(col("l_orderkey")).as("n_orders"),
             sum("qty").as("sum_qty"),
@@ -982,9 +982,9 @@ object RefPipelinePack extends QueryPack {
       "Manifest-style COUNT/SUM: index rows for covered files + boundary-file residual",
       (s, dir) => {
         val idx = fileskipIndexDir(s, dir)
-        val schema = s.read.parquet(s"$idx/data").schema
+        val schema = Tables.schemaOf(s, s"$idx/data")
         graft.io.FileSkipIndex.metadataRangeAgg(
-          s, s.read.parquet(s"$idx/index"), schema, "l_orderkey", 500L, 20000L, "qty")
+          s, Tables.read(s, s"$idx/index"), schema, "l_orderkey", 500L, 20000L, "qty")
       },
       Some("""SELECT COUNT(*) AS n_rows,
              |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
@@ -1005,9 +1005,9 @@ object RefPipelinePack extends QueryPack {
       "Bloom-index point lookup on a hash-distributed layout: ~1 file read of 16",
       (s, dir) => {
         val idx = bloomIndexDir(s, dir)
-        val schema = s.read.parquet(s"$idx/data").schema
+        val schema = Tables.schemaOf(s, s"$idx/data")
         graft.io.FileSkipIndex.bloomPointRead(
-            s, s.read.parquet(s"$idx/index"), schema, "line_uid", 10001L)
+            s, Tables.read(s, s"$idx/index"), schema, "line_uid", 10001L)
           .select(col("l_orderkey"),
             col("l_linenumber").cast("long").as("lineno"), col("qty"))
       },
@@ -1075,7 +1075,7 @@ object RefPipelinePack extends QueryPack {
             col("l_orderkey"), col("l_linenumber"))
           ()
         }
-        s.read.parquet(s"$cdir/t")
+        Tables.read(s, s"$cdir/t")
           .groupBy(pmod(col("l_orderkey"), lit(7L)).as("bucket"))
           .agg(count(lit(1)).as("n"), sum("qty").as("sum_qty"),
             min("l_orderkey").as("min_key"), max("l_orderkey").as("max_key"))
@@ -1250,7 +1250,7 @@ object RefPipelinePack extends QueryPack {
             .coalesce(1).write.parquet(s"$tmp/gc")
           ()
         }
-        val gc = s.read.parquet(s"$tdir/gc")
+        val gc = Tables.read(s, s"$tdir/gc")
         graft.io.VersionedTable.readAt(s, s"$tdir/t")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))

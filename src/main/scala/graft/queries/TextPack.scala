@@ -246,7 +246,7 @@ object TextPack extends QueryPack {
         // the per-doc LM profile is a STANDING score table (what a
         // curation pipeline persists): the tokenize + bigram model +
         // per-doc scoring runs once per corpus version, rollups read it
-        s.read.parquet(graft.io.IndexCatalog.resolve(
+        Tables.read(s, graft.io.IndexCatalog.resolve(
             s, "lm-profile", s"$dir/documents.parquet") { tmp =>
             graft.ext.TextAnalysis.bigramLmProfile(Tables.documents(s, dir))
               .write.mode("overwrite").parquet(s"$tmp/p")
@@ -349,7 +349,7 @@ object TextPack extends QueryPack {
           graft.ext.TextAnalysis.bpeMerges(toks.select("tok"), rounds = 2)
             .write.mode("overwrite").parquet(s"$tmp/merges")
         }
-        val merges = s.read.parquet(s"$modelDir/merges").collect()
+        val merges = Tables.read(s, s"$modelDir/merges").collect()
         val encoded = merges.sortBy(_.getInt(0)).foldLeft(col("tok")) { (c, m) =>
           org.apache.spark.sql.functions.replace(
             c, lit(m.getString(1)), lit((0xE000 + m.getInt(0)).toChar.toString))

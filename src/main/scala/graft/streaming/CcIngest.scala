@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -45,7 +46,7 @@ object CcIngest {
     val labelsPath = new org.apache.hadoop.fs.Path(s"$labelDir/labels")
     val updated =
       if (fs.exists(labelsPath))
-        Dedup.incrementalComponents(spark.read.parquet(labelsPath.toString), pairs)
+        Dedup.incrementalComponents(Tables.read(spark, labelsPath.toString), pairs)
       else
         Dedup.connectedComponents(pairs)
     updated.write.mode("overwrite").parquet(s"$labelDir/labels.next")
@@ -64,5 +65,5 @@ object CcIngest {
 
   /** The served label table. */
   def labels(spark: SparkSession, labelDir: String): DataFrame =
-    spark.read.parquet(s"$labelDir/labels")
+    Tables.read(spark, s"$labelDir/labels")
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,7 +47,7 @@ object CdcIngest {
     val compacted = ChangeCapture.compactLog(batch, keyCols, seqCol)
     val merged =
       if (fs.exists(statePath))
-        ChangeCapture.seqMerge(spark.read.parquet(stateDir), compacted, keyCols, seqCol)
+        ChangeCapture.seqMerge(Tables.read(spark, stateDir), compacted, keyCols, seqCol)
       else compacted
     val tmp = stateDir.stripSuffix("/") + ".tmp"
     fs.delete(new Path(tmp), true)
@@ -71,7 +72,7 @@ object CdcIngest {
   def servedState(
       spark: SparkSession, stateDir: String,
       seqCol: String = "seq", opCol: String = "op"): DataFrame =
-    spark.read.parquet(stateDir)
+    Tables.read(spark, stateDir)
       .filter(col(opCol) =!= "D")
       .drop(opCol, seqCol)
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -34,12 +35,12 @@ object EventStream {
     * schema from the files already present (one driver-side footer read —
     * later-arriving files must match, the standard file-stream contract)
     * and route ts through the SAME normalization as the batch reader.
-    * ONE place for the ts handling rule: [[graft.Tables.normalizeTs]].
+    * ONE place for the ts handling rule: [[Tables.normalizeTs]].
     */
   private def source(spark: SparkSession, eventsDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(eventsDir).schema
-    graft.Tables.normalizeTs(
+    val fileSchema = Tables.schemaOf(spark, eventsDir)
+    Tables.normalizeTs(
       spark.readStream.schema(fileSchema).parquet(eventsDir))
   }
 
@@ -56,7 +57,7 @@ object EventStream {
   def staticEnriched(spark: SparkSession, eventsDir: String, sfDir: String): DataFrame =
     source(spark, eventsDir)
       .withColumn("n_key", pmod(col("user_id"), lit(25L)))
-      .join(broadcast(graft.Tables.nation(spark, sfDir)
+      .join(broadcast(Tables.nation(spark, sfDir)
         .select(col("n_nationkey").as("n_key"), col("n_name"))), Seq("n_key"))
       .groupBy("n_name")
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
@@ -174,7 +175,7 @@ object EventStream {
       outDir: String,
       checkpointDir: String,
       threshold: Double = 0.3): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fileSchema = spark.read.parquet(docsDir).schema
+    val fileSchema = Tables.schemaOf(spark, docsDir)
     val incoming = spark.readStream.schema(fileSchema).parquet(docsDir)
     incoming.writeStream
       .option("checkpointLocation", checkpointDir)

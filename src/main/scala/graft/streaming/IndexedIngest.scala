@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.io.FileSkipIndex
@@ -42,8 +43,8 @@ object IndexedIngest {
     val idxPath = new org.apache.hadoop.fs.Path(indexDir)
     graft.io.DirSwap.recoverInterrupted(fs, idxPath, ".old")
     val existing =
-      if (fs.exists(idxPath)) spark.read.parquet(indexDir)
-      else FileSkipIndex.build(spark.read.parquet(tableDir), keys, measures).limit(0)
+      if (fs.exists(idxPath)) Tables.read(spark, indexDir)
+      else FileSkipIndex.build(Tables.read(spark, tableDir), keys, measures).limit(0)
     val refreshed = FileSkipIndex.refresh(spark, tableDir, existing, keys, measures)
     val idxTmp = indexDir.stripSuffix("/") + ".tmp"
     fs.delete(new org.apache.hadoop.fs.Path(idxTmp), true)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -89,8 +90,8 @@ object QualityGate {
       spark: SparkSession, eventsDir: String, outDir: String,
       checkpointDir: String, checks: Seq[RowCheck] = eventChecks): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(eventsDir).schema
-    val src = graft.Tables.normalizeTs(
+    val fileSchema = Tables.schemaOf(spark, eventsDir)
+    val src = Tables.normalizeTs(
       spark.readStream.schema(fileSchema).parquet(eventsDir))
     src.writeStream
       .option("checkpointLocation", checkpointDir)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -91,14 +92,14 @@ object RetrievalIngest {
     * index, so results equal a full batch build over the same documents.
     */
   def bm25(spark: SparkSession, indexDir: String, qtoks: DataFrame): DataFrame = {
-    val dlen = spark.read.parquet(s"$indexDir/dlen")
+    val dlen = Tables.read(spark, s"$indexDir/dlen")
     // retraction composes with the log layout: stats derive from the
     // LIVE doc lengths and bm25From applies the tombstones merge-on-read
     val tombs = StandingIndex.tombstones(spark, indexDir, "doc_id")
     val dlenLive = StandingIndex.dropRetracted(dlen, tombs, "doc_id")
     Retrieval.bm25From(
-      spark.read.parquet(s"$indexDir/tf"),
-      spark.read.parquet(s"$indexDir/df").groupBy("tok").agg(sum("df").as("df")),
+      Tables.read(spark, s"$indexDir/tf"),
+      Tables.read(spark, s"$indexDir/df").groupBy("tok").agg(sum("df").as("df")),
       dlenLive,
       dlenLive.agg(count(lit(1)).as("n_docs"), avg("len").as("avg_len")),
       qtoks, tombs)

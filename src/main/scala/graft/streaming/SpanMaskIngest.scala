@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -89,8 +90,8 @@ object SpanMaskIngest {
     */
   def servedSpans(spark: SparkSession, indexDir: String, n: Int,
       minDf: Long = 2L): DataFrame = {
-    val postings = spark.read.parquet(s"$indexDir/postings")
-    val dup = spark.read.parquet(s"$indexDir/df")
+    val postings = Tables.read(spark, s"$indexDir/postings")
+    val dup = Tables.read(spark, s"$indexDir/df")
       .groupBy("g").agg(sum("df").as("df"))
       .filter(col("df") >= minDf).select("g")
     Dedup.spansFromCovered(
@@ -114,12 +115,12 @@ object SpanMaskIngest {
   def compactToBatchLayout(spark: SparkSession, indexDir: String, n: Int,
       minDf: Long = 2L): Unit =
     StandingIndex.compact(spark, indexDir) { tmp =>
-      spark.read.parquet(s"$indexDir/postings").write.parquet(s"$tmp/postings")
-      spark.read.parquet(s"$indexDir/df")
+      Tables.read(spark, s"$indexDir/postings").write.parquet(s"$tmp/postings")
+      Tables.read(spark, s"$indexDir/df")
         .groupBy("g").agg(sum("df").as("df"))
         .write.parquet(s"$tmp/df")
-      val postings = spark.read.parquet(s"$tmp/postings")
-      val dup = spark.read.parquet(s"$tmp/df")
+      val postings = Tables.read(spark, s"$tmp/postings")
+      val dup = Tables.read(spark, s"$tmp/df")
         .filter(col("df") >= minDf).select("g")
       Dedup.spansFromCovered(
         postings.join(dup, Seq("g")).select("doc_id", "pos"), n)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -105,7 +106,7 @@ object TrainIngest {
     */
   def servedKept(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("fp").orderBy("doc_id")
-    spark.read.parquet(s"$dir/kept")
+    Tables.read(spark, s"$dir/kept")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .drop("rk")
