@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import graft.io.DataFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_millis}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -54,7 +54,8 @@ object Tables {
     * Spark's own error stands.
     */
   def read(spark: SparkSession, paths: String*): DataFrame =
-    firstDataFile(spark, paths) match {
+    // the file Spark's inference reads: the first data file by qualified path
+    DataFiles.list(spark, paths: _*).minByOption(_.getPath.toString) match {
       case None => spark.read.parquet(paths: _*)
       case Some(f) =>
         val key = (Seq(f.getPath.toString, f.getLen, f.getModificationTime) ++
@@ -71,31 +72,6 @@ object Tables {
   /** The schema a read of `paths` resolves to, partition columns included. */
   def schemaOf(spark: SparkSession, paths: String*): StructType =
     read(spark, paths: _*).schema
-
-  /** The file Spark's parquet inference reads: the first by qualified path
-    * of all files under `paths` (globs expanded) that no hidden component
-    * below its read root excludes.
-    */
-  private def firstDataFile(spark: SparkSession, paths: Seq[String]): Option[FileStatus] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    paths.flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(conf)
-      Option(fs.globStatus(root)).toSeq.flatten.flatMap(files(fs, _))
-    }.minByOption(_.getPath.toString)
-  }
-
-  /** Spark's listing filter: `_*` (except `_k=v` partition dirs), `.*` and
-    * in-flight `*._COPYING_` names are not data.
-    */
-  private def hidden(name: String): Boolean =
-    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-      name.endsWith("._COPYING_")
-
-  private def files(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
-    if (!st.isDirectory) Seq(st)
-    else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName))
-      .flatMap(files(fs, _))
 
   def region(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "nation")

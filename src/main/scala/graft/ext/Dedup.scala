@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.io.StandingIndex
+import graft.io.{DataFiles, StandingIndex}
 
 /** Deduplication operators for a training-data pipeline: exact
   * (fingerprint group-by), MinHash+LSH banded near-dup, SimHash, and
@@ -161,7 +161,7 @@ object Dedup {
     val admitted = Tables.read(spark, s"$dir/fp")
       .groupBy("fp").agg(sum("n").as("n"))
     val net =
-      if (StandingIndex.exists(spark, s"$dir/retract")) {
+      if (DataFiles.exists(spark, s"$dir/retract")) {
         val retracted = Tables.read(spark, s"$dir/retract")
           .select("fp", "doc_id").distinct()
           .groupBy("fp").agg(count(lit(1)).as("r"))
@@ -194,7 +194,7 @@ object Dedup {
         .groupBy("fp").agg(sum("n").as("n"))
         .join(live, Seq("fp"), "left_semi")
         .write.parquet(s"$tmp/fp")
-      if (StandingIndex.exists(spark, s"$dir/retract"))
+      if (DataFiles.exists(spark, s"$dir/retract"))
         Tables.read(spark, s"$dir/retract")
           .select("fp", "doc_id").distinct()
           .join(live, Seq("fp"), "left_semi")

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.Tables
+import graft.io.{DataFiles, DirSwap}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -197,13 +198,10 @@ object Graph {
       dir: String,
       batch: DataFrame,
       batchId: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     // standing edges, this batch's own (possibly replayed) files excluded
     val ownPrefix = f"batch$batchId%06d_"
-    val standingFiles = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/edges"))
-      .map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith(ownPrefix))
+    val standingFiles = DataFiles.list(spark, s"$dir/edges").map(_.getPath)
+      .filterNot(_.getName.startsWith(ownPrefix))
       .map(_.toString)
     require(standingFiles.nonEmpty,
       s"refreshOrientedIndex: no standing edge table under $dir/edges — build the index first")
@@ -216,11 +214,10 @@ object Graph {
     graft.io.BatchFiles.land(newEdges, s"$dir/edges", batchId)
     // degrees from the post-land edge table: graph-bound aggregate,
     // idempotent under replay by construction
-    degrees(Tables.read(spark, s"$dir/edges"))
-      .write.mode("overwrite").parquet(s"$dir/degrees.next")
-    graft.io.DirSwap.swapInto(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/degrees.next"),
-      new org.apache.hadoop.fs.Path(s"$dir/degrees"))
+    DirSwap.replace(spark, s"$dir/degrees") { next =>
+      degrees(Tables.read(spark, s"$dir/edges"))
+        .write.mode("overwrite").parquet(next)
+    }
     val degNew = Tables.read(spark, s"$dir/degrees")
     // victims: standing edges touching an endpoint whose degree changed
     val touched = newEdges.select(col("s").as("v"))
@@ -243,11 +240,10 @@ object Graph {
     val ends = toOrient.select(col("s").as("v"))
       .unionAll(toOrient.select(col("d").as("v"))).distinct()
     val degSlice = degNew.join(broadcast(ends), Seq("v"), "left_semi")
-    kept.unionByName(orientWith(toOrient, degSlice))
-      .write.mode("overwrite").parquet(s"$dir/oriented.next")
-    graft.io.DirSwap.swapInto(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/oriented.next"),
-      new org.apache.hadoop.fs.Path(s"$dir/oriented"))
+    DirSwap.replace(spark, s"$dir/oriented") { next =>
+      kept.unionByName(orientWith(toOrient, degSlice))
+        .write.mode("overwrite").parquet(next)
+    }
   }
 
   /** RETRACT nodes from the standing oriented-adjacency index — the
@@ -294,8 +290,6 @@ object Graph {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       nodes: DataFrame): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val vic = nodes.select("v").distinct().localCheckpoint()
     val edges0 = Tables.read(spark, s"$dir/edges")
     val oriented0 = Tables.read(spark, s"$dir/oriented")
@@ -324,18 +318,16 @@ object Graph {
       .unionAll(dropped.select(col("d").as("v"))).distinct()
       .join(broadcast(vic), Seq("v"), "left_anti").localCheckpoint()
     // survivor edge set lands by swap (E-bounded map-side anti scan)
-    edges0
-      .join(broadcast(vic.select(col("v").as("s"))), Seq("s"), "left_anti")
-      .join(broadcast(vic.select(col("v").as("d"))), Seq("d"), "left_anti")
-      .write.mode("overwrite").parquet(s"$dir/edges.next")
-    graft.io.DirSwap.swapInto(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/edges.next"),
-      new org.apache.hadoop.fs.Path(s"$dir/edges"))
+    DirSwap.replace(spark, s"$dir/edges") { next =>
+      edges0
+        .join(broadcast(vic.select(col("v").as("s"))), Seq("s"), "left_anti")
+        .join(broadcast(vic.select(col("v").as("d"))), Seq("d"), "left_anti")
+        .write.mode("overwrite").parquet(next)
+    }
     val edgesNew = Tables.read(spark, s"$dir/edges")
-    degrees(edgesNew).write.mode("overwrite").parquet(s"$dir/degrees.next")
-    graft.io.DirSwap.swapInto(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/degrees.next"),
-      new org.apache.hadoop.fs.Path(s"$dir/degrees"))
+    DirSwap.replace(spark, s"$dir/degrees") { next =>
+      degrees(edgesNew).write.mode("overwrite").parquet(next)
+    }
     val degNew = Tables.read(spark, s"$dir/degrees")
     // survivor edges needing re-orientation: those touching a
     // degree-changed endpoint (two-hop-bounded, never the graph)
@@ -353,11 +345,10 @@ object Graph {
     val ends = reorient.select(col("s").as("v"))
       .unionAll(reorient.select(col("d").as("v"))).distinct()
     val degSlice = degNew.join(broadcast(ends), Seq("v"), "left_semi")
-    kept.unionByName(orientWith(reorient, degSlice))
-      .write.mode("overwrite").parquet(s"$dir/oriented.next")
-    graft.io.DirSwap.swapInto(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/oriented.next"),
-      new org.apache.hadoop.fs.Path(s"$dir/oriented"))
+    DirSwap.replace(spark, s"$dir/oriented") { next =>
+      kept.unionByName(orientWith(reorient, degSlice))
+        .write.mode("overwrite").parquet(next)
+    }
   }
 
   /** [[triangleStats]] over PRE-MATERIALIZED oriented edges and degrees —

@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.StandingIndex
+import graft.io.{DataFiles, DirSwap, StandingIndex}
 
 /** The persisted INVERTED INDEX behind the engine's lexical retrieval —
   * what a search stack actually serves from: per-(doc, token) term
@@ -84,7 +84,7 @@ object Retrieval {
       StandingIndex.dropRetracted(Tables.read(spark, s"$dir/tf"), tombs, "doc_id")
         .write.parquet(s"$tmp/tf")
       deriveFromTf(spark, tmp)
-      if (StandingIndex.exists(spark, s"$dir/pos"))
+      if (DataFiles.exists(spark, s"$dir/pos"))
         StandingIndex.dropRetracted(Tables.read(spark, s"$dir/pos"), tombs, "doc_id")
           .write.parquet(s"$tmp/pos")
     }
@@ -99,7 +99,7 @@ object Retrieval {
     * stats re-aggregates the dlen table (|docs| index rows, not corpus
     * text), which makes the refreshed stats EXACTLY equal a full
     * rebuild's. df/stats land by checked tmp-dir swap
-    * ([[graft.io.DirSwap]]). At 100 TB/day ingest the refresh cost is
+    * ([[DirSwap.replace]]). At 100 TB/day ingest the refresh cost is
     * the day's documents plus two index-table aggregates.
     *
     * `newDocs` must be genuinely new doc_ids (the same admission
@@ -116,21 +116,17 @@ object Retrieval {
       delta.write.mode("append").parquet(s"$dir/tf")
       delta.groupBy("doc_id").agg(sum("tf").as("len"))
         .write.mode("append").parquet(s"$dir/dlen")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-      val mergedDf = Tables.read(spark, s"$dir/df")
-        .unionByName(delta.groupBy("tok").agg(count(lit(1)).as("df")))
-        .groupBy("tok").agg(sum("df").as("df"))
-      mergedDf.write.mode("overwrite").parquet(s"$dir/df.next")
-      graft.io.DirSwap.swapInto(fs,
-        new org.apache.hadoop.fs.Path(s"$dir/df.next"),
-        new org.apache.hadoop.fs.Path(s"$dir/df"))
-      Tables.read(spark, s"$dir/dlen")
-        .agg(count(lit(1)).as("n_docs"), avg("len").as("avg_len"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats.next")
-      graft.io.DirSwap.swapInto(fs,
-        new org.apache.hadoop.fs.Path(s"$dir/stats.next"),
-        new org.apache.hadoop.fs.Path(s"$dir/stats"))
+      DirSwap.replace(spark, s"$dir/df") { next =>
+        Tables.read(spark, s"$dir/df")
+          .unionByName(delta.groupBy("tok").agg(count(lit(1)).as("df")))
+          .groupBy("tok").agg(sum("df").as("df"))
+          .write.mode("overwrite").parquet(next)
+      }
+      DirSwap.replace(spark, s"$dir/stats") { next =>
+        Tables.read(spark, s"$dir/dlen")
+          .agg(count(lit(1)).as("n_docs"), avg("len").as("avg_len"))
+          .coalesce(1).write.mode("overwrite").parquet(next)
+      }
     } finally delta.unpersist()
   }
 
@@ -193,7 +189,7 @@ object Retrieval {
     * BM25 served from the dir afterwards would fail on missing parquet.
     */
   def compactPositionalIndex(spark: SparkSession, dir: String): Unit =
-    if (StandingIndex.exists(spark, s"$dir/tf")) compactIndex(spark, dir)
+    if (DataFiles.exists(spark, s"$dir/tf")) compactIndex(spark, dir)
     else StandingIndex.compact(spark, dir) { tmp =>
       StandingIndex.dropRetracted(Tables.read(spark, s"$dir/pos"),
           StandingIndex.tombstones(spark, dir, "doc_id"), "doc_id")

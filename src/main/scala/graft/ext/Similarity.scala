@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.StandingIndex
+import graft.io.{DataFiles, StandingIndex}
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -850,7 +850,7 @@ object Similarity {
       // an empty-corpus index has a centroid table but no cells
       // directory (writeIvfIndex's empty-model degrade) — compaction
       // then only clears tombstones
-      if (StandingIndex.exists(spark, s"$indexDir/cells"))
+      if (DataFiles.exists(spark, s"$indexDir/cells"))
         liveCells(spark, indexDir).write.partitionBy("cell").parquet(s"$tmp/cells")
     }
 

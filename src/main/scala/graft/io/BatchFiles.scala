@@ -1,8 +1,6 @@
 package graft.io
 
-import java.net.URI
-
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 /** Replay-idempotent micro-batch file landing — the write discipline
@@ -26,8 +24,7 @@ object BatchFiles {
     * batch left behind.
     */
   def land(df: DataFrame, destDir: String, batchId: Long): Unit = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val fs = FileSystem.get(new URI(destDir), conf)
+    val fs = DataFiles.fs(df.sparkSession, destDir)
     fs.mkdirs(new Path(destDir))
     fs.globStatus(new Path(f"$destDir/batch$batchId%06d_*.parquet"))
       .foreach(st => fs.delete(st.getPath, false))

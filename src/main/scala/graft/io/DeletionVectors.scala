@@ -59,9 +59,7 @@ object DeletionVectors {
     */
   def read(spark: SparkSession, tableDir: String, dvDir: String): DataFrame = {
     val base = Tables.read(spark, tableDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dvDir), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dvDir))) return base
+    if (!DataFiles.exists(spark, dvDir)) return base
     val live = base
       .withColumn("__dv_file", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))

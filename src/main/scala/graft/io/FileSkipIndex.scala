@@ -59,10 +59,7 @@ object FileSkipIndex {
     def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val stored = index.select("file").collect().map(_.getString(0))
     val indexed = stored.map(norm).toSet
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dataDir), spark.sparkContext.hadoopConfiguration)
-    val all = fs.listStatus(new org.apache.hadoop.fs.Path(dataDir))
-      .map(_.getPath.toString).filter(_.endsWith(".parquet"))
+    val all = DataFiles.list(spark, dataDir).map(_.getPath.toString)
     val live = all.map(norm).toSet
     val fresh = all.filterNot(p => indexed.contains(norm(p)))
     val keepStored = stored.filter(s => live.contains(norm(s)))

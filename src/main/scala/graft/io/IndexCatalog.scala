@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * index, LSH bands, IVF cells, graph adjacency, Z-order/skip fixtures):
   * every index is cached per `(kind, corpus dir, corpus CONTENT
   * version)`, where the content version is a fingerprint of the corpus
-  * listing (path, length, mtime of every visible file). A corpus rewrite
-  * — [[Compactor]], a replayed ingest, a new arrival batch — changes the
+  * listing (root-relative path, length, mtime of every data file). A
+  * corpus rewrite — [[Compactor]], a replayed ingest, a new arrival
+  * batch — changes the
   * fingerprint, so every dependent index transparently rebuilds on next
   * use, while a byte-identical corpus keeps serving the built index.
   * This replaces the previous per-module `ConcurrentHashMap[dir → index]`
@@ -25,29 +26,13 @@ object IndexCatalog {
 
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Fingerprint of the corpus listing. Hidden files/dirs (`_`/`.`
-    * prefixed: Spark success markers, in-flight swap staging) are
-    * excluded — they are invisible to reads, so they must not perturb
-    * the version either.
+  /** Fingerprint of the corpus listing ([[DataFiles.version]]). Files
+    * that Spark's listing skips below the corpus root (`_`/`.` prefixed:
+    * success markers, in-flight swap staging) are invisible to reads, so
+    * they do not perturb the version either.
     */
-  def contentVersion(spark: SparkSession, corpusDir: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(corpusDir), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(corpusDir)
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(root)) {
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val rel = st.getPath.toUri.getPath
-        val hidden = rel.split('/').exists(seg => seg.startsWith("_") || seg.startsWith("."))
-        if (!hidden) lines += s"$rel|${st.getLen}|${st.getModificationTime}"
-      }
-    }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    lines.sorted.foreach(l => md.update(l.getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
+  def contentVersion(spark: SparkSession, corpusDir: String): String =
+    DataFiles.version(spark, corpusDir)
 
   /** Serve the index of `kind` over `corpusDir`, building it (into a
     * fresh temp dir handed to `build`) only if this corpus CONTENT has

@@ -1,7 +1,7 @@
 package graft.io
 
 import graft.Tables
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
@@ -42,12 +42,6 @@ import org.apache.spark.sql.functions.broadcast
   */
 object StandingIndex {
 
-  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
-    FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-
-  private[graft] def exists(spark: SparkSession, path: String): Boolean =
-    fileSystem(spark, path).exists(new Path(path))
-
   /** Retract: the distinct ids of `ids` (one column, named as the
     * index's tombstone key) append to `dir/deleted`.
     */
@@ -58,7 +52,7 @@ object StandingIndex {
     * `exists` call and no listing when there is none.
     */
   def tombstones(spark: SparkSession, dir: String, key: String): Option[DataFrame] =
-    if (exists(spark, s"$dir/deleted"))
+    if (DataFiles.exists(spark, s"$dir/deleted"))
       Some(Tables.read(spark, s"$dir/deleted").select(key).distinct())
     else None
 
@@ -80,7 +74,7 @@ object StandingIndex {
     */
   def compact(spark: SparkSession, dir: String)(rewrite: String => Unit): Unit = {
     val tmp = dir.stripSuffix("/") + ".compact"
-    fileSystem(spark, dir).delete(new Path(tmp), true)
+    DataFiles.fs(spark, dir).delete(new Path(tmp), true)
     val tombSnap = tombstoneVersion(spark, dir)
     val contentSnap = IndexCatalog.contentVersion(spark, dir)
     rewrite(tmp)
@@ -92,26 +86,13 @@ object StandingIndex {
     guardedSwapInto(spark, tmp, dir, tombSnap)
   }
 
-  /** PATH-INDEPENDENT listing fingerprint of the tombstone table: (file
-    * name, length, mtime) of the files directly under `deleted/`, NOT
-    * their absolute paths — the post-swap re-check compares the RETIRED
+  /** Listing fingerprint of the tombstone table ([[DataFiles.version]]).
+    * It is path-independent: the post-swap re-check compares the RETIRED
     * layout's tombstones (renamed to `dir.swap-old/deleted`) against a
     * snapshot taken at `dir/deleted`.
     */
   private[graft] def tombstoneVersion(spark: SparkSession, dir: String): String =
-    tombstoneFingerprint(fileSystem(spark, dir), new Path(s"$dir/deleted"))
-
-  private def tombstoneFingerprint(fs: FileSystem, deleted: Path): String = {
-    if (!fs.exists(deleted)) return "absent"
-    val lines = fs.listStatus(deleted)
-      .filterNot(st => st.getPath.getName.startsWith("_") ||
-        st.getPath.getName.startsWith("."))
-      .map(st => s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
-      .sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    lines.foreach(l => md.update(l.getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
+    DataFiles.version(spark, s"$dir/deleted")
 
   /** Fail if a retraction landed since `snapshot` was taken. Early
     * detection only: the authoritative check is [[guardedSwapInto]]'s
@@ -131,9 +112,8 @@ object StandingIndex {
     */
   private[graft] def guardedSwapInto(
       spark: SparkSession, tmp: String, dir: String, snapshot: String): Unit = {
-    val fs = fileSystem(spark, dir)
-    DirSwap.swapInto(fs, new Path(tmp), new Path(dir), checkRetired = old =>
-      if (tombstoneFingerprint(fs, new Path(old, "deleted")) != snapshot)
+    DirSwap.swapInto(DataFiles.fs(spark, dir), new Path(tmp), new Path(dir), checkRetired = old =>
+      if (tombstoneVersion(spark, old.toString) != snapshot)
         throw new java.io.IOException(
           s"compaction aborted: a retraction landed under $dir/deleted during the " +
             "compaction (detected in the retired layout); the swap was rolled " +

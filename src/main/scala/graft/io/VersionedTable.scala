@@ -42,15 +42,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object VersionedTable {
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-
   private def manifestPath(tableDir: String, v: Int): Path =
     new Path(s"$tableDir/_log/v${"%05d".format(v)}.manifest")
 
   /** Highest published version, 0 if the table has no commits yet. */
   def latestVersion(spark: SparkSession, tableDir: String): Int = {
-    val f = fs(spark, tableDir)
+    val f = DataFiles.fs(spark, tableDir)
     val log = new Path(s"$tableDir/_log")
     if (!f.exists(log)) return 0
     f.listStatus(log).map(_.getPath.getName)
@@ -60,7 +57,7 @@ object VersionedTable {
   }
 
   private def liveDirs(spark: SparkSession, tableDir: String, v: Int): Seq[String] = {
-    val f = fs(spark, tableDir)
+    val f = DataFiles.fs(spark, tableDir)
     val p = manifestPath(tableDir, v)
     require(f.exists(p), s"version $v does not exist under $tableDir")
     val in = f.open(p)
@@ -106,7 +103,7 @@ object VersionedTable {
     */
   def commitAudited(spark: SparkSession, tableDir: String, df: DataFrame,
       overwrite: Boolean = false)(audit: DataFrame => Boolean): Option[Int] = {
-    val f = fs(spark, tableDir)
+    val f = DataFiles.fs(spark, tableDir)
     val prev = latestVersion(spark, tableDir)
     val next = prev + 1
     val dataDir =
@@ -122,7 +119,7 @@ object VersionedTable {
 
   private def commitTagged(spark: SparkSession, tableDir: String, df: DataFrame,
       overwrite: Boolean, tag: String): Int = {
-    val f = fs(spark, tableDir)
+    val f = DataFiles.fs(spark, tableDir)
     val prev = latestVersion(spark, tableDir)
     val next = prev + 1
     val dataDir = s"$tableDir/data/c${"%05d".format(next)}-$tag"
@@ -177,7 +174,7 @@ object VersionedTable {
 
   def compactCommits(spark: SparkSession, tableDir: String, numFiles: Int,
       maxDirs: Int, sortCols: org.apache.spark.sql.Column*): Int = {
-    val f = fs(spark, tableDir)
+    val f = DataFiles.fs(spark, tableDir)
     val prev = latestVersion(spark, tableDir)
     require(prev > 0, s"no committed version under $tableDir")
     val live = liveDirs(spark, tableDir, prev)
@@ -241,7 +238,7 @@ object VersionedTable {
     * scanning its files.
     */
   def vacuum(spark: SparkSession, tableDir: String, keepFrom: Int): (Int, Int) = {
-    val f = fs(spark, tableDir)
+    val f = DataFiles.fs(spark, tableDir)
     val latest = latestVersion(spark, tableDir)
     require(keepFrom <= latest, s"keepFrom=$keepFrom > latest=$latest")
     val retained = (keepFrom to latest)

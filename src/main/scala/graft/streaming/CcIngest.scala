@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import graft.io.{DataFiles, DirSwap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -14,7 +15,7 @@ import graft.ext.Dedup
   * representative graph — ≤ 2·|batch| nodes regardless of corpus size;
   * the standing table relabels through one broadcast join and the
   * historical edge list is never revisited), and the updated table
-  * lands by checked tmp-dir swap ([[graft.io.DirSwap]]) so a reader
+  * lands by checked tmp-dir swap ([[DirSwap.replace]]) so a reader
   * sees the old labels or the new ones, never a mix.
   *
   * Replay safety comes from the OPERATOR's own algebra, not from batch
@@ -41,17 +42,15 @@ object CcIngest {
     */
   def ingestBatch(pairs: DataFrame, labelDir: String): Unit = {
     val spark = pairs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(labelDir), spark.sparkContext.hadoopConfiguration)
-    val labelsPath = new org.apache.hadoop.fs.Path(s"$labelDir/labels")
-    val updated =
-      if (fs.exists(labelsPath))
-        Dedup.incrementalComponents(Tables.read(spark, labelsPath.toString), pairs)
-      else
-        Dedup.connectedComponents(pairs)
-    updated.write.mode("overwrite").parquet(s"$labelDir/labels.next")
-    graft.io.DirSwap.swapInto(fs,
-      new org.apache.hadoop.fs.Path(s"$labelDir/labels.next"), labelsPath)
+    val labels = s"$labelDir/labels"
+    DirSwap.replace(spark, labels) { next =>
+      val updated =
+        if (DataFiles.exists(spark, labels))
+          Dedup.incrementalComponents(Tables.read(spark, labels), pairs)
+        else
+          Dedup.connectedComponents(pairs)
+      updated.write.mode("overwrite").parquet(next)
+    }
   }
 
   /** Start the label-maintaining ingest on a stream of (doc_a, doc_b)

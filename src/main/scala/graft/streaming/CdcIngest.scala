@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.hadoop.fs.Path
+import graft.io.{DataFiles, DirSwap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -26,7 +26,7 @@ import graft.ops.ChangeCapture
   *  - replaying a batch is a no-op (idempotent by the seq guard), so
   *    foreachBatch retries after a crash converge.
   *
-  * State lands by write-tmp-then-rename ([[graft.io.DirSwap]]): readers
+  * State lands by write-tmp-then-rename ([[DirSwap.replace]]): readers
   * see the old or the new state, never a partial write. Maintenance
   * cost per batch is |batch| + |state| keys through one shuffle — the
   * log history is never rescanned; at 100 TB the state would be
@@ -41,20 +41,16 @@ object CdcIngest {
       batch: DataFrame, stateDir: String,
       keyCols: Seq[String], seqCol: String): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statePath = new Path(stateDir)
-    graft.io.DirSwap.recoverInterrupted(fs, statePath, ".old")
-    val compacted = ChangeCapture.compactLog(batch, keyCols, seqCol)
-    val merged =
-      if (fs.exists(statePath))
-        ChangeCapture.seqMerge(Tables.read(spark, stateDir), compacted, keyCols, seqCol)
-      else compacted
-    val tmp = stateDir.stripSuffix("/") + ".tmp"
-    fs.delete(new Path(tmp), true)
     // the merge reads the same directory the swap replaces: materialize
-    // to tmp BEFORE the swap so no reader-under-writer race exists
-    merged.write.mode("overwrite").parquet(tmp)
-    graft.io.DirSwap.swapInto(fs, new Path(tmp), statePath, ".old")
+    // to `next` BEFORE the swap so no reader-under-writer race exists
+    DirSwap.replace(spark, stateDir) { next =>
+      val compacted = ChangeCapture.compactLog(batch, keyCols, seqCol)
+      val merged =
+        if (DataFiles.exists(spark, stateDir))
+          ChangeCapture.seqMerge(Tables.read(spark, stateDir), compacted, keyCols, seqCol)
+        else compacted
+      merged.write.mode("overwrite").parquet(next)
+    }
   }
 
   /** Start folding a CDC stream into `stateDir`. */

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.io.FileSkipIndex
+import graft.io.{DataFiles, DirSwap, FileSkipIndex}
 
 /** Streaming ingest that MAINTAINS the table's skip index as data lands:
   * each micro-batch appends its rows as deterministically-named parquet
@@ -33,23 +33,18 @@ object IndexedIngest {
       batch: DataFrame, batchId: Long, tableDir: String, indexDir: String,
       keys: Seq[String], measures: Seq[String]): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableDir), conf)
     // replay-safe deterministic batch files, staged on the table's own
     // FileSystem (graft.io.BatchFiles — the landing contract shared
     // with RetrievalIngest)
     graft.io.BatchFiles.land(batch, tableDir, batchId)
     // refresh the standing index over the new file set and swap it in
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    graft.io.DirSwap.recoverInterrupted(fs, idxPath, ".old")
-    val existing =
-      if (fs.exists(idxPath)) Tables.read(spark, indexDir)
-      else FileSkipIndex.build(Tables.read(spark, tableDir), keys, measures).limit(0)
-    val refreshed = FileSkipIndex.refresh(spark, tableDir, existing, keys, measures)
-    val idxTmp = indexDir.stripSuffix("/") + ".tmp"
-    fs.delete(new org.apache.hadoop.fs.Path(idxTmp), true)
-    refreshed.coalesce(1).write.mode("overwrite").parquet(idxTmp)
-    graft.io.DirSwap.swapInto(fs, new org.apache.hadoop.fs.Path(idxTmp), idxPath, ".old")
+    DirSwap.replace(spark, indexDir) { next =>
+      val existing =
+        if (DataFiles.exists(spark, indexDir)) Tables.read(spark, indexDir)
+        else FileSkipIndex.build(Tables.read(spark, tableDir), keys, measures).limit(0)
+      FileSkipIndex.refresh(spark, tableDir, existing, keys, measures)
+        .coalesce(1).write.mode("overwrite").parquet(next)
+    }
   }
 
   /** Start the maintained-index ingest on a stream. */

@@ -299,4 +299,29 @@ class RetrievalSpec extends AnyFunSuite {
     assert(before.subsetOf(tfFiles), "refresh must APPEND to tf, never rewrite it")
     assert(tfFiles.size > before.size, "the delta must land as new files")
   }
+
+  test("refresh heals a df swap interrupted between its renames and serves the rebuild's BM25 top-k") {
+    val docs = Tables.documents(spark, sf)
+    val isDelta = pmod(col("doc_id"), lit(4)) === 1
+    val dir = java.nio.file.Files.createTempDirectory("retr-crash").toString
+    Retrieval.writeInvertedIndex(docs.filter(!isDelta), dir)
+    // the crash window of a swap: df renamed to its retired name, the new
+    // copy not yet in place
+    assert(new java.io.File(s"$dir/df").renameTo(new java.io.File(s"$dir/df.swap-old")))
+    Retrieval.refreshInvertedIndex(docs.filter(isDelta), dir)
+    assert(!new java.io.File(s"$dir/df.swap-old").exists())
+
+    val rebuilt = java.nio.file.Files.createTempDirectory("retr-crash-rebuild").toString
+    Retrieval.writeInvertedIndex(docs, rebuilt)
+    val qtoks = docs.filter(col("doc_id") < 3)
+      .select(col("doc_id").as("query_id"),
+        explode(slice(TextAnalysis.tokens(col("text")), 1, 6)).as("tok"))
+      .distinct()
+    val rank = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+      .orderBy(col("score").desc, col("doc_id"))
+    def topK(d: String) = Retrieval.bm25Scores(spark, d, qtoks)
+      .withColumn("rk", row_number().over(rank)).filter(col("rk") <= 5)
+      .orderBy("query_id", "rk").collect().map(_.toSeq).toSeq
+    assert(topK(dir) == topK(rebuilt) && topK(dir).nonEmpty)
+  }
 }

@@ -111,7 +111,7 @@ class CompactorSpec extends AnyFunSuite {
       new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(
       new org.apache.hadoop.fs.Path(s"$tmp/t"),
-      new org.apache.hadoop.fs.Path(s"$tmp/t.compact-old")))
+      new org.apache.hadoop.fs.Path(s"$tmp/t.swap-old")))
     val stats = Compactor.compact(spark, s"$tmp/t", numFiles = 2, col("l_orderkey"))
     assert(stats.rows == expect, "recovery must restore the full table before compacting")
     assert(spark.read.parquet(s"$tmp/t").count() == expect)

@@ -28,7 +28,7 @@ class DirSwapSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("dirswap").toString
     val dest = mkDir(root, "t", "v1")
     val tmp = mkDir(root, "t.tmp", "v2")
-    DirSwap.swapInto(fs, tmp, dest, ".swap-old")
+    DirSwap.swapInto(fs, tmp, dest)
     assert(has(dest, "v2") && !has(dest, "v1"))
     assert(!fs.exists(new Path(s"$root/t.swap-old")), "old copy must be cleaned up")
   }
@@ -38,7 +38,7 @@ class DirSwapSpec extends AnyFunSuite {
     val dest = mkDir(root, "t", "v1")
     mkDir(root, "t.swap-old", "v0") // crashed prior run, already superseded
     val tmp = mkDir(root, "t.tmp", "v2")
-    DirSwap.swapInto(fs, tmp, dest, ".swap-old")
+    DirSwap.swapInto(fs, tmp, dest)
     assert(has(dest, "v2"))
     assert(!fs.exists(new Path(s"$root/t.swap-old")))
   }
@@ -48,9 +48,9 @@ class DirSwapSpec extends AnyFunSuite {
     // simulate: dest was renamed away, then the process died
     mkDir(root, "t.swap-old", "v1")
     val dest = new Path(s"$root/t")
-    assert(DirSwap.recoverInterrupted(fs, dest, ".swap-old"))
+    assert(DirSwap.recoverInterrupted(fs, dest))
     assert(has(dest, "v1"), "recovery must restore the old content")
-    assert(!DirSwap.recoverInterrupted(fs, dest, ".swap-old"), "recovery is idempotent")
+    assert(!DirSwap.recoverInterrupted(fs, dest), "recovery is idempotent")
   }
 
   test("swapInto with the same interrupted state recovers dest before swapping") {
@@ -58,7 +58,7 @@ class DirSwapSpec extends AnyFunSuite {
     mkDir(root, "t.swap-old", "v1") // interrupted prior swap, no dest
     val tmp = mkDir(root, "t.tmp", "v2")
     val dest = new Path(s"$root/t")
-    DirSwap.swapInto(fs, tmp, dest, ".swap-old")
+    DirSwap.swapInto(fs, tmp, dest)
     assert(has(dest, "v2"))
   }
 

@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{Tables, TestSpark}
+import graft.ext.Retrieval
 
 /** The standing-index lifecycle contract: an index is rebuilt exactly
   * when its corpus CONTENT changes — a compaction (file rewrite)
@@ -77,5 +78,43 @@ class IndexCatalogSpec extends AnyFunSuite {
     // idempotent: a second pass finds nothing new for this kind/corpus
     val before = IndexCatalog.resolve(spark, "gc-spec", s"$tmp/t")(_ => fail("must be cached"))
     assert(before == p2)
+  }
+
+  test("under a hidden ancestor, an appended batch changes the version and resolve rebuilds") {
+    val t = java.nio.file.Files.createTempDirectory("idxcat-ancestor").toString + "/.hidden/t"
+    Tables.region(spark, sf).write.parquet(t)
+    var builds = 0
+    def serve(): String =
+      IndexCatalog.resolve(spark, "hidden-ancestor-spec", t) { _ => builds += 1 }
+    val v1 = IndexCatalog.contentVersion(spark, t)
+    val first = serve()
+    Tables.region(spark, sf).write.mode("append").parquet(t)
+    assert(IndexCatalog.contentVersion(spark, t) != v1)
+    assert(serve() != first && builds == 2, "the grown corpus must rebuild its index")
+  }
+
+  test("under a hidden ancestor, compaction aborts when a batch lands mid-compaction") {
+    val session = spark
+    import session.implicits._
+    val docs = (1L to 40L)
+      .map(i => (i, s"the slow fox $i jumps over the slow dog ${i % 7}"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("standing-race").toString + "/.hidden/idx"
+    Retrieval.writePositionalIndex(docs.filter(col("doc_id") <= 30), dir)
+    Retrieval.retractFromPositionalIndex(docs.filter(col("doc_id") === 3).select("doc_id"), dir)
+    val e = intercept[java.io.IOException] {
+      StandingIndex.compact(spark, dir) { tmp =>
+        StandingIndex.dropRetracted(spark.read.parquet(s"$dir/pos"),
+            StandingIndex.tombstones(spark, dir, "doc_id"), "doc_id")
+          .write.parquet(s"$tmp/pos")
+        // the race: an admission batch lands after the compactor's snapshot
+        BatchFiles.land(
+          Retrieval.positionRows(docs.filter(col("doc_id") > 30)), s"$dir/pos", 1L)
+      }
+    }
+    assert(e.getMessage.contains("concurrent refresh"))
+    assert(new java.io.File(s"$dir/deleted").exists())
+    assert(spark.read.parquet(s"$dir/pos").count() ==
+      Retrieval.positionRows(docs).count(), "the prior layout and the landed batch stay")
   }
 }

@@ -58,4 +58,19 @@ class CcIngestSpec extends AnyFunSuite {
       .filter(pmod(col("doc_a"), lit(3L)) =!= 0 && pmod(col("doc_b"), lit(3L)) =!= 0)
     assert(got == asMap(Dedup.connectedComponents(survivors)))
   }
+
+  test("a label swap interrupted between its renames is recovered before the next batch reads it") {
+    val dir = java.nio.file.Files.createTempDirectory("cc-ingest-crash").toString
+    val b0 = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    val b1 = Seq((3L, 10L), (11L, 40L)).toDF("doc_a", "doc_b")
+    CcIngest.ingestBatch(b0, dir)
+    // the crash window of a swap: labels renamed to its retired name, the
+    // new copy not yet in place
+    assert(new java.io.File(s"$dir/labels")
+      .renameTo(new java.io.File(s"$dir/labels.swap-old")))
+    CcIngest.ingestBatch(b1, dir)
+    assert(asMap(CcIngest.labels(spark, dir)) ==
+      asMap(Dedup.connectedComponents(b0.unionAll(b1))))
+    assert(!new java.io.File(s"$dir/labels.swap-old").exists())
+  }
 }
