@@ -10,10 +10,10 @@ import graft.fn.{CleanValues, LocaleNumber}
   * all-string frames (from OdsReader / CsvEncodingReader):
   *
   * per file: row-index → header locate+promote → metadata-row drop →
-  * all-null-row drop → trailing-zero cell trim → date-column-name
-  * normalize → unpivot months → service tag;
-  * consolidated: unionByName → distinct → locale-parse VALOR → month
-  * parse → canonical renames → sequential id → column order.
+  * all-null-row drop → date-column-name normalize → unpivot months →
+  * trailing-zero cell trim → service tag;
+  * consolidated: per-file canonical renames → unionByName → distinct →
+  * locale-parse valor → month parse → sequential id → column order.
   */
 object IdaPipeline {
 
@@ -27,22 +27,30 @@ object IdaPipeline {
     val table = Reshape.dropAllNullRows(
       Reshape.dropMetadataRows(
         Reshape.promoteCells(indexed, headerIdx, headerCells)))
-    val trimmed = trimDecimalCells(table.drop("_row_idx"))
-    val normalized = Reshape.normalizeDateColumnNames(trimmed)
-    Reshape.withServiceTag(Reshape.unpivotMonths(normalized), servico)
+    val normalized = Reshape.normalizeDateColumnNames(table.drop("_row_idx"))
+    val long = Reshape.unpivotMonths(normalized)
+    // the trim works cell by cell, so trimming the unpivoted cells equals
+    // unpivoting trimmed cells, at one trim chain per id column plus VALOR
+    // instead of one per wide column; REFERENCIA_MES holds month names,
+    // which were never trimmed, and a frame left wide is trimmed whole
+    val cells =
+      if (long.columns.sameElements(normalized.columns)) long.columns
+      else long.columns.filter(_ != "REFERENCIA_MES")
+    Reshape.withServiceTag(trimDecimalCells(long, cells), servico)
   }
 
-  /** Trailing-zero trim on every non-id column (main.py:431-479 applies
-    * it to all value cells; id columns are text anyway so the dotted-
-    * decimal guard makes it a no-op there).
+  /** Trailing-zero trim on the `cells` columns, the others kept as they
+    * are (main.py:431-479 applies it to all value cells; id columns are
+    * text anyway so the dotted-decimal guard makes it a no-op there).
     */
-  def trimDecimalCells(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c => CleanValues.trimTrailingZeros(col(c)).as(c)): _*)
+  private def trimDecimalCells(df: DataFrame, cells: Seq[String]): DataFrame =
+    df.select(df.columns.map(c =>
+      if (cells.contains(c)) CleanValues.trimTrailingZeros(Reshape.cell(c)).as(c) else Reshape.cell(c)): _*)
 
   /** Consolidate cleaned per-file frames into the canonical typed output
     * (main.py:644-704 + the load-stage coercions).
     *
-    * The `VALOR` chain parse → trim → parse → cast is staged: one
+    * The `valor` chain parse → trim → parse → cast is staged: one
     * projection per step, each reading the column the step before wrote.
     * Every step refers to its input several times, so the same chain
     * written as one nested Column expands to hundreds of regex nodes per
@@ -52,16 +60,20 @@ object IdaPipeline {
     * optimization and each step runs once per row.
     */
   def consolidate(frames: Seq[DataFrame]): DataFrame = {
-    val unioned = Consolidate.distinctRows(Consolidate.unionAll(frames))
+    // canonical names per frame, before the union: two spellings of one
+    // column ("GRUPO ECONÔMICO", "GRUPO_ECONOMICO") in two files then
+    // align by name instead of surviving the union as two columns that
+    // the rename would give one name
+    val unioned = Consolidate.distinctRows(
+      Consolidate.unionAll(frames.map(Consolidate.renameCanonical)))
     val parsed = unioned
-      .withColumn("VALOR", LocaleNumber.parse(col("VALOR")))
-      .withColumn("VALOR", CleanValues.trimTrailingZeros(col("VALOR")))
-      .withColumn("VALOR", LocaleNumber.parseToDouble(col("VALOR")))
-      .withColumn("REFERENCIA_MES",
-        to_date(concat(col("REFERENCIA_MES"), lit("-01")), "yyyy-MM-dd"))
-    val renamed = Consolidate.renameCanonical(parsed)
+      .withColumn("valor", LocaleNumber.parse(col("valor")))
+      .withColumn("valor", CleanValues.trimTrailingZeros(col("valor")))
+      .withColumn("valor", LocaleNumber.parseToDouble(col("valor")))
+      .withColumn("mes_referencia",
+        to_date(concat(col("mes_referencia"), lit("-01")), "yyyy-MM-dd"))
     val withId = Consolidate.withSequentialId(
-      renamed,
+      parsed,
       Seq(col("grupo_economico").asc, col("servico").asc,
         col("mes_referencia").asc, col("tipo_servico").asc))
     Consolidate.reorder(withId,

@@ -19,11 +19,15 @@ import org.apache.spark.sql.functions._
   * group = `event_type`; metric = `value`.
   *
   * Scale notes (100 TB): the first aggregation reduces the fact table to
-  * (days × types) rows — partial aggregation happens map-side, so the single
-  * shuffle carries only pre-aggregated groups. The window partitions by
-  * `event_type` (bounded cardinality) over an already-tiny aggregate, and the
-  * final HAVING/pivot works on that same reduced set. No step retains
-  * fact-table cardinality past the first HashAggregate.
+  * (days × types) rows — partial aggregation happens map-side, so the one
+  * shuffle carries only pre-aggregated groups (at most map tasks × days ×
+  * types rows, never fact rows). Everything after it — the final merge of
+  * that aggregate, the LAG window, the pivot aggregate, HAVING and the
+  * ORDER BY — runs as ONE task over the (days × types) rows: that count
+  * is bounded by the calendar and the group domain, not by the fact
+  * table, so one task stays as small at 100 TB as at 1 GB, while a
+  * shuffle per step would cost a stage (and, for the ORDER BY, a sample
+  * job) each for a few hundred rows.
   */
 object MetricsView {
 
@@ -112,12 +116,19 @@ object MetricsView {
     * (NULLIF guard), then per period the rounded average as `mean`, one
     * `taxa_<g>` pivot column per group, and HAVING COUNT(DISTINCT group)
     * >= 2. Unordered; each form sorts its own output.
+    *
+    * `rows` is always an aggregate's output, one row per (period, group),
+    * so the body runs in one partition (`coalesce(1)`, no exchange): one
+    * partition satisfies the window's and the pivot's clustering and the
+    * caller's global sort, and the whole body becomes one task instead of
+    * a shuffle per step. The caller must keep it that way: never hand this
+    * fact-cardinality rows.
     */
   private def view(
       rows: DataFrame, period: String, group: String, mean: String,
       groups: Seq[String]): DataFrame = {
     val w = Window.partitionBy(group).orderBy(period)
-    val taxa = rows
+    val taxa = rows.coalesce(1)
       .withColumn("valor_anterior", lag(col("valor_atual"), 1).over(w))
       .filter(col("valor_anterior").isNotNull && col("valor_anterior") =!= 0)
       .withColumn("taxa_var",

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Header-in-data handling and wide→long reshaping (SURVEY.md §2.2 P2-P5,
   * §2.8 F3, §2.9 R1/R3): the reference's messy-spreadsheet cleaning
@@ -11,21 +10,42 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Row order: spreadsheet semantics need file order, which Spark does not
   * guarantee after shuffles — so the first step stamps an explicit row index
-  * ([[withRowIndex]], partition-ordered zipWithIndex; file order for a
+  * ([[withRowIndex]], contiguous in partition order; file order for a
   * single-file narrow read) and everything downstream keys off that column,
   * never off physical order.
   */
 object Reshape {
 
-  /** Stable 0-based row index in current partition order (file order for a
-    * freshly-read single file). No single-partition collapse: zipWithIndex
-    * computes per-partition offsets with one lightweight count job.
+  /** Contiguous 0-based row index in current partition order (file order
+    * for a freshly-read single file), as a Catalyst projection over `df`'s
+    * own plan: later filters and projections plan with the read, and no
+    * rows round-trip through an RDD of `Row`s.
+    *
+    * On one partition `monotonically_increasing_id()` already is that
+    * index. On more, it is (partition id << 33) + position in the
+    * partition, so the position gets the partition's offset (the rows of
+    * the partitions before it) added back, from one count job over `df`'s
+    * partitions, the job `zipWithIndex` would run. No single-partition
+    * collapse. The expression is nondeterministic, so Catalyst pushes no
+    * filter below it: the index is taken before any row is dropped.
     */
   def withRowIndex(df: DataFrame, idxCol: String = "_row_idx"): DataFrame = {
-    val schema = StructType(df.schema.fields :+ StructField(idxCol, LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(rdd, schema)
+    val rows = df.queryExecution.toRdd
+    if (rows.getNumPartitions <= 1) df.withColumn(idxCol, monotonically_increasing_id())
+    else {
+      val counts = rows.mapPartitions(it => Iterator(it.size.toLong)).collect()
+      val offsets = counts.scanLeft(0L)(_ + _).init
+      df.withColumn(idxCol,
+        monotonically_increasing_id().bitwiseAND((1L << 33) - 1) +
+          element_at(typedLit(offsets), spark_partition_id() + 1))
+    }
   }
+
+  /** A column by its exact name: a promoted header is spreadsheet text,
+    * so a name such as "15.00" must not parse as a nested field.
+    */
+  private[ops] def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
+  private[ops] def cell(name: String): Column = col(quoted(name))
 
   /** The first row whose concatenated cells contain any marker
     * (case-insensitive) — the reference's header scan (main.py:202-218) —
@@ -38,12 +58,12 @@ object Reshape {
       markers: Seq[String] = Seq("GRUPO ECONÔMICO", "GRUPO_ECON"),
       idxCol: String = "_row_idx"): Option[(Long, Seq[Any])] = {
     val dataCols = df.columns.filter(_ != idxCol)
-    val concat = upper(concat_ws(" ", dataCols.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
+    val concat = upper(concat_ws(" ", dataCols.map(c => coalesce(cell(c).cast("string"), lit(""))): _*))
     val pred = markers.map(m => concat.contains(m.toUpperCase)).reduce(_ || _)
     df.filter(pred)
       .orderBy(col(idxCol))
       .limit(1)
-      .select(col(idxCol) +: dataCols.map(col): _*)
+      .select(col(idxCol) +: dataCols.map(cell): _*)
       .collect()
       .headOption
       .map(r => (r.getLong(0), r.toSeq.tail))
@@ -55,7 +75,7 @@ object Reshape {
     */
   def promoteHeader(df: DataFrame, headerIdx: Long, idxCol: String = "_row_idx"): DataFrame = {
     val dataCols = df.columns.filter(_ != idxCol)
-    val cells = df.filter(col(idxCol) === headerIdx).select(dataCols.map(col): _*).collect()(0).toSeq
+    val cells = df.filter(col(idxCol) === headerIdx).select(dataCols.map(cell): _*).collect()(0).toSeq
     promoteCells(df, headerIdx, cells, idxCol)
   }
 
@@ -71,7 +91,7 @@ object Reshape {
       if (named.indexOf(n) == i) n else s"${n}_$i"
     }
     df.filter(col(idxCol) > headerIdx)
-      .select(dataCols.map(col) :+ col(idxCol): _*)
+      .select(dataCols.map(cell) :+ col(idxCol): _*)
       .toDF(deduped :+ idxCol: _*)
   }
 
@@ -98,14 +118,14 @@ object Reshape {
       markers: Seq[String] = MetadataMarkers,
       idxCol: String = "_row_idx"): DataFrame = {
     val dataCols = df.columns.filter(_ != idxCol)
-    val row = upper(concat_ws("\u0000", dataCols.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
+    val row = upper(concat_ws("\u0000", dataCols.map(c => coalesce(cell(c).cast("string"), lit(""))): _*))
     df.filter(markers.map(m => !row.contains(m.toUpperCase)).reduce(_ && _))
   }
 
   /** dropna(how='all') on the data columns (main.py:254). */
   def dropAllNullRows(df: DataFrame, idxCol: String = "_row_idx"): DataFrame = {
     val dataCols = df.columns.filter(_ != idxCol)
-    df.na.drop("all", dataCols)
+    df.na.drop("all", dataCols.map(quoted))
   }
 
   /** Normalize month column NAMES: 'YYYY-MM-DD HH:MM:SS' → 'YYYY-MM';

@@ -241,9 +241,10 @@ class PlanSpec extends AnyFunSuite {
       s"q_pricing_summary grew to ${exchanges("q_pricing_summary")} exchanges")
     // broadcast dims: no fact-side hash exchange beyond the agg + sort
     assert(exchanges("q_join_broadcast_dims") <= 2)
-    // flagship: agg exchange + window partition + month re-group + sort
-    assert(exchanges("metrics_view") <= 4,
-      s"metrics_view grew to ${exchanges("metrics_view")} exchanges")
+    // flagship: the first aggregate's exchange only; the view body above
+    // it (window, month re-group, sort) runs in one partition
+    assert(exchanges("metrics_view") == 1,
+      s"metrics_view has ${exchanges("metrics_view")} exchanges, expected 1")
   }
 
   test("bucketed-to-bucketed join has zero shuffle below the join") {
@@ -314,12 +315,53 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("max_by"), s"expected max_by aggregate in:\n$p")
   }
 
-  test("the window in metrics_view partitions by event_type (no single-partition window)") {
+  /** The view body's single-partition region sits above the first
+    * aggregate's final HashAggregate: exactly one `coalesce(1)`, the
+    * plan's only shuffle below it, the first aggregate below it in Final
+    * mode over that shuffle, and the Window, the pivot's HashAggregate and
+    * the Sort above it with no exchange. So the one task sees aggregate
+    * rows only, never a fact-cardinality row.
+    */
+  private def assertOneTaskViewBody(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
     // executedPlan, not sparkPlan: exchanges appear only after
     // EnsureRequirements runs
-    val p = SparkEntry.queries("metrics_view")(spark, sf).queryExecution.executedPlan.toString
-    assert(p.contains("Window"))
-    assert(p.contains("hashpartitioning(event_type"))
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val coalesces = root.collect { case c: CoalesceExec => c }
+    assert(coalesces.size == 1 && coalesces.head.numPartitions == 1,
+      s"expected one coalesce(1) in:\n$root")
+    val region = coalesces.head
+    val below = region.collect { case n => n }.toSet
+    val above = root.collect { case n if !below.contains(n) => n }
+    val shuffles = root.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1 && below.contains(shuffles.head),
+      s"expected one shuffle, below the coalesce, in:\n$root")
+    def firstAgg(p: SparkPlan): Option[HashAggregateExec] = p match {
+      case a: HashAggregateExec => Some(a)
+      case _ => p.children.headOption.flatMap(firstAgg)
+    }
+    val agg = firstAgg(region.child).getOrElse(fail(s"no aggregate below the coalesce in:\n$root"))
+    assert(agg.aggregateExpressions.nonEmpty && agg.aggregateExpressions.forall(_.mode == Final),
+      s"the aggregate under the coalesce is not the final one:\n$agg")
+    assert(agg.collect { case e: ShuffleExchangeExec => e }.nonEmpty,
+      s"the first aggregate's shuffle is not under its final aggregate:\n$root")
+    assert(above.exists(_.isInstanceOf[WindowExec]), s"no Window above the coalesce in:\n$root")
+    assert(above.exists(_.isInstanceOf[HashAggregateExec]),
+      s"no pivot HashAggregate above the coalesce in:\n$root")
+    assert(above.exists { case s: SortExec => s.global; case _ => false },
+      s"no global Sort above the coalesce in:\n$root")
+  }
+
+  test("metrics_view's view body runs in one partition above the first aggregate") {
+    assertOneTaskViewBody(SparkEntry.queries("metrics_view")(spark, sf))
   }
 
   test("q_temporal_join resolves through the native partitioned as-of operator") {
@@ -402,14 +444,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_ida_e2e's view stage carries the flagship's Window + HashAggregate skeleton") {
     // the composed reference pipeline must END in the same physical shape
-    // as metrics_view: a partitioned Window (LAG) feeding partial+final
-    // HashAggregates — not some accidental sort-based or single-partition
-    // variant introduced by the spreadsheet-side plumbing
-    val p = SparkEntry.queries("q_ida_e2e")(spark, sf).queryExecution.executedPlan.toString
-    assert(p.contains("Window"))
-    assert(p.contains("hashpartitioning(grupo_economico"),
-      "LAG window must partition by grupo_economico")
-    assert(p.contains("HashAggregate"))
+    // as metrics_view: the one-partition region (LAG Window, pivot
+    // HashAggregate, Sort) over the monthly aggregate's final merge — not
+    // some variant where the spreadsheet-side plumbing lets unaggregated
+    // rows into that one task
+    assertOneTaskViewBody(SparkEntry.queries("q_ida_e2e")(spark, sf))
   }
 
   /** The three files of the IDA fixture release, read as q_ida_e2e_csv
@@ -463,8 +502,8 @@ class PlanSpec extends AnyFunSuite {
     assert(n >= 1 && n <= 12, s"$n RegExpReplace in one optimized consolidate plan:\n$worst")
   }
 
-  test("IDA cleanFile locates and promotes the header in one job (single-file ODS read)") {
-    val (servico, raw) = idaFixtureFiles.head
+  /** The number of Spark jobs `body` starts. */
+  private def jobsIn(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -473,10 +512,31 @@ class PlanSpec extends AnyFunSuite {
     org.apache.spark.sql.GraftShims.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
-      graft.ops.IdaPipeline.cleanFile(raw, servico)
+      body
       org.apache.spark.sql.GraftShims.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 1, s"${jobs.get} jobs to index, locate and promote the header")
+    jobs.get
+  }
+
+  test("IDA cleanFile locates and promotes the header in one job (single-file ODS read)") {
+    val (servico, raw) = idaFixtureFiles.head
+    val n = jobsIn(graft.ops.IdaPipeline.cleanFile(raw, servico))
+    assert(n == 1, s"$n jobs to index, locate and promote the header")
+  }
+
+  test("IDA view: collecting overIda over the consolidated release runs 2 jobs") {
+    // the monthly aggregate's shuffle map stage and the one-task result
+    // stage; a shuffle per view step took 6 (four shuffles and the
+    // ORDER BY's range-sample job)
+    val cleaned = idaFixtureFiles.map { case (servico, raw) =>
+      graft.ops.IdaPipeline.cleanFile(raw, servico).localCheckpoint()
+    }
+    val view = graft.ops.MetricsView.overIda(
+      graft.ops.IdaPipeline.consolidate(cleaned).localCheckpoint())
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val n = jobsIn { rows = view.collect() }
+    assert(rows.nonEmpty)
+    assert(n == 2, s"$n jobs to collect the view")
   }
 
   test("dedup_span_mask: equi joins only, per-doc windows, no cartesian") {

@@ -5,7 +5,8 @@ import java.sql.Date
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.io.OdsWriter
+import graft.fn.CleanValues
+import graft.io.{CsvEncodingReader, OdsWriter}
 
 /** Golden end-to-end test: the FIXTURES.md A1 messy-spreadsheet shape
   * pushed through the whole pipeline (ODS-shaped frame + a second file
@@ -88,5 +89,83 @@ class IdaPipelineSpec extends AnyFunSuite {
     val out = IdaPipeline.consolidate(Seq(IdaPipeline.cleanFile(fileA, "SMP")))
     val ids = out.collect().map(_.getLong(0)).toSeq
     assert(ids == (1L to ids.length))
+  }
+
+  test("consolidate aligns the two spellings of the group column across files") {
+    val frames = Seq(
+      ods(Seq(
+        Seq("GRUPO ECONÔMICO", "VARIAVEL", "2015-01"),
+        Seq("CLARO", "IDA", "87,50"))),
+      ods(Seq(
+        Seq("GRUPO_ECONOMICO", "VARIAVEL", "2015-01"),
+        Seq("VIVO", "IDA", "90.00")))).map(IdaPipeline.cleanFile(_, "SMP"))
+    val out = IdaPipeline.consolidate(frames)
+    assert(out.columns.toSeq ==
+      Seq("id", "grupo_economico", "servico", "mes_referencia", "valor", "tipo_servico"))
+    val rows = out.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(4))).toSeq
+    assert(rows == Seq((1L, "CLARO", 87.5), (2L, "VIVO", 90.0)))
+  }
+
+  /** cleanFile's steps in their earlier order, the reference for the
+    * trim-after-unpivot order: every cell of the promoted table trimmed,
+    * then the month columns renamed and unpivoted.
+    */
+  private def trimThenUnpivot(raw: DataFrame, servico: String): DataFrame = {
+    val indexed = Reshape.withRowIndex(raw)
+    val (headerIdx, headerCells) = Reshape.findHeaderRow(indexed).get
+    val table = Reshape.dropAllNullRows(Reshape.dropMetadataRows(
+      Reshape.promoteCells(indexed, headerIdx, headerCells))).drop("_row_idx")
+    val trimmed = table.select(table.columns.map(c => CleanValues.trimTrailingZeros(Reshape.cell(c)).as(c)): _*)
+    Reshape.withServiceTag(
+      Reshape.unpivotMonths(Reshape.normalizeDateColumnNames(trimmed)), servico)
+  }
+
+  private def assertSameAsTrimThenUnpivot(raw: DataFrame, what: String): Unit = {
+    val got = IdaPipeline.cleanFile(raw, "SMP")
+    val want = trimThenUnpivot(raw, "SMP")
+    assert(got.columns.toSeq == want.columns.toSeq, what)
+    def multiset(df: DataFrame) =
+      df.collect().map(_.toSeq.map(Option(_).map(_.toString))).groupBy(identity).view.mapValues(_.length).toMap
+    val w = multiset(want)
+    assert(w.nonEmpty, s"$what: empty reference")
+    assert(multiset(got) == w, what)
+  }
+
+  test("cleanFile trims after the unpivot with the rows of trim-then-unpivot: fixture files") {
+    val dir = graft.queries.RefPipelinePack.idaFixtureDir
+    Seq(
+      spark.read.format("ods").load(s"$dir/smp_2015.ods"),
+      spark.read.format("ods").load(s"$dir/stfc_2015.ods"),
+      CsvEncodingReader.read(spark, s"$dir/scm_2015.tsv")).zipWithIndex.foreach {
+      case (raw, i) => assertSameAsTrimThenUnpivot(raw, s"fixture file $i")
+    }
+  }
+
+  test("cleanFile trims after the unpivot with the rows of trim-then-unpivot: seeded grids") {
+    // dotted decimals in id, header and value cells; the "15.00" column
+    // is neither id nor month, so the unpivot drops it
+    val pool = Seq("15.00", "0.10", "-3.50", "7.0", "100", "87,50", "1.234,56", "2.000",
+      "ND", "-", "", null, "CLARO", "VIVO", "IDA")
+    Seq(7L, 11L, 2015L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def cell() = pool(rnd.nextInt(pool.size))
+      val header = Seq("GRUPO ECONÔMICO", "VARIAVEL", "2015-01-01 00:00:00", "2015-02", "15.00", "2015-03")
+      val rows = Seq(Seq("SERVIÇO: SMP", null, null, null, null, null), header) ++
+        Seq.fill(40)(Seq.fill(header.size)(cell()))
+      assertSameAsTrimThenUnpivot(ods(rows), s"seed $seed")
+    }
+  }
+
+  test("cleanFile trims after the unpivot with the rows of trim-then-unpivot: no-unpivot fallbacks") {
+    // no month column, and month columns but no id column: the frame
+    // stays wide and every cell is trimmed, as before
+    assertSameAsTrimThenUnpivot(ods(Seq(
+      Seq("GRUPO_ECONOMICO", "nota", "15.00"),
+      Seq("15.00", "0.10", "-3.50"),
+      Seq("CLARO", "7.0", null))), "no month columns")
+    assertSameAsTrimThenUnpivot(ods(Seq(
+      Seq("GRUPO_ECONOMIA", "2015-01", "REFERENCIA_MES"),
+      Seq("15.00", "0.10", "-3.50"),
+      Seq("CLARO", "7.0", "2015.10"))), "no id column")
   }
 }

@@ -66,10 +66,10 @@ class ReshapeSpec extends AnyFunSuite {
     df.filter(!hit)
   }
 
-  private def indexedRows(rows: Seq[Seq[String]], nCols: Int): DataFrame = {
+  private def indexedRows(rows: Seq[Seq[String]], nCols: Int, parts: Int = 2): DataFrame = {
     val schema = StructType((0 until nCols).map(i => StructField(s"_c$i", StringType)))
     Reshape.withRowIndex(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map(r => Row.fromSeq(r)), numSlices = 2), schema))
+      spark.sparkContext.parallelize(rows.map(r => Row.fromSeq(r)), numSlices = parts), schema))
   }
 
   private def keptIdx(df: DataFrame): Seq[Long] =
@@ -147,5 +147,20 @@ class ReshapeSpec extends AnyFunSuite {
     val out = Reshape.unpivotMonths(wide)
     assert(out.columns.toSeq == wide.columns.toSeq)
     assert(Reshape.withServiceTag(out, "SMP").columns.contains("SERVICO"))
+  }
+
+  test("withRowIndex is 0..n-1 in input order on one partition and on three") {
+    val rows = (0 until 25).map(i => Seq(i.toString))
+    Seq(1, 3).foreach { parts =>
+      val indexed = indexedRows(rows, 1, parts)
+      assert(indexed.rdd.getNumPartitions == parts)
+      val got = indexed.select(col("_row_idx"), col("_c0")).collect()
+        .map(r => (r.getLong(0), r.getString(1).toLong)).toSeq
+      assert(got.map(_._1) == (0L until 25L), s"$parts partitions")
+      assert(got.forall { case (i, v) => i == v }, s"$parts partitions: $got")
+    }
+    // an empty partition takes no index
+    val sparse = indexedRows(Seq(Seq("a"), Seq("b")), 1, 3)
+    assert(sparse.select("_row_idx").collect().map(_.getLong(0)).toSeq == Seq(0L, 1L))
   }
 }
