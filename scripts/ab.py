@@ -2,8 +2,7 @@
 """Interleaved A/B of the repo benchmark between two checkouts.
 
 Usage:
-  python3 scripts/ab.py PARENT_DIR CHANGE_DIR --workload W --seeds A-B
-                        [--seconds S] [--trace 0|1]
+  python3 scripts/ab.py PARENT_DIR CHANGE_DIR --workload W --seeds A-B [--trace 0|1]
 
 Each seed A..B is one pair: `perfbench/run.py --workload W --seed s` runs
 once in PARENT_DIR and once in CHANGE_DIR, each in its own checkout, and
@@ -27,12 +26,10 @@ import subprocess
 import sys
 
 
-def run(tree, workload, seed, seconds, trace):
+def run(tree, workload, seed, trace):
     """One run.py invocation; its result JSON, or None when it produced none."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--trace", str(trace)]
-    if seconds is not None:
-        cmd += ["--seconds", str(seconds)]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if p.returncode != 0 or not lines:
@@ -56,7 +53,6 @@ def main():
     p.add_argument("change")
     p.add_argument("--workload", required=True)
     p.add_argument("--seeds", required=True, help="A-B, inclusive")
-    p.add_argument("--seconds", type=float, default=None)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     a = p.parse_args()
     lo, _, hi = a.seeds.partition("-")
@@ -73,7 +69,7 @@ def main():
     for i, seed in enumerate(seeds):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for k, side in enumerate(order):
-            r = run(trees[side], a.workload, seed, a.seconds, a.trace)
+            r = run(trees[side], a.workload, seed, a.trace)
             results[side].append(r)
             if r is None:
                 continue

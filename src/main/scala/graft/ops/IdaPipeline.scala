@@ -31,21 +31,16 @@ object IdaPipeline {
     val long = Reshape.unpivotMonths(normalized)
     // the trim works cell by cell, so trimming the unpivoted cells equals
     // unpivoting trimmed cells, at one trim chain per id column plus VALOR
-    // instead of one per wide column; REFERENCIA_MES holds month names,
-    // which were never trimmed, and a frame left wide is trimmed whole
-    val cells =
-      if (long.columns.sameElements(normalized.columns)) long.columns
-      else long.columns.filter(_ != "REFERENCIA_MES")
-    Reshape.withServiceTag(trimDecimalCells(long, cells), servico)
+    // instead of one per wide column
+    Reshape.withServiceTag(trimDecimalCells(long), servico)
   }
 
-  /** Trailing-zero trim on the `cells` columns, the others kept as they
-    * are (main.py:431-479 applies it to all value cells; id columns are
-    * text anyway so the dotted-decimal guard makes it a no-op there).
+  /** Trailing-zero trim on every column (main.py:431-479 applies it to all
+    * value cells; id columns and REFERENCIA_MES's 'YYYY-MM' names are text
+    * anyway so the dotted-decimal guard makes it a no-op there).
     */
-  private def trimDecimalCells(df: DataFrame, cells: Seq[String]): DataFrame =
-    df.select(df.columns.map(c =>
-      if (cells.contains(c)) CleanValues.trimTrailingZeros(Reshape.cell(c)).as(c) else Reshape.cell(c)): _*)
+  def trimDecimalCells(df: DataFrame): DataFrame =
+    df.select(df.columns.map(c => CleanValues.trimTrailingZeros(Reshape.cell(c)).as(c)): _*)
 
   /** Consolidate cleaned per-file frames into the canonical typed output
     * (main.py:644-704 + the load-stage coercions).
