@@ -1,5 +1,6 @@
 package graft.io
 
+import java.nio.{ByteBuffer, CharBuffer}
 import java.nio.charset.{Charset, CodingErrorAction}
 import java.nio.file.{Files, Paths}
 
@@ -25,19 +26,23 @@ object CsvEncodingReader {
 
   /** First charset that strict-decodes the first `sampleBytes` of the
     * file. ISO-8859-1 maps every byte, so it only ever falls through on
-    * charsets before it in the chain.
+    * charsets before it in the chain. A sample shorter than the file is
+    * decoded as a prefix (`endOfInput = false`): it may end inside a
+    * multibyte character, and only an error, not a sequence cut short at
+    * the end, rejects the charset.
     */
   def detectEncoding(path: String, sampleBytes: Int = 1 << 20): String = {
     val f = Paths.get(path)
-    val size = math.min(Files.size(f), sampleBytes.toLong).toInt
+    val fileSize = Files.size(f)
+    val size = math.min(fileSize, sampleBytes.toLong).toInt
     val in = Files.newInputStream(f)
     val buf = try in.readNBytes(size) finally in.close()
     Encodings.find { enc =>
       val dec = Charset.forName(enc).newDecoder()
         .onMalformedInput(CodingErrorAction.REPORT)
         .onUnmappableCharacter(CodingErrorAction.REPORT)
-      try { dec.decode(java.nio.ByteBuffer.wrap(buf)); true }
-      catch { case _: java.nio.charset.CharacterCodingException => false }
+      val out = CharBuffer.allocate(math.ceil(size * dec.maxCharsPerByte.toDouble).toInt)
+      !dec.decode(ByteBuffer.wrap(buf), out, size == fileSize).isError
     }.getOrElse("ISO-8859-1")
   }
 

@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.LongType
 
 /** Consolidation stage (SURVEY.md §2.7 U1, §2.4 A5, §2.5 W2, §2.8 F7/F8):
   * union of heterogeneous per-file frames, whole-row dedup, canonical
@@ -22,36 +22,37 @@ object Consolidate {
   /** Whole-row distinct (main.py:647). */
   def distinctRows(df: DataFrame): DataFrame = df.dropDuplicates()
 
-  /** Contiguous 1..N id in a caller-chosen canonical order (main.py:696).
+  /** Contiguous 1..N id in a caller-chosen canonical order (main.py:696),
+    * selected first.
     *
     * Scale design (SURVEY.md §7.4 #2): `sort` range-partitions, then
-    * `zipWithIndex` assigns globally contiguous indices with per-partition
-    * offsets — no single-partition window. The reference's id order is its
+    * [[RowPositions]] numbers the sorted rows with per-partition offsets
+    * counted in the same execution that yields them, so the range bounds
+    * are sampled once and the ids follow the sort order exactly, over
+    * any input: the sort's shuffle lies below the numbering. No
+    * single-partition window. The reference's id order is its
     * nondeterministic concat order; our contract requires an explicit sort.
     * For small-data oracle parity, `row_number` over a global window is the
     * documented alternative (queries.WindowPack.q_seq_id).
     */
-  def withSequentialId(df: DataFrame, sortCols: Seq[Column], idCol: String = "id"): DataFrame = {
-    val sorted = df.sort(sortCols: _*)
-    val schema = StructType(StructField(idCol, LongType, nullable = false) +: sorted.schema.fields)
-    val rdd = sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq((i + 1L) +: r.toSeq) }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
+  def withSequentialId(df: DataFrame, sortCols: Seq[Column], idCol: String = "id"): DataFrame =
+    RowPositions.append(df.sort(sortCols: _*), idCol, base = 1L)
+      .select((idCol +: df.columns).map(Reshape.cell): _*)
 
   /** [[withSequentialId]] generalized to a MEASURE: appends the global
     * rank `idCol` (1..N in the sort order) and the inclusive running sum
     * `runCol` of `valueCol` — the distributed prefix sum. `sort`
-    * range-partitions; a first lightweight job collects per-partition
-    * (row count, partial sum) — |partitions| rows, driver-cheap at any
-    * scale — whose exclusive prefix becomes each partition's offsets;
-    * the second pass streams every partition once adding offsets. NO
+    * range-partitions and [[RowPositions]] carries each partition's
+    * partial sum beside its row count in its one stats job (|partitions|
+    * rows, driver-cheap at any scale; none on one partition), then adds
+    * the exclusive prefixes in one pass over the same sorted rows. NO
     * single-partition window anywhere: an unpartitioned
     * `sum(...).over(Window.orderBy(...))` funnels the whole input
     * through one task, which is exactly the hazard this replaces
     * (running totals over hundreds of millions of ranked rows at 100 TB).
     *
     * `valueCol` must be LongType (exact associative partial sums; use
-    * integer cents, not doubles, for money) and non-null.
+    * integer cents, not doubles, for money); a null adds 0.
     */
   def withRunningTotal(
       df: DataFrame, sortCols: Seq[Column], valueCol: String,
@@ -61,30 +62,7 @@ object Consolidate {
     require(sorted.schema(vIdx).dataType == LongType,
       s"withRunningTotal needs a LongType measure; '$valueCol' is " +
         sorted.schema(vIdx).dataType.sql)
-    val rdd = sorted.rdd
-    // pass 1: per-partition (rows, sum) — the same count job zipWithIndex
-    // runs, carrying the partial sum alongside
-    val stats = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var c = 0L; var s = 0L
-      it.foreach { r => c += 1L; s += r.getLong(vIdx) }
-      Iterator((pid, (c, s)))
-    }.collect().toMap
-    val nPart = rdd.getNumPartitions
-    val rowOff = new Array[Long](nPart)
-    val sumOff = new Array[Long](nPart)
-    var cr = 0L; var cs = 0L
-    (0 until nPart).foreach { p =>
-      rowOff(p) = cr; sumOff(p) = cs
-      val (c, s) = stats.getOrElse(p, (0L, 0L)); cr += c; cs += s
-    }
-    val schema = StructType(sorted.schema.fields :+
-      StructField(idCol, LongType, nullable = false) :+
-      StructField(runCol, LongType, nullable = false))
-    val out = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var rk = rowOff(pid); var run = sumOff(pid)
-      it.map { r => rk += 1L; run += r.getLong(vIdx); Row.fromSeq(r.toSeq :+ rk :+ run) }
-    }
-    df.sparkSession.createDataFrame(out, schema)
+    RowPositions.append(sorted, idCol, base = 1L, sumOf = Some((vIdx, runCol)))
   }
 
   /** Canonical output renames (main.py:672-692). */

@@ -16,30 +16,18 @@ import org.apache.spark.sql.functions._
   */
 object Reshape {
 
-  /** Contiguous 0-based row index in current partition order (file order
-    * for a freshly-read single file), as a Catalyst projection over `df`'s
-    * own plan: later filters and projections plan with the read, and no
-    * rows round-trip through an RDD of `Row`s.
-    *
-    * On one partition `monotonically_increasing_id()` already is that
-    * index. On more, it is (partition id << 33) + position in the
-    * partition, so the position gets the partition's offset (the rows of
-    * the partitions before it) added back, from one count job over `df`'s
-    * partitions, the job `zipWithIndex` would run. No single-partition
-    * collapse. The expression is nondeterministic, so Catalyst pushes no
-    * filter below it: the index is taken before any row is dropped.
+  /** Contiguous 0-based row index in partition order (file order for a
+    * freshly-read single file), from [[RowPositions]]: the counts and the
+    * rows come from one execution of `df`, so the index is exactly
+    * 0..n-1 over any shuffle below it. One count job on more than one
+    * partition, none on one. The index is taken before any later filter
+    * drops a row: the indexed frame is a scan of those rows, and no
+    * predicate moves below it. An input that is nondeterministic without
+    * a shuffle (a `rand()` over a scan) is recomputed for the rows, as
+    * under `zipWithIndex`.
     */
-  def withRowIndex(df: DataFrame, idxCol: String = "_row_idx"): DataFrame = {
-    val rows = df.queryExecution.toRdd
-    if (rows.getNumPartitions <= 1) df.withColumn(idxCol, monotonically_increasing_id())
-    else {
-      val counts = rows.mapPartitions(it => Iterator(it.size.toLong)).collect()
-      val offsets = counts.scanLeft(0L)(_ + _).init
-      df.withColumn(idxCol,
-        monotonically_increasing_id().bitwiseAND((1L << 33) - 1) +
-          element_at(typedLit(offsets), spark_partition_id() + 1))
-    }
-  }
+  def withRowIndex(df: DataFrame, idxCol: String = "_row_idx"): DataFrame =
+    RowPositions.append(df, idxCol, base = 0L)
 
   /** A column by its exact name: a promoted header is spreadsheet text,
     * so a name such as "15.00" must not parse as a nested field.

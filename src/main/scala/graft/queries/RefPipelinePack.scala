@@ -253,7 +253,7 @@ object RefPipelinePack extends QueryPack {
         // reference MATERIALIZES consolidation (a Postgres table) before
         // the view queries it, and overIda's dynamic-pivot collect plus
         // the main action would otherwise each re-run the whole
-        // clean+consolidate chain (including its sort + zipWithIndex)
+        // clean+consolidate chain (including its sort + sequential id)
         graft.ops.MetricsView.overIda(
           graft.ops.IdaPipeline.consolidate(cleanedOdsFiles(s, tmp)).localCheckpoint())
       },

@@ -12,7 +12,7 @@ import graft.{QueryDef, QueryPack, Tables}
   * WindowExec runs after a hash exchange, never single-partition — except
   * q_seq_id which is the documented small-data parity mode of the
   * reference's global sequential id (main.py:696); the scalable variant is
-  * graft.ops.Consolidate.withSequentialId (zipWithIndex), spec-tested.
+  * graft.ops.Consolidate.withSequentialId (per-partition offsets), spec-tested.
   */
 object WindowPack extends QueryPack {
 
@@ -277,12 +277,13 @@ object WindowPack extends QueryPack {
              |ORDER BY id""".stripMargin)),
 
     // W2 — global sequential id, SCALE mode: range-partitioned sort +
-    // zipWithIndex (per-partition offsets, one lightweight count job) —
+    // per-partition offsets (ops.RowPositions: one lightweight count job
+    // over the same sorted rows it numbers, none on one partition) —
     // no single-partition window anywhere. Same contract as q_seq_id
     // (contiguous 1..N in a canonical total order), now oracle-gated:
     // the two modes are interchangeable and both hash-exact.
     "q_seq_id_scale" -> QueryDef(
-      "Contiguous 1..N id via range-sort + zipWithIndex (scale mode, no global window)",
+      "Contiguous 1..N id via range-sort + per-partition offsets (scale mode, no global window)",
       (s, dir) =>
         graft.ops.Consolidate.withSequentialId(
           Tables.orders(s, dir)

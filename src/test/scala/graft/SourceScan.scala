@@ -8,9 +8,9 @@ import scala.util.matching.Regex
 /** Source-text scans for the structural guard specs. */
 object SourceScan {
 
-  /** The file name of every match of `pattern` under src/main. */
-  def occurrences(pattern: Regex): Seq[String] =
-    Files.walk(Paths.get("src/main")).iterator().asScala
+  /** The file name of every match of `pattern` under `root`. */
+  def occurrences(pattern: Regex, root: String = "src/main"): Seq[String] =
+    Files.walk(Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
       .flatMap { (p: Path) =>
         val n = pattern.findAllMatchIn(Files.readString(p)).size

@@ -77,6 +77,10 @@ class IoSpec extends AnyFunSuite {
     val f = Files.createTempFile("fixture", ".tsv")
     Files.write(f, "a\tb\n1\t2\n".getBytes("UTF-8"))
     assert(CsvEncodingReader.detectEncoding(f.toString) == "UTF-8")
+    // a sample that ends inside a multibyte character ("Ô" is 2 bytes)
+    Files.write(f, "GRUPO ECONÔMICO\tVALOR\n".getBytes("UTF-8"))
+    val cut = "GRUPO ECON".length + 1
+    assert(CsvEncodingReader.detectEncoding(f.toString, sampleBytes = cut) == "UTF-8")
   }
 
   private def tsvRow(width: Int): String = {

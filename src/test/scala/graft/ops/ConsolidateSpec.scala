@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -26,13 +28,27 @@ class ConsolidateSpec extends AnyFunSuite {
     assert(Consolidate.distinctRows(df).count() == 2)
   }
 
+  /** `df`'s rows dealt into 8 partitions by a nondeterministic key, in a
+    * session that keeps the sort after it at 4 shuffle partitions (no AQE
+    * coalescing): a second execution would deal and range-bound the rows
+    * differently.
+    */
+  private def shuffled(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val key = udf(() => scala.util.Random.nextInt(1000)).asNondeterministic()
+    s.createDataFrame(df.collect().toSeq.asJava, df.schema).repartition(8, key())
+  }
+
   test("withSequentialId: contiguous 1..N in canonical sort order, multi-partition safe") {
     val df = spark.sparkContext.parallelize((1 to 1000).reverse, numSlices = 8).toDF("v")
-    val withId = Consolidate.withSequentialId(df, Seq(col("v").asc))
-    val rows = withId.collect().map(r => (r.getLong(0), r.getInt(1)))
-    assert(rows.map(_._1).toSeq.sorted == (1L to 1000L))
-    // id order must follow the sort order: id k <-> value k
-    assert(rows.forall { case (id, v) => id == v.toLong })
+    Seq(df, shuffled(df)).foreach { input =>
+      val withId = Consolidate.withSequentialId(input, Seq(col("v").asc))
+      val rows = withId.collect().map(r => (r.getLong(0), r.getInt(1)))
+      assert(rows.map(_._1).toSeq.sorted == (1L to 1000L))
+      // id order must follow the sort order: id k <-> value k
+      assert(rows.forall { case (id, v) => id == v.toLong })
+    }
   }
 
   test("withRunningTotal: distributed prefix sum equals the single-task running sum") {
@@ -41,19 +57,21 @@ class ConsolidateSpec extends AnyFunSuite {
     val df = spark.sparkContext
       .parallelize((1 to 10000).map(i => (i.toLong, ((i * 37) % 500 + 1).toLong)), 16)
       .toDF("k", "cents")
-    val got = Consolidate
-      .withRunningTotal(df, Seq(col("cents").desc, col("k").asc), "cents")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._3)
     // reference: driver-side scan in the same order
     val ref = (1 to 10000).map(i => (i.toLong, ((i * 37) % 500 + 1).toLong))
       .sortBy { case (k, c) => (-c, k) }
-    var run = 0L
-    ref.zipWithIndex.foreach { case ((k, c), i) =>
-      run += c
-      val (gk, gc, grk, grun) = got(i)
-      assert(gk == k && gc == c && grk == i + 1L && grun == run,
-        s"mismatch at rank ${i + 1}: got ($gk,$gc,$grk,$grun), want ($k,$c,${i + 1},$run)")
+    Seq(df, shuffled(df)).foreach { input =>
+      val got = Consolidate
+        .withRunningTotal(input, Seq(col("cents").desc, col("k").asc), "cents")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(_._3)
+      var run = 0L
+      ref.zipWithIndex.foreach { case ((k, c), i) =>
+        run += c
+        val (gk, gc, grk, grun) = got(i)
+        assert(gk == k && gc == c && grk == i + 1L && grun == run,
+          s"mismatch at rank ${i + 1}: got ($gk,$gc,$grk,$grun), want ($k,$c,${i + 1},$run)")
+      }
     }
   }
 

@@ -162,5 +162,15 @@ class ReshapeSpec extends AnyFunSuite {
     // an empty partition takes no index
     val sparse = indexedRows(Seq(Seq("a"), Seq("b")), 1, 3)
     assert(sparse.select("_row_idx").collect().map(_.getLong(0)).toSeq == Seq(0L, 1L))
+    // hash-partitioned into 8 by a nondeterministic key: a second
+    // execution of the shuffle would deal the rows out differently, so
+    // counts and rows must come from one execution
+    val n = 2000
+    val key = udf(() => scala.util.Random.nextInt(1000)).asNondeterministic()
+    val dealt = spark.range(n).toDF("v").repartition(8, key())
+    val byIdx = Reshape.withRowIndex(dealt).select(col("_row_idx"), col("v")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    assert(byIdx.map(_._1).toSeq == (0L until n.toLong), "8 shuffled partitions")
+    assert(byIdx.map(_._2).sorted.toSeq == (0L until n.toLong))
   }
 }
